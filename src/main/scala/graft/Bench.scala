@@ -1,56 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet is TIMESTAMP(NANOS); set at build time so no query
-      // mutates session state mid-run (Tables.events also sets it
-      // defensively for sessions not built here)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      // Let AQE coalesce shuffles that feed cached plans (r21, guide
-      // §2.2): the session memos persist shuffle outputs, and with the
-      // upstream default (false) every cached frame pins its full
-      // spark.sql.shuffle.partitions fan-out — downstream stages launch
-      // |partitions| tasks to read kilobyte caches locally, and at
-      // cluster scale caches hold however many partitions the static
-      // config said rather than what the DATA needs. Coalescing is
-      // size-based (advisory partition bytes), so the knob is
-      // scale-adaptive, not a local[32] tune. Env-knobbed like AQE
-      // itself so the driver's lower-core re-run stays comparable.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_CACHE_AQE", "true"))
-      // AQE coalescing granularity for SMALL shuffles (r22, guide §2.2):
-      // the coalesce target is max(min(total/minPartitionNum, advisory),
-      // minPartitionSize) — for sub-MB shuffles the 1 MB default floor
-      // dominates, merging every cached frame to ONE partition and
-      // serializing its consumers (the r21 cache-AQE A/B's named losers:
-      // quality_classifier_eval, lang_confusion, dedup_jaccard). A
-      // smaller size floor re-parallelizes exactly the shuffles big
-      // enough to matter locally while changing nothing at scale, where
-      // target = advisory (64 MB) regardless. (minPartitionNum is NOT
-      // the lever: for kilobyte totals the size floor overrides it.)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_COALESCE_MINSIZE", "256k"))
-      // Let file SIZE alone decide scan splits (r22, guide §2.2/§6): the
-      // upstream default floors scan parallelism at defaultParallelism,
-      // so a kilobyte-scale table fans every scan stage into |cores|
-      // near-empty tasks — pure dispatch overhead that grows with core
-      // count (the r21 scaling block's 32-core penalty). Size-based
-      // splitting (maxPartitionBytes, default 128 MB) is scale-adaptive:
-      // a production-scale table splits into thousands of tasks either
-      // way; only bounded/small inputs stop over-fanning. Env-knobbed so
-      // the driver's lower-core re-run stays comparable.
-      .config("spark.sql.files.minPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_SCAN_PARTS", "1"))
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.cpus(4)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Untimed warmup: first-action JVM/codegen/parquet-footer overhead is
     // a per-process constant (~seconds) that would otherwise be billed to

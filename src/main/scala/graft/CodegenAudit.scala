@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * Generated-code size audit over the whole query registry — the check
  * the r12 streaming-codes investigation proved necessary: a
@@ -41,16 +39,10 @@ object CodegenAudit {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // AQE off: an un-executed AdaptiveSparkPlanExec exposes no codegen
-      // subtrees to codegenString — the audit needs the full static plan
-      .config("spark.sql.adaptive.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(8).getOrCreate()
+    // AQE off: an un-executed AdaptiveSparkPlanExec exposes no codegen
+    // subtrees to codegenString — the audit needs the full static plan
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.sparkContext.setLogLevel("WARN")
     // SPARK_GRAFT_CG_DETAIL=<query>: print that query's codegen header
     // lines (per-subtree sizes) for offender diagnosis

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * Concurrency harness for the query registry — the bench's missing
  * dimension: `graft.Bench` runs the registry SERIALLY, but a shared
@@ -23,14 +21,8 @@ import org.apache.spark.sql.SparkSession
 object ConcurrentBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val nThreads = sys.env.getOrElse("SPARK_GRAFT_CONC", "8").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+    val spark = GraftSession.builder(GraftSession.cpus(32))
       // FAIR: concurrent queries share executor slots round-robin
       // instead of FIFO head-of-line blocking behind the first heavy job
       .config("spark.scheduler.mode", "FAIR")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan audit: prints the formatted physical plan of every registered
   * query at the given sf dir. Used to verify scan pruning/pushdown, join
   * strategies, and whole-stage-codegen coverage while iterating on
@@ -17,13 +15,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val only = args.lift(1)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.cpus(4)).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_ == name) }

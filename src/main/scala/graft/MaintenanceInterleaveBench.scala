@@ -1,7 +1,6 @@
 package graft
 
 import graft.sources.TableLayout
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import java.nio.file.Files
@@ -39,16 +38,10 @@ import java.nio.file.Files
 object MaintenanceInterleaveBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val nThreads = sys.env.getOrElse("SPARK_GRAFT_CONC", "8").toInt
     val nReaders = sys.env.getOrElse("SPARK_GRAFT_READERS", "2").toInt
     val cycles = sys.env.getOrElse("SPARK_GRAFT_MAINT_CYCLES", "4").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+    val spark = GraftSession.builder(GraftSession.cpus(32))
       .config("spark.scheduler.mode", "FAIR")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -194,8 +187,8 @@ object MaintenanceInterleaveBench {
     // ingest generations, REAL-policy retrains, atomic swaps, live-dir
     // compaction — with its own racing serve-verify loop, all while the
     // registry, the maintenance cycles and the layout readers above
-    // hammer the same session (AnnSwapDrill raced ONE publish on an
-    // idle session; this is the production regime)
+    // hammer the same session (the BASELINE.md r16 swap receipt raced
+    // ONE publish on an idle session; this is the production regime)
     val annStats = new java.util.concurrent.atomic
       .AtomicReference[graft.similarity.AnnLifecycleLoad.Stats](null)
     val annThread = new Thread(() => {

@@ -2,7 +2,7 @@ package graft
 
 import graft.similarity.Similarity
 import graft.text.{Dedup, TextAnalysis}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /**
@@ -35,14 +35,9 @@ object ScaleSmoke {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = GraftSession.cpus(4)
     val ks = if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(1, 2, 4, 8)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val base = spark.read.parquet(s"$sfDir/documents.parquet")
 
@@ -54,7 +49,7 @@ object ScaleSmoke {
 
     // K=0 pass warms codegen so the first measured K isn't billed for it
     val warm = amplify(base, 1).limit(200)
-      .repartition(cpus.toInt)
+      .repartition(cpus)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     Dedup.nearDupMinhashLsh(warm).count()
     TextAnalysis.vocabTopK(warm).count()
@@ -79,7 +74,7 @@ object ScaleSmoke {
           .withColumn("text",
             when(pmod(xxhash64(col("doc_id")), lit(10)) < 9,
               concat(lit(boiler + " "), col("text"))).otherwise(col("text")))
-          .repartition(cpus.toInt)
+          .repartition(cpus)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val n = docs.count()
         val sh = Dedup.shingleArrays(docs, 3)
@@ -123,7 +118,7 @@ object ScaleSmoke {
     if (sys.env.get("SPARK_GRAFT_SCALE_OPS").contains("invidx")) {
       for (k <- ks) {
         val docs = amplify(base, k)
-          .repartition(cpus.toInt)
+          .repartition(cpus)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val n = docs.count()
         val sh = Dedup.shingleArrays(docs, 3)
@@ -149,7 +144,7 @@ object ScaleSmoke {
 
     for (k <- ks) {
       val docs = amplify(base, k)
-        .repartition(cpus.toInt)
+        .repartition(cpus)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val n = docs.count()
       val sh = Dedup.shingleArrays(docs, 3)
@@ -211,7 +206,7 @@ object ScaleSmoke {
           (col("vec_id") + lit(i.toLong * 10000000L)).as("vec_id"),
           col("embedding"), col("label"))
       }.reduce(_ unionAll _)
-        .repartition(cpus.toInt)
+        .repartition(cpus)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       embs.count()
       val codes = Similarity.productQuantize(embs)
@@ -322,16 +317,10 @@ object EventScaleSmoke {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = GraftSession.cpus(4)
     val skewShare = sys.env.getOrElse("SPARK_GRAFT_SKEW", "0.2").toDouble
     val ks = if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(1, 2, 4, 8)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val base = graft.queries.Tables.events(spark, sfDir)
     // the amplify id shifts assume ids below these bounds; a base table
@@ -356,7 +345,7 @@ object EventScaleSmoke {
 
     def measure(k: Int, skew: Double): Unit = {
       val ev = amplify(base, k, skew)
-        .repartition(cpus.toInt)
+        .repartition(cpus)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val n = ev.count()
       val impr = ev.filter(col("event_type") === "view").select(
@@ -476,15 +465,9 @@ object LayoutScaleSmoke {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = GraftSession.cpus(4)
     val ks = if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(1, 4, 16, 64)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val base = graft.queries.Tables.events(spark, sfDir)
 
@@ -523,7 +506,7 @@ object LayoutScaleSmoke {
 
     val work = java.nio.file.Files.createTempDirectory("layout_scale")
     for (k <- ks) {
-      val ev = amplify(base, k).repartition(cpus.toInt * 2)
+      val ev = amplify(base, k).repartition(cpus * 2)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val n = ev.count()
       val partDir = s"$work/part_k$k"
@@ -672,7 +655,7 @@ object AnnScaleSmoke {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = GraftSession.cpus(4)
     // quantizer width and query-batch size are THE pruning knobs: the
     // probed fraction is at most nQueries*nProbe/nCells, so the
     // registered oracle config (16 cells, 8 queries) probes nearly
@@ -681,12 +664,7 @@ object AnnScaleSmoke {
     val nCells = sys.env.getOrElse("SPARK_GRAFT_ANN_CELLS", "16").toInt
     val nQueries = sys.env.getOrElse("SPARK_GRAFT_ANN_QUERIES", "8").toInt
     val ks = if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(1, 4, 16, 64)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val base = spark.read.parquet(s"$sfDir/embeddings.parquet")
       .select(col("vec_id"), col("embedding"))
@@ -720,7 +698,7 @@ object AnnScaleSmoke {
 
     val work = java.nio.file.Files.createTempDirectory("ann_scale")
     for (k <- ks) {
-      val emb = amplify(base, k).repartition(cpus.toInt)
+      val emb = amplify(base, k).repartition(cpus)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val n = emb.count()
       val dir = s"$work/cells_k$k"

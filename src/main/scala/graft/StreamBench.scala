@@ -1,7 +1,6 @@
 package graft
 
 import graft.streaming.StreamThroughput
-import org.apache.spark.sql.SparkSession
 
 /**
  * Streaming throughput benchmark main — the streaming sibling of
@@ -18,7 +17,7 @@ import org.apache.spark.sql.SparkSession
  */
 object StreamBench {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.cpus(32)
     val feedMs = sys.env.getOrElse("SPARK_GRAFT_FEED_MS", "20000").toLong
     def rates(env: String, dflt: String): Seq[Int] =
       sys.env.getOrElse(env, dflt).split(",").map(_.trim.toInt).toSeq
@@ -36,11 +35,8 @@ object StreamBench {
     // more time committing stores than aggregating). Batch Bench keeps
     // partitions = cpus; this is the streaming sibling's knob.
     val shuffle = sys.env.getOrElse("SPARK_GRAFT_STREAM_SHUFFLE", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+    val spark = GraftSession.builder(cpus)
       .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

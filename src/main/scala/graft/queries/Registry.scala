@@ -28,8 +28,8 @@ object Tables {
     * parallelizes, and all registry queries over the table share one
     * scan (what a production pipeline does with a staging table).
     * The partition count derives from the table's on-disk SIZE (one
-    * partition per SPARK_GRAFT_SPREAD_BYTES of parquet, default 128 KB,
-    * floored at 4, capped at defaultParallelism — r22, guide §2.2):
+    * partition per [[SpreadBytes]] of parquet, floored at 4, capped at
+    * defaultParallelism — r22, guide §2.2):
     * spreading a kilobyte table to ALL cores made every stage of every
     * consumer dispatch |cores| near-empty tasks, the scaling block's
     * broad 32-core penalty. Persistence follows the same test: ONLY the
@@ -57,6 +57,9 @@ object Tables {
     else 0L
   }
 
+  /** Parquet bytes per spread partition (128 KB). */
+  private val SpreadBytes = 131072L
+
   private def spreadMemo(spark: SparkSession, sfDir: String, tag: String,
                          bytes: Long, d: => DataFrame): DataFrame =
     // the whole decision lives inside the by-name build so the parquet
@@ -65,12 +68,8 @@ object Tables {
     SharedFrames.memo(spark, sfDir, tag, persist = false) {
       val frame = d
       val par = spark.sparkContext.defaultParallelism
-      val perPart = sys.env.getOrElse("SPARK_GRAFT_SPREAD_BYTES", "131072")
-        .toLong
-      val target =
-        if (perPart <= 0) par // knob off: the pre-r22 all-cores spread
-        else math.min(par.toLong,
-          math.max(4L, (bytes + perPart - 1) / perPart)).toInt
+      val target = math.min(par.toLong,
+        math.max(4L, (bytes + SpreadBytes - 1) / SpreadBytes)).toInt
       if (frame.rdd.getNumPartitions < target)
         frame.repartition(target)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

@@ -7,8 +7,8 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 /**
  * Drift-triggered ANN index lifecycle — the operating component the
- * r15 `graft.AnnStaleness` ladder measured but left manual: a VERSIONED
- * serving store whose index generations are immutable and whose current
+ * r15 staleness ladder (BASELINE.md r15) measured but left manual: a
+ * VERSIONED serving store whose index generations are immutable and whose current
  * version flips through one atomic manifest rename, plus the retrain
  * controller that watches the drift monitor and publishes the next
  * generation when the measured policy fires.
@@ -81,14 +81,14 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
  * corpus-sized near the driver — centroids are the only collect), the
  * manifest flip is O(1), dead live rows never reach a scan (listing-
  * level pruning on the leading partition column), and reclaiming them
- * is directory unlink, not data rewrite. `graft.AnnGcDrill` is the
- * receipt: serve cost and live bytes scanned stay FLAT across
+ * is directory unlink, not data rewrite. The receipt is BASELINE.md r17
+ * "ANN lifecycle GC": serve cost and live bytes scanned stay FLAT across
  * generations where the cell-only layout grows per generation.
  *
  * Reference scope: the reference engine has no vector serving at all —
  * this is part of the LLM-pipeline extension surface; the policy
  * numbers (z threshold, share budget) come from the measured
- * AnnStaleness table (BASELINE.md r15: the monitor reads z ≈ 4.2 from
+ * staleness table (BASELINE.md r15: the monitor reads z ≈ 4.2 from
  * the first genuinely-shifted batch vs < 1.4 on a same-distribution
  * split; new-query recall decays to ~0.8 frozen vs 1.0 retrained).
  */
@@ -272,7 +272,7 @@ object AnnLifecycle {
    * read the current generation's arrivals, compute the drift monitor's
    * max per-dim mean-shift z (snapshot corpus vs arrivals) and the
    * arrived share, and when BOTH clear their thresholds (the
-   * AnnStaleness policy: the monitor alone fires from the first shifted
+   * r15 staleness policy: the monitor alone fires from the first shifted
    * batch; the share budget keeps a handful of outliers from forcing a
    * rebuild), retrain over snapshot ∪ arrived and [[publish]] the next
    * generation.
@@ -385,18 +385,11 @@ object AnnLifecycle {
    * continue, so rows drained under generation N are never re-read by
    * generation N+1 (they arrive there through v<N+1>'s snapshot
    * instead).
-   *
-   * @param legacyCellOnlyLive land cell-partitioned with model_version
-   *   as a DATA column — the pre-r17 layout, kept ONLY as the
-   *   `graft.AnnGcDrill` contrast arm (it measures the per-generation
-   *   scan growth the versioned layout exists to remove). Never use in
-   *   production.
    */
   def runIngestGeneration(spark: SparkSession, dir: String, version: Int,
                           topic: String, checkpoint: String,
                           dim: Int = 64,
-                          maxFilesPerTrigger: Int = 8,
-                          legacyCellOnlyLive: Boolean = false)
+                          maxFilesPerTrigger: Int = 8)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     import org.apache.spark.sql.types._
     val schema = StructType(Seq(
@@ -412,9 +405,7 @@ object AnnLifecycle {
     graft.sources.TableLayout.streamToCellPartitioned(
       Similarity.ivfCellAssignmentsWith(raw, cells)
         .withColumn("model_version", lit(version)),
-      liveDir(dir), checkpoint,
-      partitionCols =
-        if (legacyCellOnlyLive) Seq("cell") else Seq("model_version", "cell"))
+      liveDir(dir), checkpoint, partitionCols = Seq("model_version", "cell"))
   }
 
   // ------------------------------------------------------------------

@@ -8,8 +8,9 @@ import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger, AtomicLong, At
 
 /**
  * The ANN lifecycle run UNDER LOAD — the r16 verdict's ask #5:
- * `graft.AnnSwapDrill` races a serve loop against ONE publish on an
- * otherwise idle session; production retrains fire while the full query
+ * the r16 swap receipt (BASELINE.md "Drift-triggered retrain + atomic
+ * hot swap") raced a serve loop against ONE publish on an otherwise idle
+ * session; production retrains fire while the full query
  * registry hammers the session and maintenance passes rewrite layouts.
  * This harness drives the complete operating loop — publish v1, then
  * per generation: ingest a drifted arrival batch, stop, controller
@@ -128,7 +129,7 @@ object AnnLifecycleLoad {
         // over the testdata base (measured: z 4.4 -> 1.3 at the same
         // delta), so a monitor reading shift/std_old needs a growing
         // shift to keep clearing its threshold on genuinely-new drift
-        val arrivals = graft.AnnStaleness
+        val arrivals = graft.fixtures.Embeddings
           .freshShifted(spark, 2 * nBase,
             delta = 0.35 + 0.9 * (g - 1),
             dimOffset = 16 * ((g - 1) % 4))

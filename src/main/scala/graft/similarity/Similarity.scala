@@ -561,7 +561,7 @@ object Similarity {
    *
    *  1. REPEATED same-delta drift on an absorbed axis: `mean_shift_z`
    *     collapses (measured z 4.2 → 1.4 at generation 2 on a repeated
-   *     band — the lifecycle drill; `AnnStaleness.freshShifted`'s
+   *     band — the lifecycle drill; `Embeddings.freshShifted`'s
    *     `dimOffset` exists to drill fresh axes instead). This is
    *     absorption working as designed — the snapshot genuinely serves
    *     the drifted region (recall recovers, r15 ladder) — NOT a missed
@@ -903,13 +903,13 @@ object Similarity {
 
   /**
    * Corpus-size-scaled IVF width — the r17 recall-frontier operating
-   * point generalized (BASELINE.md r17, `graft.AnnRecallFrontier`,
-   * 128 k-vector 512-cluster Gaussian mixture): the recommended rung
-   * was **1024 cells at 128 k vectors** (trained init, recall@5 = 1.000
-   * at nProbe 4 — a 0.39% probe fraction), i.e. ~128 vectors per cell,
-   * and recall at fixed probe FRACTION improved monotonically with
-   * width on that corpus (64 → 256 → 1024). This policy keeps that
-   * ratio on a power-of-two rung, clamped to:
+   * point generalized (BASELINE.md r17 "ANN recall frontier on a
+   * non-degenerate corpus", 128 k-vector 512-cluster Gaussian mixture):
+   * the recommended rung was **1024 cells at 128 k vectors** (trained
+   * init, recall@5 = 1.000 at nProbe 4 — a 0.39% probe fraction), i.e.
+   * ~128 vectors per cell, and recall at fixed probe FRACTION improved
+   * monotonically with width on that corpus (64 → 256 → 1024). This
+   * policy keeps that ratio on a power-of-two rung, clamped to:
    *
    *  - **16 minimum** — small corpora keep the historical toy/test
    *    width (every registered oracle query pins 16 explicitly; tiny
@@ -1289,9 +1289,9 @@ object Similarity {
   /** Assign `rows` under an EXPLICIT centroid array (a frozen
     * [[AnnIndexModel]]'s cells, or retrained ones) — the serving-side
     * assignment as a public surface: one map-side projection over plan
-    * literals, no corpus read (used by the staleness ladder
-    * graft.AnnStaleness to compare frozen vs retrained quantizers over
-    * one corpus). */
+    * literals, no corpus read (used by `Embeddings.meanRecall` to
+    * compare frozen vs retrained quantizers over one corpus; BASELINE.md
+    * r15 staleness table). */
   def ivfCellAssignmentsWith(rows: DataFrame,
                              cells: Array[(Long, Seq[Double], Double)])
       : DataFrame = {
@@ -1589,8 +1589,8 @@ object Similarity {
     * `rounds = 0` keeps the raw sample). Defaults (m=8 × 8-dim
     * subspaces, k=64 codes, 2 rounds) are the measured r12 operating
     * point: the refined search reaches the plain-IVF recall ceiling at
-    * equal probes on the test corpora (receipts in BASELINE.md's
-    * ann_recall ladder, generated by [[graft.AnnRecallSweep]]). */
+    * equal probes on the test corpora (receipts in BASELINE.md's r12
+    * "ANN recall ladder" and r13 probe-width rows). */
   final case class PqConfig(m: Int = 8, k: Int = 64, dim: Int = 64,
                             salt: String = "pq", rounds: Int = 2,
                             d2Seed: Boolean = false) {

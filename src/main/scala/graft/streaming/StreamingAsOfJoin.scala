@@ -75,8 +75,8 @@ object StreamingAsOfJoin {
    *   the max ts all retained for matchSeq's id rule) — state bounded
    *   by the WATERMARK HORIZON per key, not the key's lifetime, and
    *   attribution latency drops from key-inactivity to watermark lag.
-   *   The trade, SETTLED by the r16 lateness drill
-   *   (graft.AsOfLatenessDrill + the lateness-bound spec case): there
+   *   The trade, SETTLED by the r16 lateness drill (BASELINE.md r16
+   *   "Progressive as-of finalize" + the lateness-bound spec case): there
    *   is NO output divergence from the default form under the
    *   watermark contract. An event arriving with ts below the
    *   watermark is dropped by the stateful operator's late-input

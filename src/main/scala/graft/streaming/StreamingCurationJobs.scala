@@ -124,7 +124,7 @@ object StreamingCurationJobs {
     // evaluates k positions per shingle per DOCUMENT (~180 at the
     // defaults), and higher-order functions run as INTERPRETED lambdas
     // with a boxed position array per shingle — that loop was the
-    // measured curation-ingest wall (IngestWallProbe: the candidate
+    // measured curation-ingest wall (BASELINE.md r13: the candidate
     // evaluation ALONE fell behind at 16k docs/s while a double decode,
     // shingling, dedup and the gate each kept pace). Build and probe
     // share one hash implementation (graftshim.BloomExpressions), the

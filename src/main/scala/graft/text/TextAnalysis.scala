@@ -1134,10 +1134,8 @@ object TextAnalysis {
       .localCheckpoint(false)
     var prev: Option[DataFrame] = None
     val merges = scala.collection.mutable.ArrayBuffer.empty[BpeMerge]
-    var rounds = 0
     try {
       while (merges.size < nMerges) {
-        rounds += 1
         val want = math.min(batch, nMerges - merges.size)
         val window = vocabPairs(vocab)
           .orderBy(col("c").desc, col("a"), col("b"))
@@ -1171,7 +1169,6 @@ object TextAnalysis {
       }
       merges.toSeq
     } finally {
-      lastTrainRounds.set(rounds)
       prev.foreach(_.unpersist())
       vocab.unpersist()
     }
@@ -1215,9 +1212,9 @@ object TextAnalysis {
    * point (8 merges, clean windows) the standing-state overhead costs
    * more than it saves — the registered `bpe_vocab` stays on the
    * recount path; the win is measured on the heterogeneous ladder
-   * (graft.BpeLadder — BASELINE.md r16), where it tracks VOCABULARY
-   * size: the larger the vocabulary relative to the affected slice,
-   * the more the skipped explode+shuffle is worth.
+   * (BASELINE.md r16 "BPE heterogeneous-corpus batching"), where it
+   * tracks VOCABULARY size: the larger the vocabulary relative to the
+   * affected slice, the more the skipped explode+shuffle is worth.
    */
   private def bpeTrainIncremental(docs: DataFrame, nMerges: Int,
                                   sharedVocab: Option[DataFrame],
@@ -1281,10 +1278,8 @@ object TextAnalysis {
     val oldV = scala.collection.mutable.Queue.empty[DataFrame]
     val oldP = scala.collection.mutable.Queue.empty[DataFrame]
     val merges = scala.collection.mutable.ArrayBuffer.empty[BpeMerge]
-    var rounds = 0
     try {
       while (merges.size < nMerges) {
-        rounds += 1
         val want = math.min(batch, nMerges - merges.size)
         val window = pairs
           .orderBy(col("c").desc, col("a"), col("b"))
@@ -1344,7 +1339,6 @@ object TextAnalysis {
       }
       merges.toSeq
     } finally {
-      lastTrainRounds.set(rounds)
       (oldV ++ oldP).foreach(freeCheckpoint)
       freeCheckpoint(vocab)
       freeCheckpoint(pairs)
@@ -1367,15 +1361,6 @@ object TextAnalysis {
         l.rdd.unpersist(false)
       case _ => df.unpersist()
     }
-
-  /** Driver rounds (serialized collect actions) the calling THREAD's
-    * last [[bpeTrain]] took — measurement instrumentation for the
-    * batching ladder (graft.BpeLadder), not an API: the sub-linearity
-    * receipt needs actions-per-merge, which the merge list alone cannot
-    * reveal. Thread-local so concurrent sessions (the ConcurrentBench
-    * regime) cannot clobber each other's reading. */
-  private[graft] val lastTrainRounds: ThreadLocal[Int] =
-    ThreadLocal.withInitial(() => 0)
 
   /**
    * Batched-round admission: from one ranked pair window (count DESC,

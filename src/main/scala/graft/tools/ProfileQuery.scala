@@ -1,7 +1,7 @@
 package graft.tools
 
+import graft.GraftSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /**
  * Per-JOB wall breakdown of one registered query — the measurement tool
@@ -12,30 +12,17 @@ import org.apache.spark.sql.SparkSession
  * of a single opaque number.
  *
  * Usage: sbt "runMain graft.tools.ProfileQuery <sfDir> <query> [reps]"
- * Mirrors graft.Bench's session config (same master/env knobs) so the
- * walls are comparable with bench rows; the warmup pass (same query at
- * the warm dir) separates codegen/planning first-touch cost exactly as
- * the bench does.
+ * Runs under [[graft.GraftSession]], the session config graft.Bench
+ * times, so the walls are comparable with bench rows; the warmup pass
+ * (same query at the warm dir) separates codegen/planning first-touch
+ * cost exactly as the bench does.
  */
 object ProfileQuery {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val name = args.lift(1).getOrElse("ctr_by_campaign")
     val reps = args.lift(2).map(_.toInt).getOrElse(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_CACHE_AQE", "true")) // match Bench (ADVICE r21)
-      .config("spark.sql.files.minPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_SCAN_PARTS", "1")) // match Bench (r22)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_COALESCE_MINSIZE", "256k")) // match Bench (r22)
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.cpus(32)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     final case class JobRow(id: Int, desc: String, start: Long,

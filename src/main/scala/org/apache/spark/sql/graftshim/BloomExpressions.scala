@@ -18,7 +18,7 @@ import org.apache.spark.unsafe.types.UTF8String
  * — evaluates as INTERPRETED higher-order functions: per document,
  * ~shingles × k lambda frames, boxed position arrays, and an
  * `element_at` on a 1024-long bitmap literal per probe. That loop was
- * the measured curation-ingest wall (IngestWallProbe r13: the single
+ * the measured curation-ingest wall (BASELINE.md r13: the single
  * candidate evaluation alone fell behind at 16k docs/s while decode,
  * shingling, dedup and the gate each kept pace). Here the whole probe
  * is ONE codegen'd call into a static helper over a primitive long[]

@@ -122,13 +122,13 @@ case class BpeApplyMerges(child: Expression, merges: Seq[(String, String)])
     }.toArray
 
   override protected def nullSafeEval(v: Any): Any =
-    BpeApplyMerges.apply(v.asInstanceOf[ArrayData], table)
+    BpeApplyMerges.applyAll(v.asInstanceOf[ArrayData], table)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val tbl = ctx.addReferenceObj("bpeMerges", table,
       "org.apache.spark.unsafe.types.UTF8String[][]")
     val cls = "org.apache.spark.sql.graftshim.BpeApplyMerges"
-    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = $cls.apply($a, $tbl);")
+    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = $cls.applyAll($a, $tbl);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -137,8 +137,12 @@ case class BpeApplyMerges(child: Expression, merges: Seq[(String, String)])
 
 object BpeApplyMerges {
   /** In-place compaction: one pass per merge over the shrinking symbol
-    * buffer. Static forwarder target for the generated code. */
-  def apply(syms: ArrayData, merges: Array[Array[UTF8String]]): ArrayData = {
+    * buffer. Static forwarder target for the generated code — NOT named
+    * `apply`: that clashes with the case class's inherited
+    * `TreeNode.apply(int)`, scalac then emits no static forwarder, and
+    * Janino's compile failure silently drops the stage to interpreted
+    * eval. */
+  def applyAll(syms: ArrayData, merges: Array[Array[UTF8String]]): ArrayData = {
     val n = syms.numElements()
     val cur = new Array[Any](n)
     var i = 0

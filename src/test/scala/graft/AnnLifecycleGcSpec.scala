@@ -1,5 +1,6 @@
 package graft
 
+import graft.fixtures.Embeddings
 import graft.similarity.{AnnLifecycle, Similarity}
 import graft.sources.TableLayout
 import graft.streaming.JsonStreams
@@ -91,7 +92,7 @@ class AnnLifecycleGcSpec extends SparkSpec {
     val cells1 = Similarity.freezeAnnIndex(b, nCells).get.cells.toArray
     AnnLifecycle.publish(spark, dir, 1, cells1, b)
 
-    val fresh = AnnStaleness.freshShifted(spark, 2 * nBase)
+    val fresh = Embeddings.freshShifted(spark, 2 * nBase)
       .select(col("vec_id"),
         col("embedding").cast("array<double>").as("embedding"))
     val gen1 = AnnLifecycle.runIngestGeneration(spark, dir, 1, topic, ck)
@@ -104,7 +105,7 @@ class AnnLifecycleGcSpec extends SparkSpec {
     val d = AnnLifecycle.maybeRetrainSwap(spark, dir, nCells)
     assert(d.fired && AnnLifecycle.currentVersion(dir).contains(2))
 
-    val extra = AnnStaleness.freshShifted(spark, 10)
+    val extra = Embeddings.freshShifted(spark, 10)
       .select((col("vec_id") + lit(300000000L)).as("vec_id"),
         col("embedding").cast("array<double>").as("embedding"))
     val gen2 = AnnLifecycle.runIngestGeneration(spark, dir, 2, topic, ck)
@@ -243,7 +244,7 @@ class AnnLifecycleGcSpec extends SparkSpec {
     val cells1 = Similarity.freezeAnnIndex(b, nCells).get.cells.toArray
     AnnLifecycle.publish(spark, dir, 1, cells1, b)
 
-    val fresh = AnnStaleness.freshShifted(spark, 2 * nBase)
+    val fresh = Embeddings.freshShifted(spark, 2 * nBase)
       .select(col("vec_id"),
         col("embedding").cast("array<double>").as("embedding"))
     val gen1 = AnnLifecycle.runIngestGeneration(spark, dir, 1, topic, ck)
@@ -277,7 +278,7 @@ class AnnLifecycleGcSpec extends SparkSpec {
 
     // grow the corpus past the first auto rung: 500 base + 3500 drifted
     // arrivals = 4000 combined -> scaledCells = 32
-    val fresh = AnnStaleness.freshShifted(spark, 3500)
+    val fresh = Embeddings.freshShifted(spark, 3500)
       .select(col("vec_id"),
         col("embedding").cast("array<double>").as("embedding"))
     val gen1 = AnnLifecycle.runIngestGeneration(spark, dir, 1, topic, ck)

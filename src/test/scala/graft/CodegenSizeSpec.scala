@@ -1,5 +1,7 @@
 package graft
 
+import graft.queries.SharedFrames
+
 /**
  * Registry-wide generated-code size gate — the spec form of
  * [[CodegenAudit]]: every registered query's largest whole-stage-codegen
@@ -10,7 +12,9 @@ package graft
  * interpreter — the ~30× silent cliff the r12 streaming-codes
  * investigation uncovered on three registered queries. AQE is disabled
  * for the sweep (an un-executed adaptive plan exposes no codegen
- * subtrees); nothing executes, so the sweep is planning-cost only.
+ * subtrees); nothing executes, so the sweep is planning-cost only. The
+ * strict-codegen sweep beside it does execute: it catches generated
+ * code that fails to compile, which the size sweep cannot see.
  */
 class CodegenSizeSpec extends SparkSpec {
 
@@ -50,6 +54,36 @@ class CodegenSizeSpec extends SparkSpec {
       assert(max <= CodegenAudit.JitCeiling,
         s"4096-cell assignment generated $max bytecodes (> ceiling)")
     }
+  }
+
+  test("every registered query compiles its generated code and computes " +
+    "every column with codegen fallback disabled") {
+    // a noop write evaluates every output column (a count() would let
+    // Catalyst prune the projections away); with fallback off, a
+    // generated class Janino cannot compile fails its query instead of
+    // silently dropping the stage to interpreted eval — what a missing
+    // static forwarder (a companion `apply` clashing with
+    // TreeNode.apply(int)) does. Memos built earlier under fallback
+    // would serve cached data and skip the code under test.
+    def coldCaches(): Unit = {
+      SharedFrames.clear(spark)
+      spark.catalog.clearCache()
+    }
+    coldCaches()
+    try withSQLConf("spark.sql.codegen.fallback" -> "false") {
+      val failed = SparkEntry.queries.toSeq.flatMap { case (name, fn) =>
+        try {
+          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+          None
+        } catch { case e: Exception =>
+          val root = Iterator.iterate[Throwable](e)(_.getCause)
+            .takeWhile(_ != null).toSeq.last
+          Some(s"$name: ${root.toString.take(200)}")
+        }
+      }
+      assert(failed.isEmpty,
+        s"queries failing under strict codegen:\n${failed.mkString("\n")}")
+    } finally coldCaches()
   }
 
   private def withSQLConf[T](pairs: (String, String)*)(f: => T): T = {

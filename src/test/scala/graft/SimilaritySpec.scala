@@ -1,5 +1,6 @@
 package graft
 
+import graft.fixtures.Embeddings
 import graft.similarity.Similarity
 import org.apache.spark.sql.functions._
 
@@ -278,10 +279,10 @@ class SimilaritySpec extends SparkSpec {
 
   test("residual encoding beats absolute on a clustered corpus: lower " +
     "reconstruction error AND recall@5 at equal knobs (the r20 claim)") {
-    // the AnnRecallFrontier mixture: hash-placed centers, noise scale
+    // the Embeddings.mixture corpus: hash-placed centers, noise scale
     // rivals center scale — the corpus shape where residual PQ matters
     // (deterministic, so this pins the claim rather than sampling it)
-    val embs = AnnRecallFrontier.mixture(spark, n = 2048, dim = 64,
+    val embs = Embeddings.mixture(spark, n = 2048, dim = 64,
       nClusters = 16)
     val flatErr = Similarity.productQuantize(embs)
       .agg(avg(col("recon_error"))).first().getDouble(0)
@@ -682,25 +683,24 @@ class SimilaritySpec extends SparkSpec {
   test("index staleness: frozen quantizer degrades new-distribution " +
     "recall, retraining recovers past the pre-ingest baseline, the drift " +
     "monitor fires, and the merged stale layout serves row-exactly") {
-    import graft.AnnStaleness
     val nQ = 32
     val base = spark.read
       .parquet("/root/testdata/sf0.001/embeddings.parquet")
       .select(col("vec_id"), col("embedding"))
       .persist()
-    val fresh = AnnStaleness.freshShifted(spark, base.count()).persist()
+    val fresh = Embeddings.freshShifted(spark, base.count()).persist()
     // registered knobs: 16-cell quantizer, 4-probe search
     val frozen = Similarity.freezeAnnIndex(base, nCells = 16)
       .get.cells.toArray
-    val baseline = AnnStaleness.meanRecall(base, frozen, nQ, 16, 4)
-    val view = AnnStaleness.newQueryView(base, fresh, nQ)
+    val baseline = Embeddings.meanRecall(base, frozen, nQ, 16, 4)
+    val view = Embeddings.newQueryView(base, fresh, nQ)
     val viewBrute = Some(
       Similarity.bruteForceTopK(view, nQueries = nQ, k = 5).persist())
-    val frozenNew = AnnStaleness.meanRecall(view, frozen, nQ, 16, 4,
+    val frozenNew = Embeddings.meanRecall(view, frozen, nQ, 16, 4,
       brute = viewBrute)
     val retrained = Similarity.freezeAnnIndex(view, nCells = 16)
       .get.cells.toArray
-    val retrainedNew = AnnStaleness.meanRecall(view, retrained, nQ, 16, 4,
+    val retrainedNew = Embeddings.meanRecall(view, retrained, nQ, 16, 4,
       brute = viewBrute)
     // everything above is hash-deterministic, so these are fixed values,
     // not statistical claims: staleness costs new-distribution recall...
@@ -749,7 +749,6 @@ class SimilaritySpec extends SparkSpec {
     "absorbed axis reads quiet (case 1), progressive drift re-fires " +
     "(case 2), and axis-aligned spread growth is invisible to z but " +
     "fires std_ratio on exactly the grown dims (case 3)") {
-    import graft.AnnStaleness
     val base = spark.read
       .parquet("/root/testdata/sf0.001/embeddings.parquet")
       .select(col("vec_id"), col("embedding"))
@@ -762,9 +761,9 @@ class SimilaritySpec extends SparkSpec {
     // case 1 — ABSORPTION: generation 1's cohort folds into the
     // snapshot (exactly what maybeRetrainSwap indexes); generation 2
     // re-sends the SAME band at the SAME delta (disjoint ids)
-    val cohort1 = AnnStaleness.freshShifted(spark, 2 * n)
+    val cohort1 = Embeddings.freshShifted(spark, 2 * n)
     val snapshot2 = base.unionAll(cohort1)
-    val cohort2same = AnnStaleness.freshShifted(spark, 2 * n)
+    val cohort2same = Embeddings.freshShifted(spark, 2 * n)
       .select((col("vec_id") + lit(500000000L)).as("vec_id"),
         col("embedding"))
     val z1 = maxZ(base.unionAll(cohort1), col("vec_id") >= 100000000L)
@@ -777,7 +776,7 @@ class SimilaritySpec extends SparkSpec {
     // case 2 — PROGRESSIVE drift: the mean moves FURTHER (the lifecycle
     // drill's growing-delta regime) and the monitor re-fires vs the
     // quiet same-delta reading
-    val cohort2grown = AnnStaleness.freshShifted(spark, 2 * n, delta = 1.25)
+    val cohort2grown = Embeddings.freshShifted(spark, 2 * n, delta = 1.25)
       .select((col("vec_id") + lit(500000000L)).as("vec_id"),
         col("embedding"))
     val z2grown = maxZ(snapshot2.unionAll(cohort2grown),
@@ -788,8 +787,8 @@ class SimilaritySpec extends SparkSpec {
     // case 3 — SPREAD growth, mean in place: same population, band dims
     // scaled 2x (an encoder losing normalization). z stays far under
     // the fire threshold; std_ratio fires on exactly the grown band
-    val popA = AnnStaleness.freshShifted(spark, 2 * n, delta = 0.0)
-    val popB = AnnStaleness.freshShifted(spark, 2 * n, delta = 0.0)
+    val popA = Embeddings.freshShifted(spark, 2 * n, delta = 0.0)
+    val popB = Embeddings.freshShifted(spark, 2 * n, delta = 0.0)
       .select((col("vec_id") + lit(700000000L)).as("vec_id"),
         transform(col("embedding").cast("array<double>"),
           (x, i) => when(i < 16, x * lit(2.0)).otherwise(x))
@@ -849,7 +848,7 @@ class SimilaritySpec extends SparkSpec {
 
     // 40k synthetic vectors -> 256 cells (40000/128 = 312.5 -> rung 256),
     // and the widened model really carries 256 trained centroids
-    val big = AnnStaleness.freshShifted(spark, 40000)
+    val big = Embeddings.freshShifted(spark, 40000)
       .select(col("vec_id"), col("embedding").cast("array<double>")
         .as("embedding"))
     assert(Similarity.scaledCells(40000) == 256)

@@ -1,5 +1,6 @@
 package graft
 
+import graft.fixtures.Embeddings
 import graft.similarity.Similarity
 import graft.streaming.{JsonStreams, StreamingCuration, StreamingCurationJobs}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -324,7 +325,7 @@ class StreamingAnnIngestSpec extends SparkSpec {
     AnnLifecycle.publish(spark, dir, 1, cells1, base)
     assert(AnnLifecycle.currentVersion(dir).contains(1))
 
-    val fresh = AnnStaleness.freshShifted(spark, 2 * nBase)
+    val fresh = Embeddings.freshShifted(spark, 2 * nBase)
       .select(col("vec_id"),
         col("embedding").cast("array<double>").as("embedding"))
       .persist()
@@ -409,7 +410,7 @@ class StreamingAnnIngestSpec extends SparkSpec {
       gen2.processAllAvailable()
       assert(AnnLifecycle.liveVectors(spark, dir, 2).count() == 0,
         "drained offsets were re-ingested into the new generation")
-      val extra = AnnStaleness.freshShifted(spark, 10)
+      val extra = Embeddings.freshShifted(spark, 10)
         .select((col("vec_id") + lit(300000000L)).as("vec_id"),
           col("embedding").cast("array<double>").as("embedding"))
       feed(extra, "b3")
@@ -421,13 +422,13 @@ class StreamingAnnIngestSpec extends SparkSpec {
     } finally gen2.stop()
 
     // recall recovery for new-distribution queries: the retrained
-    // generation's centroids must beat the frozen ones (AnnStaleness
+    // generation's centroids must beat the frozen ones (BASELINE.md
     // r15: frozen ~0.8, retrained 1.0 at the sf0.01 rung)
-    val view = AnnStaleness.newQueryView(base, fresh, 16)
+    val view = Embeddings.newQueryView(base, fresh, 16)
       .persist()
     val cells2 = AnnLifecycle.loadCells(spark, dir, 2)
-    val rFrozen = AnnStaleness.meanRecall(view, cells1, 16, nCells, nProbe)
-    val rRetrained = AnnStaleness.meanRecall(view, cells2, 16, nCells, nProbe)
+    val rFrozen = Embeddings.meanRecall(view, cells1, 16, nCells, nProbe)
+    val rRetrained = Embeddings.meanRecall(view, cells2, 16, nCells, nProbe)
     info(s"new-query recall: frozen=$rFrozen retrained=$rRetrained")
     assert(rRetrained > rFrozen,
       s"retrain must recover new-query recall: $rFrozen -> $rRetrained")
