@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.graftshim.{BloomPositions, BloomShingleHit, ColumnShim, DotProduct, HammingDistance, IvfCellScores, IvfNearestCell, MicroSquaredDistance, PqAdcLut, PqNearestCode, MatVecRound6, SignBuckets, SubvectorDist2, VectorSubtract}
+import org.apache.spark.sql.graftshim.{ColumnShim, DotProduct, HammingDistance, IvfCellScores, IvfNearestCell, MicroSquaredDistance, PqAdcLut, PqNearestCode, MatVecRound6, SignBuckets, SubvectorDist2, VectorSubtract}
 
 /**
  * Column-level entry points for graft's native vector expressions (see
@@ -81,17 +81,4 @@ object VectorFunctions {
   def matvecRound6(v: Column, rows: Column, divisor: Column): Column =
     ColumnShim.column(MatVecRound6(ColumnShim.expression(v),
       ColumnShim.expression(rows), ColumnShim.expression(divisor)))
-
-  /** The k Bloom positions of one shingle string (bitmap build side);
-    * see [[org.apache.spark.sql.graftshim.BloomPositions]]. */
-  def bloomPositions(shingle: Column, kHashes: Column, mBits: Column): Column =
-    ColumnShim.column(BloomPositions(ColumnShim.expression(shingle),
-      ColumnShim.expression(kHashes), ColumnShim.expression(mBits)))
-
-  /** Whole-document Bloom candidate probe over a long[] bitmap literal
-    * (probe side — shares the build side's hash byte-for-byte); see
-    * [[org.apache.spark.sql.graftshim.BloomShingleHit]]. */
-  def bloomShingleHit(shingles: Column, bitmap: Column, kHashes: Column): Column =
-    ColumnShim.column(BloomShingleHit(ColumnShim.expression(shingles),
-      ColumnShim.expression(bitmap), ColumnShim.expression(kHashes)))
 }

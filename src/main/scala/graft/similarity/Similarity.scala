@@ -377,10 +377,11 @@ object Similarity {
    * one row per (table, bucket) key of each eval vector, the vector and
    * its norm carried so the exact-cosine verify reads them off the
    * joined row. Same deterministic coordinate-sign keys as the whole
-   * sign-LSH family. Returned UNPERSISTED — the caller owns the cache
-   * (the [[graft.streaming.StreamingCuration.benchShingleIndex]]
-   * contract: a long-running stream re-plans the static side every
-   * microbatch).
+   * sign-LSH family. Returned UNPERSISTED — the caller owns the cache:
+   * the stream-static join of [[semanticDecontaminateFlags]] re-plans
+   * its static side every microbatch, so a long-running stream should
+   * persist it (the [[graft.streaming.StreamingCuration.benchShingleIndex]]
+   * rule for the n-gram flagger's join).
    */
   def evalBucketIndex(evalVectors: DataFrame, bits: Int = 8,
                       tables: Int = 8): DataFrame = {
@@ -1923,8 +1924,14 @@ object Similarity {
         d += diff * diff
         i += 1
       }
-      val dr = round6(d)
-      if (dr < bestD) { bestD = dr; best = cid } // strict <: ties → smaller cid
+      // round only a candidate that can WIN: round6(x) >= x − 5e-7, so
+      // d >= bestD + 1e-6 implies round6(d) > bestD — bit-identical to
+      // rounding every candidate (the PqNearestCode gate). cid 0 always
+      // rounds, so a non-finite row still fails loudly in round6.
+      if (cid == 0 || d < bestD + 1e-6) {
+        val dr = round6(d)
+        if (dr < bestD) { bestD = dr; best = cid } // strict <: ties → smaller cid
+      }
       cid += 1
     }
     cnts(best) += 1

@@ -71,27 +71,12 @@ object BinaryTopics {
     w.start()
   }
 
-  /** File-backed binary topic source (the raw `value` frame; compose
-    * with [[decode]]). */
-  def readValueTopic(spark: SparkSession, dir: String,
-                     maxFilesPerTrigger: Int = 8): DataFrame =
-    spark.readStream
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .schema(valueSchema)
-      .parquet(dir)
-
   /** Encode + sink in one call — the codec twin of
     * [[JsonStreams.writeTopic]]. */
   def writeTopic(df: DataFrame, dir: String, checkpoint: String,
                  trigger: Option[org.apache.spark.sql.streaming.Trigger] = None)
       : org.apache.spark.sql.streaming.StreamingQuery =
     writeValueTopic(encode(df), dir, checkpoint, trigger)
-
-  /** Source + decode in one call — the codec twin of
-    * [[JsonStreams.readTopic]]. */
-  def readTopic(spark: SparkSession, dir: String, schema: StructType,
-                maxFilesPerTrigger: Int = 8): DataFrame =
-    decode(readValueTopic(spark, dir, maxFilesPerTrigger), schema)
 
   /** Count records on a binary topic (the JSON side counts text lines). */
   def countTopic(spark: SparkSession, dir: String): Long =

@@ -116,8 +116,8 @@ object StreamThroughput {
   }
 
   /** Small static benchmark set for the ingest job's decontamination
-    * stage — same vocabulary family as [[docStream]] so the Bloom
-    * pre-filter sees realistic (mostly-miss) probe traffic. */
+    * stage — same vocabulary family as [[docStream]] so the shingle-set
+    * probe sees realistic (mostly-miss) traffic. */
   def benchDocs(spark: SparkSession, n: Int = 32): DataFrame = {
     import spark.implicits._
     (0 until n).map(i =>
@@ -355,7 +355,7 @@ object StreamThroughput {
         triggerInterval.map(_ => 3000L).getOrElse(0L),
       Seq(feeder), Seq(emb),
       () => Seq(StreamingCurationJobs.runAnnIngestJob(spark, emb.toString,
-        model, root.resolve("work").toString, maxFilesPerTrigger = 10000,
+        model, root.resolve("work").toString,
         codec = codec, triggerInterval = triggerInterval)),
       spark, Some(topicCounter(spark, codec)))
   }
@@ -383,8 +383,7 @@ object StreamThroughput {
       () => Seq(StreamingCurationJobs.runAnnLayoutJob(spark, emb.toString,
         corpus, root.resolve("segments").toString,
         root.resolve("_ck/segments").toString,
-        maxFilesPerTrigger = 10000, codec = codec,
-        triggerInterval = triggerInterval)),
+        codec = codec, triggerInterval = triggerInterval)),
       spark, Some(topicCounter(spark, codec)))
   }
 
@@ -498,8 +497,7 @@ object StreamThroughput {
       root.resolve("_ck/docs"))
     awaitTopic(docs)
     val consumer = StreamingCurationJobs.runIngestJob(spark, docs.toString,
-      benchDocs(spark), work.toString, maxFilesPerTrigger = 10000,
-      triggerInterval = triggerInterval)
+      benchDocs(spark), work.toString, triggerInterval = triggerInterval)
     try {
       Thread.sleep(feedMs)
       feeder.stop()
@@ -549,8 +547,7 @@ object StreamThroughput {
       root.resolve("_ck/emb"))
     awaitTopic(emb)
     val consumer = StreamingCurationJobs.runAnnIngestJob(spark, emb.toString,
-      model, work.toString, maxFilesPerTrigger = 10000,
-      triggerInterval = triggerInterval)
+      model, work.toString, triggerInterval = triggerInterval)
     try {
       Thread.sleep(feedMs)
       feeder.stop()
@@ -654,7 +651,7 @@ object StreamThroughput {
   }
 
   /** One curation-ingest step: [[docStream]] → docs topic →
-    * [[StreamingCurationJobs.runIngestJob]] (Bloom decontamination →
+    * [[StreamingCurationJobs.runIngestJob]] (benchmark exclusion →
     * watermarked exact dedup → quality gate), measured as deployed. */
   def ingestJobStep(spark: SparkSession, rate: Int, feedMs: Long = 20000L,
                     simMsPerRow: Long = 20L,
@@ -678,7 +675,6 @@ object StreamThroughput {
       Seq(feeder), Seq(docs),
       () => Seq(StreamingCurationJobs.runIngestJob(spark, docs.toString,
         benchDocs(spark), root.resolve("work").toString,
-        maxFilesPerTrigger = 10000,
         stateStoreProvider = stateStoreProvider, codec = codec,
         triggerInterval = triggerInterval)),
       spark, Some(topicCounter(spark, codec)))

@@ -1,10 +1,13 @@
 package graft.streaming
 
 import graft.text.{TextAnalysis, TextOps}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.network.util.JavaUtils
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.{ColumnShim, ShingleSetHit}
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType, TimestampType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /**
  * End-to-end streaming CURATION topology — the training-data analogue of
@@ -12,18 +15,15 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
  * operators and wired over the same file-backed topics:
  *
  *  - [[runIngestJob]]: raw docs topic → benchmark n-gram exclusion
- *    ([[decontaminateExclude]]: a Bloom-bitmap pre-filter literal —
- *    mBits-bounded, NOT suite-sized — plus a broadcast anti-join exact
- *    verify of the rare candidates; stateless, and deliberately FIRST:
- *    its clean/candidate split duplicates its upstream subtree per
- *    microbatch, so it runs where upstream is just the decode, see the
- *    method doc) → watermarked exact dedup
- *    ([[StreamingCuration.exactDedup]], bounded state) → Gopher quality
- *    gate ([[TextAnalysis.qualityGate]], stateless per-row rules with
- *    `text` passed through) → `curated` topic. The exclusion commutes
- *    with both later stages — its verdict is a deterministic function
- *    of content, so excluding before dedup drops a duplicate pair
- *    together and excluding before the gate intersects the same sets.
+ *    ([[decontaminateExclude]]: one per-row probe of a broadcast shingle
+ *    set — stateless, one pass, plan size independent of the suite) →
+ *    watermarked exact dedup ([[StreamingCuration.exactDedup]], bounded
+ *    state) → Gopher quality gate ([[TextAnalysis.qualityGate]],
+ *    stateless per-row rules with `text` passed through) → `curated`
+ *    topic. The exclusion commutes with both later stages — its verdict
+ *    is a deterministic function of content, so excluding before dedup
+ *    drops a duplicate pair together and excluding before the gate
+ *    intersects the same sets.
  *  - [[runStatsJob]]: consumes the curated topic — the cross-job
  *    dataflow edge, the T5 shape on the curation side — and emits
  *    windowed token counts ([[StreamingCuration.windowedTokenCounts]],
@@ -32,6 +32,14 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
  * Each query checkpoints under `<workDir>/_checkpoints/<name>`: offsets
  * and dedup/agg state survive restart with exactly-once file sinks —
  * identical recovery semantics to the ad jobs (T6).
+ *
+ * Admission: every curation job reads its topic through [[readDecoded]],
+ * which caps a microbatch by BYTES at one file split per core
+ * (`spark.sql.files.maxPartitionBytes` × `defaultParallelism`, both
+ * session settings). A job that falls behind therefore drains its whole
+ * backlog in the next microbatch, up to what one wave of tasks reads,
+ * and pays the fixed per-batch cost (listing, planning, sink commit)
+ * once per backlog instead of once per handful of files.
  *
  * Scale notes: the only stateful operators are the ingest dedup (state
  * GC'd at the watermark horizon) and the windowed count aggregations
@@ -60,137 +68,70 @@ object StreamingCurationJobs {
 
   /**
    * The stateless benchmark-overlap exclusion: drops every row sharing a
-   * word `shingleWidth`-gram with the benchmark set. Two cooperating
-   * stateless stages (no state, no watermark interaction — the inline
-   * sibling of [[StreamingCuration.decontaminateFlags]]: the flagger
-   * REPORTS matches and needs per-doc dedup state; this FILTERS, which
-   * pure per-microbatch operators can do):
+   * word `shingleWidth`-gram with the benchmark set — the inline sibling
+   * of [[StreamingCuration.decontaminateFlags]] (the flagger REPORTS
+   * matches and needs per-doc dedup state; this FILTERS, which a pure
+   * per-row predicate can do).
    *
-   *  1. a BLOOM pre-filter projection: the benchmark shingles' k salted
-   *     hash positions are folded into ONE fixed-size bitmap literal
-   *     (`mBits/64` longs — a MEMORY-BUDGET knob, NOT a function of the
-   *     eval-suite size; same bitmap/probe SHAPE as
-   *     [[graft.text.Dedup.bloomDedupAudit]], with codegen'd xxhash64
-   *     positions since r13 — see the note at `pos`). A document none of whose
-   *     shingles fully hit the bitmap provably shares no benchmark
-   *     shingle (Bloom admits no false negatives) and passes immediately
-   *     — the overwhelming majority of a clean corpus, at k md5 probes
-   *     per shingle regardless of benchmark size.
-   *  2. exact verification of the (rare) bitmap candidates: a per-
-   *     microbatch LEFT ANTI join against the BROADCAST benchmark
-   *     shingle index (`array_contains` condition — a broadcast
-   *     nested-loop over candidates only). True matches drop; Bloom
-   *     false positives survive, so the output is EXACTLY the old
-   *     `arrays_overlap`-against-literal semantics.
+   * The index is collected to the driver ONCE, here, and shipped once as
+   * a `SparkContext.broadcast` set; each document is then one codegen'd
+   * probe ([[org.apache.spark.sql.graftshim.ShingleSetHit]]) of its
+   * shingles against that set. A document is dropped iff one of its
+   * shingles is in the index — exactly the LEFT ANTI join on
+   * `array_contains(shingles, shingle)` against the same index, without
+   * the join: every microbatch does one scan, one decode and one Spark
+   * job, and no microbatch re-reads the index.
    *
-   * The pre-r9 form folded every distinct benchmark shingle into the
-   * plan as a string-array literal — correct for benchmark-sized sets,
-   * but plan/codegen size grew linearly with the eval suite (megabytes
-   * at a real multi-benchmark suite). Here the plan carries only the
-   * bitmap; the full shingle set travels once as a data-plane BROADCAST
-   * to the anti join. Exactness + the plan-size bound are pinned in
-   * StreamingCurationJobsSpec.
-   *
-   * PLACEMENT: the clean/candidate split is a union of two filters over
-   * `docStream`, and a streaming self-union re-plans the upstream
-   * subtree once per branch — apply this operator EARLY, upstream of
-   * any stateful stage (as [[runIngestJob]] does, right after decode):
-   * there the duplication costs one extra stateless decode pass per
-   * microbatch, while downstream of a stateful dedup it would double
-   * the state stores and change the checkpoint operator layout.
+   * The set is not a plan literal: plan and codegen size would grow
+   * linearly with the eval suite (megabytes at a real multi-benchmark
+   * suite), re-analyzed every trigger. The plan carries only the
+   * broadcast handle and prints only the set size. Exactness and the
+   * plan-size bound are pinned in StreamingCurationJobsSpec.
    *
    * @param benchIndex a [[StreamingCuration.benchShingleIndex]] frame
-   *                   built with the SAME `shingleWidth`; caller-persisted
-   *                   for multi-batch streams (the exact-verify side
-   *                   re-reads it every microbatch)
-   * @param mBits      bitmap width in bits (multiple of 64); defaults to
-   *                   ~16 bits per benchmark shingle (≈0.1% false-positive
-   *                   rate at k=5), clamped to [2^16, 2^23] — 8 KiB to
-   *                   1 MiB of plan literal, whatever the suite size
+   *                   built with the SAME `shingleWidth`; collected once
    */
   def decontaminateExclude(docStream: DataFrame, benchIndex: DataFrame,
-                           shingleWidth: Int = 5, kHashes: Int = 5,
-                           mBits: Option[Int] = None): DataFrame = {
-    val nShingles = benchIndex.count()
-    if (nShingles == 0L) return docStream
-    val m = mBits.getOrElse {
-      var p = 1 << 16
-      while (p < 16L * nShingles && p < (1 << 23)) p <<= 1
-      p
-    }
-    require(m > 0 && m % 64 == 0, s"mBits $m must be a positive multiple of 64")
-    // native XXH64 positions + whole-document probe (r13), NOT the
-    // md5→conv / exists∘forall Column composition: the probe side
-    // evaluates k positions per shingle per DOCUMENT (~180 at the
-    // defaults), and higher-order functions run as INTERPRETED lambdas
-    // with a boxed position array per shingle — that loop was the
-    // measured curation-ingest wall (BASELINE.md r13: the candidate
-    // evaluation ALONE fell behind at 16k docs/s while a double decode,
-    // shingling, dedup and the gate each kept pace). Build and probe
-    // share one hash implementation (graftshim.BloomExpressions), the
-    // only property Bloom correctness needs; membership is decided by
-    // the exact anti join, so output semantics are unchanged (pinned in
-    // StreamingCurationJobsSpec). (graft.text.Dedup.bloomDedupAudit
-    // keeps its md5 scheme: its audit NUMBERS are oracle-replayed in
-    // DuckDB, where XXH64 does not exist.)
-    //
-    // distributed bitmap build: positions group by WORD index and OR into
-    // that word's bits executor-side (bit_or partials combine map-side, so
-    // the shuffle carries ≤ m/64 rows), and the driver collects one
-    // already-OR'd long per non-empty word — a ≤ m/64-row bounded collect
-    // (the same shape as the PQ codebook), with no per-position driver
-    // loop. bit_or is idempotent, so no distinct pass is needed.
-    val words = new Array[Long](m / 64)
-    benchIndex
-      .select(explode(graft.functions.VectorFunctions.bloomPositions(
-        col("shingle"), lit(kHashes), lit(m))).as("p"))
-      .groupBy((col("p") / 64).cast("int").as("w"))
-      .agg(bit_or(expr("shiftleft(1L, cast(p % 64 as int))")).as("bits"))
-      .collect().foreach(r => words(r.getInt(0)) = r.getLong(1))
-    val shingleArr = array_distinct(
-      TextOps.shingles(TextOps.tokens(col("text")), shingleWidth))
-    // ONE codegen'd node per document: loops shingles × k probes over a
-    // primitive long[] reference object, short-circuiting — no lambda
-    // frames, no per-probe allocation, bitmap in the plan exactly once
-    val candidate = graft.functions.VectorFunctions.bloomShingleHit(
-      shingleArr, typedLit(words.toSeq), lit(kHashes))
-    val clean = docStream.filter(!candidate)
-    val verified = docStream.filter(candidate)
-      .withColumn("__sh", shingleArr)
-      .join(broadcast(benchIndex),
-        array_contains(col("__sh"), col("shingle")), "left_anti")
-      .drop("__sh")
-    clean.unionByName(verified)
+                           shingleWidth: Int = 5): DataFrame = {
+    val shingles = new java.util.HashSet[UTF8String]()
+    benchIndex.collect().foreach(r =>
+      shingles.add(UTF8String.fromString(r.getString(0))))
+    if (shingles.isEmpty) return docStream
+    val hit = ShingleSetHit(ColumnShim.expression(
+        TextOps.shingles(TextOps.tokens(col("text")), shingleWidth)),
+      docStream.sparkSession.sparkContext.broadcast(shingles))
+    docStream.filter(!ColumnShim.column(hit))
   }
 
   /** Decode `topic` with the declared schema under the chosen wire
     * codec — `"json"` (text-lines, [[JsonStreams]]; the reference's
     * format and the default) or `"binary"` ([[BinaryTopics]], the
     * measured-throughput path). Same tolerance class either way:
-    * damaged records drop, they never fail the query. */
+    * damaged records drop, they never fail the query. Admission is by
+    * bytes: at most `spark.sql.files.maxPartitionBytes` ×
+    * `defaultParallelism` per microbatch, one file split per core. */
   private def readDecoded(spark: SparkSession, topic: String,
-                          schema: StructType, codec: String,
-                          maxFilesPerTrigger: Int): DataFrame = codec match {
-    case "json" => JsonStreams.decode(
-      spark.readStream.option("maxFilesPerTrigger", maxFilesPerTrigger)
-        .text(topic),
-      schema)
-    case "binary" => BinaryTopics.readTopic(spark, topic, schema,
-      maxFilesPerTrigger)
-    case other => throw new IllegalArgumentException(
-      s"unknown topic codec '$other' (json | binary)")
+                          schema: StructType, codec: String): DataFrame = {
+    val splitBytes = JavaUtils.byteStringAsBytes(
+      spark.conf.get("spark.sql.files.maxPartitionBytes"))
+    val reader = spark.readStream.option("maxBytesPerTrigger",
+      splitBytes * spark.sparkContext.defaultParallelism)
+    codec match {
+      case "json" => JsonStreams.decode(reader.text(topic), schema)
+      case "binary" => BinaryTopics.decode(
+        reader.schema(BinaryTopics.valueSchema).parquet(topic), schema)
+      case other => throw new IllegalArgumentException(
+        s"unknown topic codec '$other' (json | binary)")
+    }
   }
 
   /**
-   * Ingest job: `docsTopic` ([[docSchema]] under `codec`) → dedup →
-   * gate → benchmark exclusion → `<workDir>/curated`. Returns the
-   * started query.
+   * Ingest job: `docsTopic` ([[docSchema]] under `codec`) → benchmark
+   * exclusion → dedup → gate → `<workDir>/curated`. Returns the started
+   * query.
    *
    * @param benchDocs static benchmark frame (doc_id, text) — its shingle
-   *                  index is built once at job build, persisted for the
-   *                  job's lifetime (the exclusion's exact-verify side
-   *                  re-reads it every microbatch), and its Bloom bitmap
-   *                  folded into the plan
+   *                  index is built and broadcast once at job build
    * @param codec     wire codec of BOTH the input topic and the curated
    *                  output topic ("json" default, "binary" the
    *                  fixed-width fast path — see [[BinaryTopics]])
@@ -199,15 +140,13 @@ object StreamingCurationJobs {
                    benchDocs: DataFrame, workDir: String,
                    watermarkDelay: String = "10 seconds",
                    shingleWidth: Int = 5,
-                   maxFilesPerTrigger: Int = 8,
                    stateStoreProvider: Option[String] = None,
                    contractChecks: Seq[graft.contracts.Contracts.Check] =
                      Seq.empty,
                    codec: String = "json",
                    triggerInterval: Option[String] = None): StreamingQuery =
     StateBackend.withProvider(spark, stateStoreProvider) {
-    val decoded = readDecoded(spark, docsTopic, docSchema, codec,
-      maxFilesPerTrigger)
+    val decoded = readDecoded(spark, docsTopic, docSchema, codec)
     // contract gate FIRST (a pure projection — cheapest stage, and a
     // violating row must not reach dedup state or the curated topic);
     // the violators themselves are recorded by the dead-letter twin
@@ -216,16 +155,11 @@ object StreamingCurationJobs {
       if (contractChecks.isEmpty) decoded
       else graft.contracts.Contracts.quarantine(decoded, contractChecks)
         .filter(col("keep")).drop("violations", "keep")
-    // job-scoped cache: the index outlives this builder (every microbatch
-    // of the exclusion's anti join probes it), so it is persisted here
-    // once per STARTED JOB — not per operator call — and released with
-    // the session, the same ownership as the job's checkpoint state
-    val benchIndex = StreamingCuration
-      .benchShingleIndex(benchDocs, shingleWidth)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // exclusion FIRST (see its PLACEMENT note): upstream of the split is
-    // only the decode, so the branch duplication never touches state
-    val cleanRaw = decontaminateExclude(raw, benchIndex, shingleWidth)
+    // exclusion before the stateful dedup: a contaminated row never
+    // reaches dedup state
+    val cleanRaw = decontaminateExclude(raw,
+      StreamingCuration.benchShingleIndex(benchDocs, shingleWidth),
+      shingleWidth)
     val deduped = StreamingCuration.exactDedup(cleanRaw,
       timeCol = "ingest_time", watermarkDelay = watermarkDelay)
     val curated = TextAnalysis.qualityGate(deduped,
@@ -258,12 +192,8 @@ object StreamingCurationJobs {
    */
   def runQuarantineJob(spark: SparkSession, docsTopic: String,
                        contractChecks: Seq[graft.contracts.Contracts.Check],
-                       workDir: String,
-                       maxFilesPerTrigger: Int = 8): StreamingQuery = {
-    val decoded = JsonStreams.decode(
-      spark.readStream.option("maxFilesPerTrigger", maxFilesPerTrigger)
-        .text(docsTopic),
-      docSchema)
+                       workDir: String): StreamingQuery = {
+    val decoded = readDecoded(spark, docsTopic, docSchema, "json")
     JsonStreams.writeTopic(
       graft.contracts.Contracts.quarantine(decoded, contractChecks)
         .filter(!col("keep")).drop("keep"),
@@ -292,11 +222,9 @@ object StreamingCurationJobs {
   def runAnnIngestJob(spark: SparkSession, embTopic: String,
                       model: graft.similarity.Similarity.AnnIndexModel,
                       workDir: String,
-                      maxFilesPerTrigger: Int = 8,
                       codec: String = "json",
                       triggerInterval: Option[String] = None): StreamingQuery = {
-    val raw = readDecoded(spark, embTopic, embSchema, codec,
-      maxFilesPerTrigger)
+    val raw = readDecoded(spark, embTopic, embSchema, codec)
       .filter(col("vec_id").isNotNull && col("embedding").isNotNull &&
         size(col("embedding")) === model.cfg.dim)
     val codes = StreamingCuration.annIngestStream(raw, model)
@@ -329,13 +257,11 @@ object StreamingCurationJobs {
   def runAnnLayoutJob(spark: SparkSession, embTopic: String,
                       corpus: DataFrame, layoutDir: String,
                       checkpoint: String,
-                      maxFilesPerTrigger: Int = 8,
                       codec: String = "json",
                       nCells: Int = 16,
                       triggerInterval: Option[String] = None): StreamingQuery = {
     val dim = corpus.select(size(col("embedding"))).head().getInt(0)
-    val raw = readDecoded(spark, embTopic, embSchema, codec,
-      maxFilesPerTrigger)
+    val raw = readDecoded(spark, embTopic, embSchema, codec)
       .filter(col("vec_id").isNotNull && col("embedding").isNotNull &&
         size(col("embedding")) === dim)
     graft.sources.TableLayout.streamToCellPartitioned(

@@ -56,19 +56,7 @@ object GraftFunctionRegistry {
   val subdist2Function: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
     ternary("graft_subdist2", classOf[SubvectorDist2], SubvectorDist2.apply)
 
-  /** Bloom build/probe pair (r13) — shingle positions for a bitmap
-    * build and the whole-document hit probe, SQL-visible like the rest
-    * of the family. */
-  val bloomPositionsFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    ternary("graft_bloom_positions", classOf[BloomPositions],
-      BloomPositions.apply)
-
-  val bloomHitFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    ternary("graft_bloom_hit", classOf[BloomShingleHit],
-      BloomShingleHit.apply)
-
-  val all = Seq(dotFunction, hammingFunction, l2muFunction, subdist2Function,
-    bloomPositionsFunction, bloomHitFunction)
+  val all = Seq(dotFunction, hammingFunction, l2muFunction, subdist2Function)
 
   /** Install on a live session (the post-build twin of [[GraftExtensions]]). */
   def register(spark: SparkSession): Unit =

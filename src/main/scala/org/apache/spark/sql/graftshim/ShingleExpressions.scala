@@ -1,11 +1,12 @@
 package org.apache.spark.sql.graftshim
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, IntegerType, StringType}
+import org.apache.spark.sql.types.{AbstractDataType, ArrayType, BooleanType, DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
@@ -338,4 +339,64 @@ case class ArrayCountMatching(child: Expression, regex: String)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
+}
+
+/**
+ * True iff any non-null shingle of the array is a member of a broadcast
+ * shingle set — the benchmark-exclusion probe of
+ * `graft.streaming.StreamingCurationJobs.decontaminateExclude`, the
+ * one-pass form of a LEFT ANTI join on `array_contains(shingles,
+ * shingle)` against the same index. NULL array → NULL; NULL elements
+ * never match (the join's `array_contains` never matches them either).
+ *
+ * The set travels as ONE `SparkContext.broadcast` handle made when the
+ * job is built, never as plan data: the plan, and every microbatch's
+ * re-analysis of it, stays O(1) in the suite size, so the string form
+ * shows only the set size. Membership hashes the shingle's UTF-8 bytes
+ * (`UTF8String.hashCode`/`equals`), so a probe allocates nothing.
+ */
+case class ShingleSetHit(child: Expression,
+                         shingleSet: Broadcast[java.util.HashSet[UTF8String]])
+    extends UnaryExpression with ExpectsInputTypes {
+
+  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(StringType))
+  override def dataType: DataType = BooleanType
+  override def nullable: Boolean = true
+  override def prettyName: String = "graft_shingle_hit"
+
+  override def toString: String =
+    s"$prettyName($child, ${shingleSet.value.size} shingles)"
+
+  override protected def nullSafeEval(v: Any): Any =
+    ShingleSetHit.anyMember(v.asInstanceOf[ArrayData], shingleSet.value)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    // the handle is a reference object; its value is read once per
+    // generated-class instance, not once per row
+    val handle = ctx.addReferenceObj("shingleSet", shingleSet,
+      "org.apache.spark.broadcast.Broadcast")
+    val set = ctx.addMutableState("java.util.Set", "shingleSetValue",
+      v => s"$v = (java.util.Set) $handle.value();")
+    defineCodeGen(ctx, ev, a =>
+      s"org.apache.spark.sql.graftshim.ShingleSetHit.anyMember($a, $set)")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object ShingleSetHit {
+  /** Whether any non-null element of `shingles` is in `set` —
+    * short-circuits on the first member. Shared by the interpreted path
+    * and the generated code (static forwarder target). */
+  def anyMember(shingles: ArrayData, set: java.util.Set[UTF8String]): Boolean = {
+    val n = shingles.numElements()
+    var i = 0
+    while (i < n) {
+      if (!shingles.isNullAt(i) && set.contains(shingles.getUTF8String(i)))
+        return true
+      i += 1
+    }
+    false
+  }
 }

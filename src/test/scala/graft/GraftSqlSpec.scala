@@ -201,15 +201,6 @@ class GraftSqlSpec extends SparkSpec {
     assert(spark.sql(
       "SELECT graft_dot(array(1.0d, 2.0d), array(3.0d, 4.0d))")
       .head().getDouble(0) == 11.0)
-    // the r13 Bloom pair: build positions for one shingle, probe a
-    // bitmap with that shingle's own bit set in word 0
-    val pos = spark.sql(
-      "SELECT graft_bloom_positions('abc', 5, 64)").head().getSeq[Long](0)
-    assert(pos.length == 5 && pos.forall(p => p >= 0 && p < 64))
-    val word0 = pos.foldLeft(0L)((w, p) => w | (1L << p.toInt))
-    assert(spark.sql(
-      s"SELECT graft_bloom_hit(array('abc'), array(${word0}L), 5)")
-      .head().getBoolean(0))
     // unknown names are rejected loudly, not silently skipped
     val ex = intercept[IllegalArgumentException] {
       GraftSql.register(spark, sf, Seq("no_such_query"))

@@ -24,9 +24,7 @@ class StreamingCurationJobsSpec extends SparkSpec {
 
   private def jsonLines(df: DataFrame): Seq[String] = df.toJSON.collect().toIndexedSeq
 
-  test("decontaminateExclude: Bloom+anti-join form is exact (even with a " +
-    "pathological bitmap), and the plan stays bitmap-bounded as the " +
-    "benchmark suite grows") {
+  test("decontaminateExclude is exact and its plan is suite-size bounded") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select(col("doc_id"), col("text"), col("lang"), col("source"))
     // amplified benchmark suite: the raw matching docs plus k mutated
@@ -56,27 +54,19 @@ class StreamingCurationJobsSpec extends SparkSpec {
       "test needs both survivors and exclusions")
     def got(df: DataFrame) =
       df.select("doc_id").collect().map(_.getLong(0)).toSet
-    // default bitmap: the Bloom routes almost everything straight through
     assert(got(StreamingCurationJobs.decontaminateExclude(
       docs, index(0))) == expected)
-    // pathological 64-bit bitmap: EVERY doc collides into the candidate
-    // path, so exactness now rests entirely on the anti-join verify —
-    // false positives must survive, true matches must drop
-    assert(got(StreamingCurationJobs.decontaminateExclude(
-      docs, index(0), mBits = Some(64))) == expected)
     // amplified suite, same corpus overlap: output unchanged
     assert(got(StreamingCurationJobs.decontaminateExclude(
       docs, index(8))) == expected)
-    // plan-size bound: at a FIXED memory budget the plan is O(mBits),
-    // not O(suite) — the bitmap WORD COUNT is constant; only the printed
-    // digit length of denser words can drift, so allow 1.5× — while the
-    // old form's literal grows by the full serialized shingle set (~9×
-    // the shingles here)
-    val m = Some(1 << 17)
+    // plan-size bound: the plan carries a broadcast handle and prints
+    // only the set size, so it is O(1) in the suite — while the old
+    // form's literal grows by the full serialized shingle set (~9× the
+    // shingles here)
     val planBase = StreamingCurationJobs.decontaminateExclude(
-      docs, index(0), mBits = m).queryExecution.analyzed.toString.length
+      docs, index(0)).queryExecution.analyzed.toString.length
     val planBig = StreamingCurationJobs.decontaminateExclude(
-      docs, index(8), mBits = m).queryExecution.analyzed.toString.length
+      docs, index(8)).queryExecution.analyzed.toString.length
     assert(planBig < (planBase * 1.5).toInt,
       s"plan grew with the benchmark suite: base=$planBase big=$planBig")
     val oldFormBig = docs.filter(!arrays_overlap(
@@ -84,8 +74,64 @@ class StreamingCurationJobsSpec extends SparkSpec {
         typedLit(index(8).collect().map(_.getString(0)).toSeq)))
       .queryExecution.analyzed.toString.length
     assert(planBig * 3 < oldFormBig,
-      s"bitmap form should be far smaller than the literal form at an " +
-        s"amplified suite: bitmap=$planBig literal=$oldFormBig")
+      s"broadcast form should be far smaller than the literal form at an " +
+        s"amplified suite: broadcast=$planBig literal=$oldFormBig")
+  }
+
+  test("runIngestJob drains a 32-file backlog in one microbatch, one scan") {
+    val root = Files.createTempDirectory("graft-curation-admission")
+    val topic = root.resolve("docs")
+    val work = root.resolve("work").toString
+    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+      .select(col("doc_id"), col("text"), col("lang"), col("source"))
+      .withColumn("ingest_time", timestamp_millis(lit(3600000L) + col("doc_id")))
+    val bench = docs.filter(col("doc_id") % 100 === 7)
+      .select(col("doc_id"), col("text"))
+    // the whole backlog lands before the query starts
+    val lines = jsonLines(docs)
+    (0 until 32).foreach(f => writeWave(topic, f"part$f%02d.json",
+      lines.indices.filter(_ % 32 == f).map(lines)))
+    // no trailing no-data batch (the query reads this conf at start), so
+    // the last execution is the batch that read the backlog
+    val noData = "spark.sql.streaming.noDataMicroBatches.enabled"
+    spark.conf.set(noData, "false")
+    val ingest = try StreamingCurationJobs.runIngestJob(
+      spark, topic.toString, bench, work) finally spark.conf.unset(noData)
+    val plan = try {
+      ingest.processAllAvailable()
+      ingest.asInstanceOf[
+          org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+        .streamingQuery.lastExecution.executedPlan
+    } finally ingest.stop()
+
+    val fed = ingest.recentProgress.filter(_.numInputRows > 0)
+    assert(fed.map(_.numInputRows).toSeq == Seq(lines.size.toLong),
+      s"backlog split over microbatches: ${fed.map(_.numInputRows).mkString(",")}")
+    // one file scan, no self-union, no per-batch nested-loop join
+    import org.apache.spark.sql.execution.{FileSourceScanExec, UnionExec}
+    import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
+    assert(plan.collect { case s: FileSourceScanExec => s }.size == 1, plan)
+    assert(plan.collect {
+      case u: UnionExec => u
+      case j: BroadcastNestedLoopJoinExec => j
+    }.isEmpty, plan)
+
+    // output = batch gate + exclusion over the same docs
+    val benchShingles = Dedup.shingleArrays(bench, 5)
+      .select(explode(col("sh")).as("shingle")).distinct()
+      .collect().map(_.getString(0)).toSeq
+    val expected = TextAnalysis.qualityGate(docs, passThrough = Seq("text"))
+      .filter(col("keep"))
+      .filter(!arrays_overlap(
+        array_distinct(TextOps.shingles(TextOps.tokens(col("text")), 5)),
+        typedLit(benchShingles)))
+      .select("doc_id").collect().map(_.getLong(0)).toSet
+    val got = spark.read.schema(StreamingCurationJobs.curatedSchema)
+      .json(s"$work/curated").select("doc_id")
+      .collect().map(_.getLong(0)).toSeq
+    assert(expected.nonEmpty && got.toSet == expected,
+      s"only-stream=${got.toSet -- expected} only-batch=${expected -- got.toSet}")
+    assert(got.length == got.toSet.size)
   }
 
   test("ingest + chained stats jobs reproduce the batch curation stages") {

@@ -193,37 +193,40 @@ class VectorFunctionsSpec extends SparkSpec {
     assert(pos.getLong(0) == 3L, s"all-(+Inf) tie returned ${pos.get(0)}")
   }
 
-  test("BloomShingleHit: build/probe hashes agree, an empty bitmap is " +
-    "never a hit (not a divide-by-zero), null shingle array is null") {
-    import graft.functions.VectorFunctions.{bloomPositions, bloomShingleHit}
-    val m = 256
-    // build the bitmap from one shingle's own positions → probing that
-    // shingle must hit; a different shingle almost surely must not
-    val pos = Seq(Tuple1("needle in the hay")).toDF("s")
-      .select(bloomPositions(col("s"), lit(5), lit(m)).as("p"))
-      .head().getSeq[Long](0)
-    val words = new Array[Long](m / 64)
-    pos.foreach(p => words((p / 64).toInt) |= (1L << (p % 64).toInt))
-    val bm = typedLit(words.toSeq)
-    val out = Seq(
-      (1L, Seq("needle in the hay")),
-      (2L, Seq("something else entirely")),
-      (3L, Seq.empty[String]),
-      (4L, null.asInstanceOf[Seq[String]]))
-      .toDF("id", "sh")
-      .select(col("id"), bloomShingleHit(col("sh"), bm, lit(5)).as("hit"))
-      .collect().map(r => r.getLong(0) ->
-        (if (r.isNullAt(1)) None else Some(r.getBoolean(1)))).toMap
-    assert(out(1L).contains(true), "the built shingle must probe as a hit")
-    assert(out(2L).contains(false))
-    assert(out(3L).contains(false))
-    assert(out(4L).isEmpty, "null shingle array must stay null")
-    // empty bitmap: no bits set -> false for every document, never an
-    // ArithmeticException (r13 review finding)
-    val empty = Seq((1L, Seq("anything"))).toDF("id", "sh")
-      .select(bloomShingleHit(col("sh"), typedLit(Seq.empty[Long]),
-        lit(5)).as("hit")).head()
-    assert(!empty.isNullAt(0) && !empty.getBoolean(0))
+  test("ShingleSetHit: codegen and interpreted eval agree (nulls, CJK)") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateMutableProjection
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.graftshim.ShingleSetHit
+    import org.apache.spark.sql.types.{ArrayType, StringType}
+    import org.apache.spark.unsafe.types.UTF8String
+    val u = UTF8String.fromString _
+    val set = new java.util.HashSet[UTF8String]()
+    Seq("needle in the hay stack", "東京 大阪 京都 奈良 神戸").foreach(t => set.add(u(t)))
+    val hit = ShingleSetHit(BoundReference(0, ArrayType(StringType), nullable = true),
+      spark.sparkContext.broadcast(set))
+    // strict codegen: GenerateMutableProjection throws on a compile
+    // failure instead of falling back to interpreted eval
+    val generated = GenerateMutableProjection.generate(Seq(hit))
+    def arr(xs: String*) = new GenericArrayData(xs.map(x => if (x == null) null else u(x)))
+    val cases = Seq[(Any, Any)](
+      arr("a b c d e", "needle in the hay stack") -> true,
+      arr("東京 大阪 京都 奈良 神戸") -> true,
+      arr("東京 大阪 京都 奈良 横浜", "needle in the hay") -> false,
+      arr(null, "東京 大阪 京都 奈良 神戸") -> true,
+      arr(null) -> false,
+      arr() -> false,
+      (null, null))
+    cases.foreach { case (in, want) =>
+      val row = InternalRow(in)
+      val interpreted = hit.eval(row)
+      val out = generated(row)
+      val codegen = if (out.isNullAt(0)) null else out.getBoolean(0)
+      assert(interpreted == want && codegen == want, s"$in: " +
+        s"interpreted=$interpreted codegen=$codegen want=$want")
+    }
+    assert(hit.toString.endsWith("2 shingles)"), hit.toString)
   }
 
   test("PqNearestCode: an all-NaN vector quantizes to code 0 with NaN " +
