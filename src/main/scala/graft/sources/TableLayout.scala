@@ -357,7 +357,7 @@ object TableLayout {
       .partitionBy(partitionCols: _*)
       .outputMode("append")
     trigger.foreach(w.trigger)
-    w.start()
+    graft.streaming.StateBackend.start(assigned.sparkSession, w, dir, checkpoint)
   }
 
   /**
@@ -446,13 +446,13 @@ object TableLayout {
   def streamToDatePartitioned(df: DataFrame, dir: String, checkpoint: String,
                               tsCol: String = "ts")
       : org.apache.spark.sql.streaming.StreamingQuery =
-    df.withColumn(dateCol, to_date(col(tsCol)))
-      .writeStream.format("parquet")
-      .option("path", dir)
-      .option("checkpointLocation", checkpoint)
-      .partitionBy(dateCol)
-      .outputMode("append")
-      .start()
+    graft.streaming.StateBackend.start(df.sparkSession,
+      df.withColumn(dateCol, to_date(col(tsCol)))
+        .writeStream.format("parquet")
+        .option("path", dir)
+        .option("checkpointLocation", checkpoint)
+        .partitionBy(dateCol)
+        .outputMode("append"), dir, checkpoint)
 
   /**
    * Land a documents STREAM into the by-source layout — the ingest half
@@ -476,7 +476,7 @@ object TableLayout {
       .partitionBy("source")
       .outputMode("append")
     trigger.foreach(w.trigger)
-    w.start()
+    graft.streaming.StateBackend.start(docs.sparkSession, w, dir, checkpoint)
   }
 
   /**

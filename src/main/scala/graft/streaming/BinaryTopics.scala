@@ -68,7 +68,7 @@ object BinaryTopics {
       .option("checkpointLocation", checkpoint)
       .outputMode("append")
     trigger.foreach(w.trigger)
-    w.start()
+    StateBackend.start(value.sparkSession, w, dir, checkpoint)
   }
 
   /** Encode + sink in one call — the codec twin of

@@ -94,7 +94,7 @@ object JsonStreams {
       .option("checkpointLocation", checkpoint)
       .outputMode("append")
     trigger.foreach(w.trigger)
-    w.start()
+    StateBackend.start(df.sparkSession, w, dir, checkpoint)
   }
 
   /**
@@ -104,12 +104,11 @@ object JsonStreams {
    */
   def writeValueTopic(value: DataFrame, dir: String, checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    value.writeStream
+    StateBackend.start(value.sparkSession, value.writeStream
       .format("text")
       .option("path", dir)
       .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .start()
+      .outputMode("append"), dir, checkpoint)
 
   /** File-backed topic source with the declared (not inferred) schema. */
   def readTopic(spark: SparkSession, dir: String, schema: StructType): DataFrame =

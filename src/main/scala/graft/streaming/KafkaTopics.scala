@@ -60,6 +60,6 @@ object KafkaTopics {
       .option("topic", topic)
       .option("checkpointLocation", checkpoint)
       .outputMode("append")
-    writer.start()
+    StateBackend.start(df.sparkSession, writer, checkpoint)
   }
 }

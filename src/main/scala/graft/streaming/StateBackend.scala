@@ -1,6 +1,8 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
 
 /**
  * Streaming state-backend selection. The reference deployment runs its
@@ -23,6 +25,11 @@ import org.apache.spark.sql.SparkSession
  * Exercised (not just cited) by StreamingJobsSpec's restart-recovery test
  * running the full main-job topology — interval join + two windowed aggs,
  * stop, restart, exactly-once — under RocksDB.
+ *
+ * Checkpoint files go through [[start]], which every file-topic, layout
+ * and Kafka sink in the engine starts its query with: on a local
+ * file system it selects Spark's FileSystem-API checkpoint manager for
+ * the query (see the method for why).
  */
 object StateBackend {
 
@@ -39,15 +46,52 @@ object StateBackend {
    * prior conf afterwards. `None` = leave the session default untouched.
    */
   def withProvider[A](spark: SparkSession, provider: Option[String])
-                     (body: => A): A = provider match {
+                     (body: => A): A = withConf(spark, Key, provider)(body)
+
+  private val ManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
+
+  /** FQCN of Spark's FileSystem-API checkpoint file manager. */
+  private val FileSystemCheckpoints = "org.apache.spark.sql.execution." +
+    "streaming.checkpointing.FileSystemBasedCheckpointFileManager"
+
+  /**
+   * Starts `writer`, whose checkpoint and sink paths are `dirs`. When all
+   * of them are on the local file system and the session names no
+   * checkpoint manager of its own, the query commits its offset, commit,
+   * state and sink-log files through the FileSystem API instead of
+   * Spark's default FileContext API. Without Hadoop's native library,
+   * the FileContext commit of one local file (create, then rename, with
+   * its `.crc` twin) forks `chmod` twice and `readlink` eight times —
+   * ten process forks per file; the FileSystem rename is one rename(2)
+   * call, atomic on POSIX, so the commit protocol keeps its exactly-once
+   * guarantee, and only the two `chmod` forks remain. Both managers
+   * write the same files, so a checkpoint restarts under either. A file
+   * source's own log (`sources/<n>`) is created when the query thread
+   * initializes its sources, after `start()` returns, so it keeps the
+   * session's manager.
+   */
+  def start(spark: SparkSession, writer: DataStreamWriter[_],
+            dirs: String*): StreamingQuery = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val local = dirs.forall(d => new Path(d).getFileSystem(conf).getScheme == "file")
+    val manager =
+      if (local && spark.conf.getOption(ManagerKey).isEmpty) Some(FileSystemCheckpoints)
+      else None
+    withConf(spark, ManagerKey, manager)(writer.start())
+  }
+
+  /** Runs `body` with session conf `key` set to `value`, restoring the
+    * prior value afterwards; `None` leaves the conf untouched. */
+  private def withConf[A](spark: SparkSession, key: String,
+                          value: Option[String])(body: => A): A = value match {
     case None => body
-    case Some(cls) =>
-      val old = spark.conf.getOption(Key)
-      spark.conf.set(Key, cls)
+    case Some(v) =>
+      val old = spark.conf.getOption(key)
+      spark.conf.set(key, v)
       try body
       finally old match {
-        case Some(v) => spark.conf.set(Key, v)
-        case None    => spark.conf.unset(Key)
+        case Some(o) => spark.conf.set(key, o)
+        case None    => spark.conf.unset(key)
       }
   }
 }
