@@ -61,7 +61,7 @@ object Bench {
       // drop the warm-dir memos and cached plans: the warmup exists to
       // compile codegen classes, not to occupy executor storage while the
       // timed dir is measured. localCheckpoint blocks (the cluster
-      // propagation rounds) are NOT in the cache manager — they free only
+      // contraction rounds) are NOT in the cache manager — they free only
       // when ContextCleaner collects their RDDs, so nudge a GC cycle
       // rather than carry them nondeterministically into the timed loop.
       graft.queries.SharedFrames.clear(spark)

@@ -1371,7 +1371,7 @@ object DataPipelineQueries {
   val dedupEmbedding: (SparkSession, String) => DataFrame =
     (spark, sfDir) => SharedFrames.memo(spark, sfDir, "embeddingPairs") {
       // persisted pair table, same rationale as dedupMinhash: cluster
-      // resolution re-reads it every propagation round
+      // resolution re-reads it every contraction round
       Similarity.signLshNearDupPairs(embs(spark, sfDir), threshold = 0.42)
     }
 
@@ -1392,7 +1392,7 @@ object DataPipelineQueries {
 
   /** Near-dup clusters over the MinHash pair graph (the memoized
     * dedup_minhash result is the edge input, so the pair pipeline runs
-    * once for both queries). The propagation loop runs actions at build
+    * once for both queries). The contraction rounds run actions at build
     * time — memoized for the same reason as the other heavy builders. */
   val dedupClusters: (SparkSession, String) => DataFrame =
     memoized("dedupClusters") { (spark, sfDir) =>
@@ -1400,14 +1400,14 @@ object DataPipelineQueries {
     }
 
   /** Histogram over the memoized cluster membership — runs right after
-    * dedup_clusters in registry order so the propagation never re-runs. */
+    * dedup_clusters in registry order so the contraction never re-runs. */
   def clusterSizeHist(spark: SparkSession, sfDir: String): DataFrame =
     Dedup.clusterSizeHistogram(dedupClusters(spark, sfDir))
 
   /** Leakage-safe split over the memoized cluster membership — near-dup
     * clusters cross the train/eval boundary atomically
     * ([[TextAnalysis.clusterSafeSplit]]); registry order puts it after
-    * dedup_clusters so the propagation never re-runs. */
+    * dedup_clusters so the contraction never re-runs. */
   def docSplitLeakageSafe(spark: SparkSession, sfDir: String): DataFrame =
     TextAnalysis.clusterSafeSplit(docs(spark, sfDir),
       dedupClusters(spark, sfDir))
@@ -1452,7 +1452,7 @@ object DataPipelineQueries {
    * non-canonical member of a MinHash near-dup cluster, (4) is not
    * benchmark-contaminated, and (5) is not itself a benchmark/eval doc.
    * Every stage is the already-verified operator (shared/memoized
-   * frames, so the pair pipeline and cluster propagation run once per
+   * frames, so the pair pipeline and cluster contraction run once per
    * session); the id-joins are all equi-joins on unique keys — semi/anti
    * shapes Catalyst plans as broadcast/hash joins, no fan-out.
    */
@@ -1749,7 +1749,7 @@ object DataPipelineQueries {
   /** Semantic near-dup cluster resolution — `Dedup.clusters` over the
     * sign-LSH embedding pair graph: the endgame of embedding dedup, a
     * canonical vector per semantic duplicate group. Memoized: the
-    * propagation rounds run actions at build time (same reason as
+    * contraction rounds run actions at build time (same reason as
     * dedup_clusters). */
   val embeddingClusters: (SparkSession, String) => DataFrame =
     memoized("embeddingClusters") { (spark, sfDir) =>
@@ -2888,7 +2888,7 @@ object DataPipelineQueries {
 
   /** Connected components over the minhash pair graph via a recursive
     * CTE (transitive label closure — fine at oracle scale; the Spark side
-    * is the iterative distributed propagation). */
+    * is the iterative distributed star contraction). */
   val dedupClustersOracle: String =
     s"""WITH RECURSIVE mhpairs AS (SELECT doc_a, doc_b FROM (
        |$dedupMinhashOracle

@@ -11,7 +11,7 @@ import org.apache.spark.storage.StorageLevel
  *
  * Concurrency: the global monitor guards only the MAP; each entry is a
  * cell that builds its frame under its own lock. Heavy builders (the
- * cluster-propagation loop, the IVF k-means fit — both run Spark actions
+ * cluster-contraction loop, the IVF k-means fit — both run Spark actions
  * at build time) therefore never serialize unrelated queries behind the
  * object monitor; two threads demanding the same key race to the cell
  * and the loser blocks on that cell alone. Nested memoization (a builder

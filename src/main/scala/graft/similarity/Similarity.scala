@@ -2771,34 +2771,6 @@ object Similarity {
       .filter(col("rank") <= topK)
   }
 
-  /** DuckDB oracle for [[ivfPqTopKRefined]]: the ADC oracle nested at
-    * `rerankDepth`, its shortlist re-scored by exact rounded cosine with
-    * the brute-force tie rule. */
-  def ivfPqTopKRefinedOracleSql(nQueries: Int = 8, topK: Int = 5,
-                                rerankDepth: Int = 100,
-                                nCells: Int = 16, nProbe: Int = 4,
-                                ivfSalt: String = "ivf",
-                                cfg: PqConfig = pqDefaults,
-                                ivfRounds: Int = IvfTrainRounds): String =
-    s"""WITH shortlist AS (SELECT query_id, neighbor_id FROM (
-       |${ivfPqTopKOracleSql(nQueries, rerankDepth, nCells, nProbe, ivfSalt,
-          cfg, ivfRounds)}
-       |) z),
-       |ex AS (SELECT vec_id,
-       |  list_transform(embedding, x -> CAST(x AS DOUBLE)) v FROM embeddings),
-       |exn AS (SELECT vec_id, v,
-       |  sqrt(list_sum(list_transform(v, x -> x*x))) nrm FROM ex),
-       |sc AS (SELECT s.query_id, s.neighbor_id,
-       |  round(list_sum(list_transform(range(len(q.v)),
-       |      i -> q.v[i+1] * n.v[i+1])) / (q.nrm * n.nrm), 6) AS cosine
-       |  FROM shortlist s
-       |  JOIN exn q ON q.vec_id = s.query_id
-       |  JOIN exn n ON n.vec_id = s.neighbor_id)
-       |SELECT query_id, neighbor_id, cosine, CAST(rank AS INT) AS rank
-       |FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-       |  ORDER BY cosine DESC, neighbor_id) rank FROM sc)
-       |WHERE rank <= $topK""".stripMargin
-
   /**
    * Batch-standing-query IVF-PQ — [[ivfPqTopK]] with the LUT-TABLE
    * strategy of [[adcTopKBatch]]: the per-query lookup tables travel as

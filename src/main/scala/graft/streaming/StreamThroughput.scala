@@ -30,6 +30,10 @@ import java.nio.file.{Files, Path}
  * deployed, file-sink I/O included); `p95BatchMs` the 95th-percentile
  * microbatch duration across the job's queries.
  *
+ * A job's ceiling is found by [[climb]]: steps at doubling rates until
+ * one falls behind (the job is the limit), its feeder lands under 90% of
+ * the offered rows (the feeder is the limit) or the ladder tops out.
+ *
  * Event time is decoupled from wall time (`simMsPerRow`) so watermarks,
  * window closes, and join-state GC run at a realistic event-time pace
  * regardless of the wall rate — state stays bounded by the same horizon
@@ -39,7 +43,9 @@ import java.nio.file.{Files, Path}
 object StreamThroughput {
 
   /** One rate step's measurements. `eventsIn` counts rows actually
-    * landed on the input topics (impressions + clicks, or docs).
+    * landed on the input topics (impressions + clicks, or docs); `fed`
+    * counts the rows the rate-driven feeder landed on its own topic
+    * (impressions, docs, embeddings), the rows `rate` offers.
     * `ratePerSec` is end-to-end events/s over feed+drain (a lower bound
     * on capacity whether or not the step kept pace); [[sustainedRate]]
     * is the throughput the step demonstrates: the offered load when the
@@ -48,18 +54,63 @@ object StreamThroughput {
                               feedMs: Long, drainMs: Long,
                               ratePerSec: Double, p95BatchMs: Long,
                               batches: Int, sustained: Boolean,
+                              fed: Long,
                               stateRows: Long = -1L,
                               stateBytes: Long = -1L) {
     def sustainedRate: Double =
       if (sustained) eventsIn * 1000.0 / math.max(feedMs, 1L) else ratePerSec
+    /** Landed share of the rows offered over the feed window: below 1
+      * when the feeder itself could not produce `rate` rows/s. */
+    def feedShare: Double = fed * 1000.0 / math.max(rate.toLong * feedMs, 1L)
     def json: String =
-      s"""{"job":"$job","rate":$rate,"events_in":$eventsIn,""" +
+      s"""{"job":"$job","rate":$rate,"events_in":$eventsIn,"fed":$fed,""" +
         s""""feed_ms":$feedMs,"drain_ms":$drainMs,""" +
         s""""events_per_sec":${math.round(ratePerSec)},""" +
         s""""sustained_events_per_sec":${math.round(sustainedRate)},""" +
         s""""p95_batch_ms":$p95BatchMs,"batches":$batches,""" +
         s""""state_rows":$stateRows,"state_bytes":$stateBytes,""" +
         s""""sustained":$sustained}"""
+  }
+
+  /** A job's measured ceiling: the ladder's steps and why it stopped —
+    * `"job"` (a step fell behind), `"feed"` (the feeder landed too little
+    * of the offered rate, so `value` is a lower bound) or `"ladder"` (the
+    * top step still kept pace). `value` is the highest sustained rate. */
+  final case class Ceiling(steps: Seq[StepResult], bound: String) {
+    def value: Long = steps.filter(_.sustained)
+      .map(s => math.round(s.sustainedRate)).foldLeft(0L)(math.max)
+  }
+
+  /** The ladder: 2,000 events/s, doubled per step, at most 8 steps
+    * (2k → 256k). A step whose feeder landed under 90% of its offer
+    * measured the feeder, not the job. */
+  private val LadderStartRate = 2000
+  private val LadderSteps = 8
+  private val MinFeedShare = 0.9
+
+  /** Why `step` ends a ladder, if it does: falling behind names the job
+    * even when the feeder also ran short (the job could not keep pace
+    * with less than it was offered). */
+  private def stopReason(step: StepResult): Option[String] =
+    if (!step.sustained) Some("job")
+    else if (step.feedShare < MinFeedShare) Some("feed")
+    else None
+
+  /** Climbs the ladder with `step` (one measured step per rate) until a
+    * step stops it or the steps run out — the highest input rate the job
+    * sustains, found by measurement instead of a hand-set rate list. */
+  def climb(step: Int => StepResult): Ceiling = {
+    @scala.annotation.tailrec
+    def go(rate: Int, done: Vector[StepResult]): Ceiling =
+      if (done.size == LadderSteps) Ceiling(done, "ladder")
+      else {
+        val s = step(rate)
+        stopReason(s) match {
+          case Some(bound) => Ceiling(done :+ s, bound)
+          case None => go(rate * 2, done :+ s)
+        }
+      }
+    go(LadderStartRate, Vector.empty)
   }
 
   /** Backlog-drain budget for a step to count as sustained: a quarter of
@@ -78,6 +129,15 @@ object StreamThroughput {
   private def p95(xs: Seq[Long]): Long =
     if (xs.isEmpty) 0L
     else xs.sorted.apply(math.min(xs.size - 1, (xs.size * 95) / 100))
+
+  /** Runs `body` in a fresh temp dir and deletes the dir afterwards: a
+    * step's topics, checkpoints and sinks hold every row it fed, which
+    * reaches gigabytes at the top of a ladder. */
+  private def inTempDir[A](prefix: String)(body: Path => A): A = {
+    val root = Files.createTempDirectory(prefix)
+    try body(root)
+    finally org.apache.commons.io.FileUtils.deleteQuietly(root.toFile)
+  }
 
   /** Blocks until the feeder's first file commit so the consumer's
     * source directory exists (the file source lists it at start). */
@@ -173,7 +233,8 @@ object StreamThroughput {
       consumers.foreach(_.processAllAvailable())
       consumers.foreach(_.processAllAvailable())
       val drainEnd = System.nanoTime()
-      val eventsIn = topics.map(countFn).sum
+      val landed = topics.map(countFn)
+      val eventsIn = landed.sum
       val progress = consumers.flatMap(_.recentProgress.toSeq)
       val batchMs = progress
         .flatMap(p => Option(p.durationMs.get("triggerExecution")).map(_.toLong))
@@ -210,7 +271,7 @@ object StreamThroughput {
         ratePerSec = eventsIn * 1000.0 / math.max(feedWallMs + drainMs, 1L),
         p95BatchMs = p95(batchMs), batches = batchMs.size,
         sustained = drainMs <= drainBudgetMs(feedMs, tailAllowanceMs),
-        stateRows = stateRows, stateBytes = stateBytes)
+        fed = landed.head, stateRows = stateRows, stateBytes = stateBytes)
     } finally {
       feeders.foreach(f => if (f.isActive) f.stop())
       consumers.foreach(_.stop())
@@ -224,83 +285,30 @@ object StreamThroughput {
   def mainJobStep(spark: SparkSession, rate: Int, feedMs: Long = 20000L,
                   simMsPerRow: Long = 20L,
                   stateStoreProvider: Option[String] = None,
-                  skewShare: Double = 0.0): StepResult = {
-    val root = Files.createTempDirectory("graft-sthr-main")
-    val impr = root.resolve("impressions")
-    val clk = root.resolve("clicks")
-    val (iStream, cStream) = StreamingEventGenerator.events(spark, rate,
-      startMs = 0L, simMsPerRow = simMsPerRow, skewShare = skewShare)
-    // coalesce: the rate source defaults to one partition per core; at
-    // these volumes 32 files per topic per microbatch is pure listing
-    // overhead for the consumer
-    val f1 = JsonStreams.writeValueTopic(JsonStreams.encode(iStream).coalesce(2),
-      impr.toString, root.resolve("_ck/impr").toString)
-    val f2 = JsonStreams.writeValueTopic(JsonStreams.encode(cStream).coalesce(2),
-      clk.toString, root.resolve("_ck/clk").toString)
-    // 12s tail: three chained queries drained twice in topology order,
-    // each with a multi-second state-commit batch floor — measured
-    // rate-independent (no backlog component) across 5k..80k ev/s
-    runStep(if (skewShare > 0) s"main-skew$skewShare" else "main",
-      rate, feedMs, tailAllowanceMs = 12000L,
-      Seq(f1, f2), Seq(impr, clk),
-      () => StreamingJobs.runMainJob(spark, impr.toString, clk.toString,
-        root.resolve("work").toString, maxFilesPerTrigger = 10000,
-        stateStoreProvider = stateStoreProvider),
-      spark)
-  }
-
-  /** Raw event stream in [[StreamingJobs.eventSchema]] shape (the
-    * attribution job's input): ~20% clicks, per-row hash user pick, and
-    * the hot-USER regime — `skewShare` of all rows routed to one user.
-    * Unlike the main job (join keyed on unique impression_id, aggs
-    * absorbed map-side), the attribution topology keys
-    * flatMapGroupsWithState state on user_id, so a hot user is the
-    * documented pathological key: its buffer cannot finalize while its
-    * events keep arriving. */
-  def rawEventStream(spark: SparkSession, rowsPerSecond: Int,
-                     startMs: Long = 0L, simMsPerRow: Long = 20L,
-                     users: Int = 5000, skewShare: Double = 0.0,
-                     hotUser: Long = 1L): DataFrame =
-    spark.readStream.format("rate")
-      .option("rowsPerSecond", rowsPerSecond)
-      .load()
-      .select(col("value").as("idx"))
-      .select(
-        col("idx").as("event_id"),
-        timestamp_millis(lit(startMs) + col("idx") * simMsPerRow).as("ts"),
-        when(lit(skewShare) > 0.0 &&
-            (pmod(xxhash64(col("idx"), lit(31)), lit(1000000L)).cast("double")
-              / 1000000.0) < skewShare, lit(hotUser))
-          .otherwise(pmod(xxhash64(col("idx"), lit(32)), lit(users)) + 2)
-          .as("user_id"),
-        when(pmod(xxhash64(col("idx"), lit(33)), lit(5)) === 0, "click")
-          .otherwise("view").as("event_type"))
-
-  /** One attribution-job step: [[rawEventStream]] → events topic →
-    * [[StreamingJobs.runAttributionJob]] (streaming as-of join:
-    * buffer-until-finalized flatMapGroupsWithState keyed on user_id),
-    * measured as deployed. The state axis is the point: at high
-    * `skewShare` one user receives most rows and its key stays
-    * continuously active. */
-  def attributionJobStep(spark: SparkSession, rate: Int,
-                         feedMs: Long = 20000L, simMsPerRow: Long = 20L,
-                         skewShare: Double = 0.0,
-                         progressive: Boolean = false): StepResult = {
-    val root = Files.createTempDirectory("graft-sthr-attr")
-    val ev = root.resolve("events")
-    val feeder = JsonStreams.writeValueTopic(
-      JsonStreams.encode(rawEventStream(spark, rate,
-        simMsPerRow = simMsPerRow, skewShare = skewShare)).coalesce(2),
-      ev.toString, root.resolve("_ck/ev").toString)
-    val name = (if (progressive) "attrib-prog" else "attrib") +
-      (if (skewShare > 0) s"-skew$skewShare" else "")
-    runStep(name, rate, feedMs, tailAllowanceMs = 8000L,
-      Seq(feeder), Seq(ev),
-      () => Seq(StreamingJobs.runAttributionJob(spark, ev.toString,
-        root.resolve("work").toString, maxFilesPerTrigger = 10000,
-        progressive = progressive)),
-      spark)
-  }
+                  skewShare: Double = 0.0): StepResult =
+    inTempDir("graft-sthr-main") { root =>
+      val impr = root.resolve("impressions")
+      val clk = root.resolve("clicks")
+      val (iStream, cStream) = StreamingEventGenerator.events(spark, rate,
+        startMs = 0L, simMsPerRow = simMsPerRow, skewShare = skewShare)
+      // coalesce: the rate source defaults to one partition per core; at
+      // these volumes 32 files per topic per microbatch is pure listing
+      // overhead for the consumer
+      val f1 = JsonStreams.writeValueTopic(JsonStreams.encode(iStream).coalesce(2),
+        impr.toString, root.resolve("_ck/impr").toString)
+      val f2 = JsonStreams.writeValueTopic(JsonStreams.encode(cStream).coalesce(2),
+        clk.toString, root.resolve("_ck/clk").toString)
+      // 12s tail: three chained queries drained twice in topology order,
+      // each with a multi-second state-commit batch floor — measured
+      // rate-independent (no backlog component) across 5k..80k ev/s
+      runStep(if (skewShare > 0) s"main-skew$skewShare" else "main",
+        rate, feedMs, tailAllowanceMs = 12000L,
+        Seq(f1, f2), Seq(impr, clk),
+        () => StreamingJobs.runMainJob(spark, impr.toString, clk.toString,
+          root.resolve("work").toString, maxFilesPerTrigger = 10000,
+          stateStoreProvider = stateStoreProvider),
+        spark)
+    }
 
   /** Synthetic embedding stream off the `rate` source, in
     * [[StreamingCurationJobs.embSchema]] shape: deterministic
@@ -317,11 +325,6 @@ object StreamThroughput {
           (pmod(xxhash64(col("value"), j), lit(1000L)).cast("double")
             / lit(500.0)) - lit(1.0)).as("embedding"))
 
-  /** One ANN-ingest step: [[embStream]] → embeddings topic →
-    * [[StreamingCurationJobs.runAnnIngestJob]] (stateless assignment
-    * against a frozen IVF+PQ model) → codes topic, measured as
-    * deployed. The frozen model comes from the static sf0.001 corpus —
-    * the serving snapshot the arrivals fold into. */
   /** Feeder + record counter for a topic under `codec` — the wire halves
     * a step swaps as one unit ([[BinaryTopics]] vs [[JsonStreams]]). */
   private def feedTopic(df: DataFrame, codec: String,
@@ -336,56 +339,28 @@ object StreamThroughput {
     if (codec == "binary") t => BinaryTopics.countTopic(spark, t.toString)
     else t => spark.read.text(t.toString).count()
 
+  /** One ANN-ingest step: [[embStream]] → embeddings topic →
+    * [[StreamingCurationJobs.runAnnIngestJob]] (stateless assignment
+    * against a frozen IVF+PQ model) → codes topic, measured as
+    * deployed. The frozen model comes from the static sf0.001 corpus —
+    * the serving snapshot the arrivals fold into. */
   def annJobStep(spark: SparkSession, rate: Int, feedMs: Long = 20000L,
                  corpusDir: String = "/root/testdata/sf0.001",
-                 codec: String = "json",
-                 triggerInterval: Option[String] = None): StepResult = {
-    val root = Files.createTempDirectory("graft-sthr-ann")
-    val emb = root.resolve("embeddings")
-    val model = graft.similarity.Similarity.freezeAnnIndex(
-      spark.read.parquet(s"$corpusDir/embeddings.parquet"))
-      .getOrElse(sys.error(s"no freezable corpus in $corpusDir"))
-    val feeder = feedTopic(embStream(spark, rate), codec,
-      emb, root.resolve("_ck/emb"))
-    val label = (if (codec == "json") "ann" else s"ann-$codec") +
-      triggerInterval.map(t => s"-t${t.replace(" ", "")}").getOrElse("")
-    runStep(label,
-      rate, feedMs,
-      tailAllowanceMs = 3000L +
-        triggerInterval.map(_ => 3000L).getOrElse(0L),
-      Seq(feeder), Seq(emb),
-      () => Seq(StreamingCurationJobs.runAnnIngestJob(spark, emb.toString,
-        model, root.resolve("work").toString,
-        codec = codec, triggerInterval = triggerInterval)),
-      spark, Some(topicCounter(spark, codec)))
-  }
-
-  /** One ANN-LAYOUT step: [[embStream]] → embeddings topic →
-    * [[StreamingCurationJobs.runAnnLayoutJob]] (frozen-cell assignment
-    * against the static corpus → live cell segments), measured as
-    * deployed — the disk-index sibling of [[annJobStep]]. */
-  def annLayoutStep(spark: SparkSession, rate: Int, feedMs: Long = 20000L,
-                    corpusDir: String = "/root/testdata/sf0.001",
-                    codec: String = "json",
-                    triggerInterval: Option[String] = None): StepResult = {
-    val root = Files.createTempDirectory("graft-sthr-annlayout")
-    val emb = root.resolve("embeddings")
-    val corpus = spark.read.parquet(s"$corpusDir/embeddings.parquet")
-    val feeder = feedTopic(embStream(spark, rate), codec,
-      emb, root.resolve("_ck/emb"))
-    val label = (if (codec == "json") "ann-layout"
-      else s"ann-layout-$codec") +
-      triggerInterval.map(t => s"-t${t.replace(" ", "")}").getOrElse("")
-    runStep(label, rate, feedMs,
-      tailAllowanceMs = 3000L +
-        triggerInterval.map(_ => 3000L).getOrElse(0L),
-      Seq(feeder), Seq(emb),
-      () => Seq(StreamingCurationJobs.runAnnLayoutJob(spark, emb.toString,
-        corpus, root.resolve("segments").toString,
-        root.resolve("_ck/segments").toString,
-        codec = codec, triggerInterval = triggerInterval)),
-      spark, Some(topicCounter(spark, codec)))
-  }
+                 codec: String = "json"): StepResult =
+    inTempDir("graft-sthr-ann") { root =>
+      val emb = root.resolve("embeddings")
+      val model = graft.similarity.Similarity.freezeAnnIndex(
+        spark.read.parquet(s"$corpusDir/embeddings.parquet"))
+        .getOrElse(sys.error(s"no freezable corpus in $corpusDir"))
+      val feeder = feedTopic(embStream(spark, rate), codec,
+        emb, root.resolve("_ck/emb"))
+      runStep(if (codec == "json") "ann" else s"ann-$codec",
+        rate, feedMs, tailAllowanceMs = 3000L,
+        Seq(feeder), Seq(emb),
+        () => Seq(StreamingCurationJobs.runAnnIngestJob(spark, emb.toString,
+          model, root.resolve("work").toString, codec = codec)),
+        spark, Some(topicCounter(spark, codec)))
+    }
 
   // ── end-to-end latency receipts (r14) ──────────────────────────────
   //
@@ -487,90 +462,83 @@ object StreamThroughput {
     * the throughput feed's rows all drop at the gates by design, so a
     * latency sample needs survivors). */
   def ingestLatencyStep(spark: SparkSession, rate: Int,
-                        feedMs: Long = 20000L,
-                        triggerInterval: Option[String] = None)
-      : LatencyResult = {
-    val root = Files.createTempDirectory("graft-lat-ingest")
-    val docs = root.resolve("docs")
-    val work = root.resolve("work")
-    val feeder = feedTopic(docStreamCurated(spark, rate), "json", docs,
-      root.resolve("_ck/docs"))
-    awaitTopic(docs)
-    val consumer = StreamingCurationJobs.runIngestJob(spark, docs.toString,
-      benchDocs(spark), work.toString, triggerInterval = triggerInterval)
-    try {
-      Thread.sleep(feedMs)
-      feeder.stop()
-      consumer.processAllAvailable()
-    } finally {
-      if (feeder.isActive) feeder.stop()
-      consumer.stop()
+                        feedMs: Long = 20000L): LatencyResult =
+    inTempDir("graft-lat-ingest") { root =>
+      val docs = root.resolve("docs")
+      val work = root.resolve("work")
+      val feeder = feedTopic(docStreamCurated(spark, rate), "json", docs,
+        root.resolve("_ck/docs"))
+      awaitTopic(docs)
+      val consumer = StreamingCurationJobs.runIngestJob(spark, docs.toString,
+        benchDocs(spark), work.toString)
+      try {
+        Thread.sleep(feedMs)
+        feeder.stop()
+        consumer.processAllAvailable()
+      } finally {
+        if (feeder.isActive) feeder.stop()
+        consumer.stop()
+      }
+      val in = withMtime(
+        spark.read.text(docs.toString).select(
+          get_json_object(col("value"), "$.doc_id").cast("long").as("doc_id")),
+        mtimeFrame(spark, docs), "__in")
+        .groupBy(col("doc_id")).agg(min(col("__in")).as("__in"))
+      val out = withMtime(
+        spark.read.text(s"$work/curated").select(
+          get_json_object(col("value"), "$.doc_id").cast("long").as("doc_id")),
+        mtimeFrame(spark, work.resolve("curated")), "__out")
+        .groupBy(col("doc_id")).agg(min(col("__out")).as("__out"))
+      // The sample is SURVIVORS-only (the deployed job's gates still run);
+      // require a majority to reach the sink so a gate change that drops
+      // most of the feed fails the receipt loudly rather than silently
+      // measuring a handful of lucky rows (ADVICE r14).
+      val (nIn, nOut) = (in.count(), out.count())
+      require(nOut * 2 >= nIn,
+        s"ingestLatencyStep: only $nOut of $nIn fed docs reached the sink - " +
+          "the feed no longer clears the deployed gates; fix docStreamCurated " +
+          "or the gate knobs before trusting this latency sample")
+      latencyOf(out.join(in, "doc_id")
+        .select((col("__out") - col("__in")).as("__lat")), "ingest", rate)
     }
-    val in = withMtime(
-      spark.read.text(docs.toString).select(
-        get_json_object(col("value"), "$.doc_id").cast("long").as("doc_id")),
-      mtimeFrame(spark, docs), "__in")
-      .groupBy(col("doc_id")).agg(min(col("__in")).as("__in"))
-    val out = withMtime(
-      spark.read.text(s"$work/curated").select(
-        get_json_object(col("value"), "$.doc_id").cast("long").as("doc_id")),
-      mtimeFrame(spark, work.resolve("curated")), "__out")
-      .groupBy(col("doc_id")).agg(min(col("__out")).as("__out"))
-    // The sample is SURVIVORS-only (the deployed job's gates still run);
-    // require a majority to reach the sink so a gate change that drops
-    // most of the feed fails the receipt loudly rather than silently
-    // measuring a handful of lucky rows (ADVICE r14).
-    val (nIn, nOut) = (in.count(), out.count())
-    require(nOut * 2 >= nIn,
-      s"ingestLatencyStep: only $nOut of $nIn fed docs reached the sink - " +
-        "the feed no longer clears the deployed gates; fix docStreamCurated " +
-        "or the gate knobs before trusting this latency sample")
-    latencyOf(out.join(in, "doc_id")
-      .select((col("__out") - col("__in")).as("__lat")),
-      "ingest" + triggerInterval.map(t => s"-t${t.replace(" ", "")}")
-        .getOrElse(""), rate)
-  }
 
   /** Per-record landed→sink-visible latency for the ANN codes job. */
   def annLatencyStep(spark: SparkSession, rate: Int,
                      feedMs: Long = 20000L,
-                     corpusDir: String = "/root/testdata/sf0.001",
-                     triggerInterval: Option[String] = None)
-      : LatencyResult = {
-    val root = Files.createTempDirectory("graft-lat-ann")
-    val emb = root.resolve("embeddings")
-    val work = root.resolve("work")
-    val model = graft.similarity.Similarity.freezeAnnIndex(
-      spark.read.parquet(s"$corpusDir/embeddings.parquet"))
-      .getOrElse(sys.error(s"no freezable corpus in $corpusDir"))
-    val feeder = feedTopic(embStream(spark, rate), "json", emb,
-      root.resolve("_ck/emb"))
-    awaitTopic(emb)
-    val consumer = StreamingCurationJobs.runAnnIngestJob(spark, emb.toString,
-      model, work.toString, triggerInterval = triggerInterval)
-    try {
-      Thread.sleep(feedMs)
-      feeder.stop()
-      consumer.processAllAvailable()
-    } finally {
-      if (feeder.isActive) feeder.stop()
-      consumer.stop()
+                     corpusDir: String = "/root/testdata/sf0.001")
+      : LatencyResult =
+    inTempDir("graft-lat-ann") { root =>
+      val emb = root.resolve("embeddings")
+      val work = root.resolve("work")
+      val model = graft.similarity.Similarity.freezeAnnIndex(
+        spark.read.parquet(s"$corpusDir/embeddings.parquet"))
+        .getOrElse(sys.error(s"no freezable corpus in $corpusDir"))
+      val feeder = feedTopic(embStream(spark, rate), "json", emb,
+        root.resolve("_ck/emb"))
+      awaitTopic(emb)
+      val consumer = StreamingCurationJobs.runAnnIngestJob(spark, emb.toString,
+        model, work.toString)
+      try {
+        Thread.sleep(feedMs)
+        feeder.stop()
+        consumer.processAllAvailable()
+      } finally {
+        if (feeder.isActive) feeder.stop()
+        consumer.stop()
+      }
+      val in = withMtime(
+        spark.read.text(emb.toString).select(
+          get_json_object(col("value"), "$.vec_id").cast("long").as("vec_id")),
+        mtimeFrame(spark, emb), "__in")
+        .groupBy(col("vec_id")).agg(min(col("__in")).as("__in"))
+      val out = withMtime(
+        spark.read.text(s"$work/codes").select(
+          get_json_object(col("value"), "$.vec_id").cast("long").as("vec_id")),
+        mtimeFrame(spark, work.resolve("codes")), "__out")
+        .groupBy(col("vec_id")).agg(min(col("__out")).as("__out"))
+      latencyOf(out.join(in, "vec_id")
+        .select((col("__out") - col("__in")).as("__lat")), "ann", rate)
     }
-    val in = withMtime(
-      spark.read.text(emb.toString).select(
-        get_json_object(col("value"), "$.vec_id").cast("long").as("vec_id")),
-      mtimeFrame(spark, emb), "__in")
-      .groupBy(col("vec_id")).agg(min(col("__in")).as("__in"))
-    val out = withMtime(
-      spark.read.text(s"$work/codes").select(
-        get_json_object(col("value"), "$.vec_id").cast("long").as("vec_id")),
-      mtimeFrame(spark, work.resolve("codes")), "__out")
-      .groupBy(col("vec_id")).agg(min(col("__out")).as("__out"))
-    latencyOf(out.join(in, "vec_id")
-      .select((col("__out") - col("__in")).as("__lat")),
-      "ann" + triggerInterval.map(t => s"-t${t.replace(" ", "")}")
-        .getOrElse(""), rate)
-  }
 
   /**
    * Per-WINDOW landed→sink-visible latency for the main ad job: a ctr
@@ -587,68 +555,68 @@ object StreamThroughput {
   def mainLatencyStep(spark: SparkSession, rate: Int,
                       feedMs: Long = 20000L,
                       simMsPerRow: Long = 20L,
-                      skewShare: Double = 0.0): LatencyResult = {
-    val root = Files.createTempDirectory("graft-lat-main")
-    val impr = root.resolve("impressions")
-    val clk = root.resolve("clicks")
-    val work = root.resolve("work")
-    val (iStream, cStream) = StreamingEventGenerator.events(spark, rate,
-      startMs = 0L, simMsPerRow = simMsPerRow, skewShare = skewShare)
-    val f1 = JsonStreams.writeValueTopic(JsonStreams.encode(iStream).coalesce(2),
-      impr.toString, root.resolve("_ck/impr").toString)
-    val f2 = JsonStreams.writeValueTopic(JsonStreams.encode(cStream).coalesce(2),
-      clk.toString, root.resolve("_ck/clk").toString)
-    Seq(impr, clk).foreach(awaitTopic(_))
-    val consumers = StreamingJobs.runMainJob(spark, impr.toString,
-      clk.toString, work.toString, maxFilesPerTrigger = 10000)
-    try {
-      Thread.sleep(feedMs)
-      Seq(f1, f2).foreach(_.stop())
-      consumers.foreach(_.processAllAvailable())
-      consumers.foreach(_.processAllAvailable())
-    } finally {
-      Seq(f1, f2).foreach(f => if (f.isActive) f.stop())
-      consumers.foreach(_.stop())
+                      skewShare: Double = 0.0): LatencyResult =
+    inTempDir("graft-lat-main") { root =>
+      val impr = root.resolve("impressions")
+      val clk = root.resolve("clicks")
+      val work = root.resolve("work")
+      val (iStream, cStream) = StreamingEventGenerator.events(spark, rate,
+        startMs = 0L, simMsPerRow = simMsPerRow, skewShare = skewShare)
+      val f1 = JsonStreams.writeValueTopic(JsonStreams.encode(iStream).coalesce(2),
+        impr.toString, root.resolve("_ck/impr").toString)
+      val f2 = JsonStreams.writeValueTopic(JsonStreams.encode(cStream).coalesce(2),
+        clk.toString, root.resolve("_ck/clk").toString)
+      Seq(impr, clk).foreach(awaitTopic(_))
+      val consumers = StreamingJobs.runMainJob(spark, impr.toString,
+        clk.toString, work.toString, maxFilesPerTrigger = 10000)
+      try {
+        Thread.sleep(feedMs)
+        Seq(f1, f2).foreach(_.stop())
+        consumers.foreach(_.processAllAvailable())
+        consumers.foreach(_.processAllAvailable())
+      } finally {
+        Seq(f1, f2).foreach(f => if (f.isActive) f.stop())
+        consumers.foreach(_.stop())
+      }
+      // Reconstruct the job's windows with Spark's OWN window() over the
+      // job's OWN width constant — not a hardcoded date_trunc — so a
+      // future width/alignment change in runMainJob moves this side too
+      // (ADVICE r14: a mismatch here silently emptied the in/out join).
+      val in = withMtime(
+        spark.read.text(impr.toString).select(
+          get_json_object(col("value"), "$.campaign_id").as("campaign_id"),
+          get_json_object(col("value"), "$.event_timestamp").cast("long")
+            .as("__ts")),
+        mtimeFrame(spark, impr), "__in")
+        .select(col("campaign_id"),
+          window(timestamp_millis(col("__ts")),
+            StreamingJobs.DefaultWindowLength)
+            .getField("start").as("window_start"),
+          col("__in"))
+        .groupBy(col("window_start"), col("campaign_id"))
+        .agg(max(col("__in")).as("__in"))
+      val out = withMtime(
+        spark.read.text(s"$work/ctr_results").select(
+          get_json_object(col("value"), "$.campaign_id").as("campaign_id"),
+          get_json_object(col("value"), "$.window_start").cast("timestamp")
+            .as("window_start")),
+        mtimeFrame(spark, work.resolve("ctr_results")), "__out")
+        .groupBy(col("window_start"), col("campaign_id"))
+        .agg(min(col("__out")).as("__out"))
+      val joined = out.join(in, Seq("window_start", "campaign_id"))
+        .select((col("__out") - col("__in")).as("__lat"))
+      val res = latencyOf(joined,
+        if (skewShare > 0) s"main-skew$skewShare" else "main", rate)
+      // A sink with closed windows but an EMPTY in/out join is a
+      // measurement-code mismatch (window reconstruction drifted from the
+      // job), not "no windows closed" — fail loudly instead of reporting
+      // rows=0 (ADVICE r14).
+      if (res.nRows == 0L && !spark.read.text(s"$work/ctr_results").isEmpty)
+        sys.error("mainLatencyStep: ctr sink has rows but the window-keyed " +
+          "in/out join is empty - the step's window reconstruction no " +
+          "longer matches runMainJob's windowing")
+      res
     }
-    // Reconstruct the job's windows with Spark's OWN window() over the
-    // job's OWN width constant — not a hardcoded date_trunc — so a
-    // future width/alignment change in runMainJob moves this side too
-    // (ADVICE r14: a mismatch here silently emptied the in/out join).
-    val in = withMtime(
-      spark.read.text(impr.toString).select(
-        get_json_object(col("value"), "$.campaign_id").as("campaign_id"),
-        get_json_object(col("value"), "$.event_timestamp").cast("long")
-          .as("__ts")),
-      mtimeFrame(spark, impr), "__in")
-      .select(col("campaign_id"),
-        window(timestamp_millis(col("__ts")),
-          StreamingJobs.DefaultWindowLength)
-          .getField("start").as("window_start"),
-        col("__in"))
-      .groupBy(col("window_start"), col("campaign_id"))
-      .agg(max(col("__in")).as("__in"))
-    val out = withMtime(
-      spark.read.text(s"$work/ctr_results").select(
-        get_json_object(col("value"), "$.campaign_id").as("campaign_id"),
-        get_json_object(col("value"), "$.window_start").cast("timestamp")
-          .as("window_start")),
-      mtimeFrame(spark, work.resolve("ctr_results")), "__out")
-      .groupBy(col("window_start"), col("campaign_id"))
-      .agg(min(col("__out")).as("__out"))
-    val joined = out.join(in, Seq("window_start", "campaign_id"))
-      .select((col("__out") - col("__in")).as("__lat"))
-    val res = latencyOf(joined,
-      if (skewShare > 0) s"main-skew$skewShare" else "main", rate)
-    // A sink with closed windows but an EMPTY in/out join is a
-    // measurement-code mismatch (window reconstruction drifted from the
-    // job), not "no windows closed" — fail loudly instead of reporting
-    // rows=0 (ADVICE r14).
-    if (res.nRows == 0L && !spark.read.text(s"$work/ctr_results").isEmpty)
-      sys.error("mainLatencyStep: ctr sink has rows but the window-keyed " +
-        "in/out join is empty - the step's window reconstruction no " +
-        "longer matches runMainJob's windowing")
-    res
-  }
 
   /** One curation-ingest step: [[docStream]] → docs topic →
     * [[StreamingCurationJobs.runIngestJob]] (benchmark exclusion →
@@ -656,27 +624,18 @@ object StreamThroughput {
   def ingestJobStep(spark: SparkSession, rate: Int, feedMs: Long = 20000L,
                     simMsPerRow: Long = 20L,
                     stateStoreProvider: Option[String] = None,
-                    codec: String = "json",
-                    triggerInterval: Option[String] = None): StepResult = {
-    val root = Files.createTempDirectory("graft-sthr-ingest")
-    val docs = root.resolve("docs")
-    val feeder = feedTopic(docStream(spark, rate, simMsPerRow = simMsPerRow),
-      codec, docs, root.resolve("_ck/docs"))
-    val label = (if (codec == "json") "ingest" else s"ingest-$codec") +
-      triggerInterval.map(t => s"-t${t.replace(" ", "")}").getOrElse("")
-    // single-query topology: one batch of tail is enough; a configured
-    // processing-time trigger adds one interval of legitimately-queued
-    // work at feed end (a TOPOLOGY constant, unlike observed batch
-    // time), covered by a fixed grace for the ≤3s intervals used here
-    runStep(label,
-      rate, feedMs,
-      tailAllowanceMs = 3000L +
-        triggerInterval.map(_ => 3000L).getOrElse(0L),
-      Seq(feeder), Seq(docs),
-      () => Seq(StreamingCurationJobs.runIngestJob(spark, docs.toString,
-        benchDocs(spark), root.resolve("work").toString,
-        stateStoreProvider = stateStoreProvider, codec = codec,
-        triggerInterval = triggerInterval)),
-      spark, Some(topicCounter(spark, codec)))
-  }
+                    codec: String = "json"): StepResult =
+    inTempDir("graft-sthr-ingest") { root =>
+      val docs = root.resolve("docs")
+      val feeder = feedTopic(docStream(spark, rate, simMsPerRow = simMsPerRow),
+        codec, docs, root.resolve("_ck/docs"))
+      // single-query topology: one batch of tail is enough
+      runStep(if (codec == "json") "ingest" else s"ingest-$codec",
+        rate, feedMs, tailAllowanceMs = 3000L,
+        Seq(feeder), Seq(docs),
+        () => Seq(StreamingCurationJobs.runIngestJob(spark, docs.toString,
+          benchDocs(spark), root.resolve("work").toString,
+          stateStoreProvider = stateStoreProvider, codec = codec)),
+        spark, Some(topicCounter(spark, codec)))
+    }
 }

@@ -18,21 +18,35 @@ import java.sql.Timestamp
  * streaming form is the same buffer-until-finalized shape as
  * [[StreamingFunnel]]/[[StreamingTransitions]] (the neighbor dependency
  * is the same): per-key events from BOTH sides accumulate in
- * `flatMapGroupsWithState` state; when the watermark passes the key's
- * last event + `finalizeDelayMs`, the buffer runs once through the
- * shared [[AsOfJoin.matchSeq]] chain — the batch operator's exact sort
- * and tie rules — and one attributed row per right event is emitted
- * append-mode.
+ * `flatMapGroupsWithState` state and run through the shared
+ * [[AsOfJoin.matchSeq]] chain — the batch operator's exact sort and tie
+ * rules — emitting one attributed row per right event, append-mode.
  *
- * State budget: sessionization-class — each key's events inside its
- * activity horizon, GC'd at finalize; same bound and the same
- * pathological-key caveat as the streaming funnel. The horizon is the
- * trade: a right event arriving after its key finalized starts a fresh
- * buffer and cannot see the previous epoch's left rows (the streaming
- * dedup documents the identical bounded-state trade); size
- * `watermarkDelay`/`finalizeDelayMs` to the attribution window.
- * Batch parity (cross-microbatch late left rows, equal-ts ties,
- * unmatched rights) is pinned in StreamingAsOfJoinSpec.
+ * Finalization is by watermark PREFIX: every batch emits the matches of
+ * the buffered right events older than the watermark (no in-bound
+ * arrival can change them — any future event has ts ≥ watermark) and
+ * prunes the buffer to the live suffix plus the newest below-watermark
+ * left rows (the carry candidates future rights still need; ties at the
+ * max ts all retained for matchSeq's id rule). A key idle for
+ * `finalizeDelayMs` past its last event times out and flushes the rest.
+ * State is therefore bounded by the WATERMARK HORIZON per key, not the
+ * key's lifetime: a continuously-active key (one user receiving most of
+ * the stream) never reaches the inactivity timeout, and an
+ * inactivity-only buffer would grow with the stream (measured: 8.6 MB
+ * after one 20 s feed at 90% single-user share, BASELINE.md r15).
+ * Pruning costs no output under the watermark contract: an event with
+ * ts below the watermark is dropped by the stateful operator's
+ * late-input filter before any buffer, and any pruned left is strictly
+ * older than the carried newest-below-watermark left, which an in-bound
+ * right can never need (BASELINE.md r16 "Progressive as-of finalize":
+ * identical to the inactivity-only form at every lateness rate/depth
+ * measured). The horizon is the trade: a right event arriving after its
+ * key finalized starts a fresh buffer and cannot see the previous
+ * epoch's left rows (the streaming dedup documents the identical
+ * bounded-state trade); size `watermarkDelay`/`finalizeDelayMs` to the
+ * attribution window. Batch parity (cross-microbatch late left rows,
+ * equal-ts ties, unmatched rights, lateness, restart) is pinned in
+ * StreamingAsOfJoinSpec.
  *
  * Null handling: rows with a null key, null event time, or null id are
  * DROPPED on both sides before the typed cast. The JSON decode layer
@@ -60,50 +74,11 @@ object StreamingAsOfJoin {
    *         `matched_<leftId>`, left ts as `matched_ts`, lag in ms) —
    *         the batch operator's exact output shape
    */
-  /**
-   * @param progressive finalize the buffer PREFIX below the watermark
-   *   every batch instead of waiting for key inactivity — the
-   *   hot-key remedy (r15): a continuously-active key (one user
-   *   receiving most of the stream) NEVER reaches the inactivity
-   *   timeout, so its buffer grows with the stream's lifetime
-   *   (measured: 8.6 MB after one 20 s feed at 90% single-user share —
-   *   linear forever). With `progressive` on, each batch emits matches
-   *   for right events older than the watermark (no in-bound arrival
-   *   can change them: any future event has ts ≥ watermark) and prunes
-   *   the buffer to the live suffix plus the latest below-watermark
-   *   left rows (the carry candidates future rights still need; ties at
-   *   the max ts all retained for matchSeq's id rule) — state bounded
-   *   by the WATERMARK HORIZON per key, not the key's lifetime, and
-   *   attribution latency drops from key-inactivity to watermark lag.
-   *   The trade, SETTLED by the r16 lateness drill (BASELINE.md r16
-   *   "Progressive as-of finalize" + the lateness-bound spec case): there
-   *   is NO output divergence from the default form under the
-   *   watermark contract. An event arriving with ts below the
-   *   watermark is dropped by the stateful operator's late-input
-   *   filter BEFORE either mode's buffer — the class progressive
-   *   pruning could have missed never reaches the default buffer
-   *   either — and for every admitted right the carry rule is
-   *   sufficient: any pruned left is strictly older than the carried
-   *   newest-below-watermark left, which an in-bound right
-   *   (ts ≥ watermark) can never need. Measured at lateness rates
-   *   1/5/10% × depths 0.5/2/4× the watermark delay:
-   *   diff-vs-batch-oracle IDENTICAL between modes at every cell, zero
-   *   at in-bound depth (BASELINE.md r16). Progressive is therefore the
-   *   DEFAULT since r17 — at 100 TB a continuously-hot key under the
-   *   inactivity-only form grows state with the stream's lifetime, and
-   *   the drill proved the bounded form costs nothing in output.
-   *   `progressive = false` remains the knob for consumers that key on
-   *   the flush-batched emission shape (nothing emitted for a key until
-   *   its inactivity flush); goldens are pinned under the new default
-   *   AND the legacy form (StreamingAsOfJoinSpec — both modes stay
-   *   batch-exact).
-   */
   def lastBeforeStream(left: DataFrame, right: DataFrame,
                        key: String, ts: String,
                        leftId: String, rightId: String,
                        watermarkDelay: String = "10 seconds",
-                       finalizeDelayMs: Long = 10000L,
-                       progressive: Boolean = true): DataFrame = {
+                       finalizeDelayMs: Long = 10000L): DataFrame = {
     val spark = left.sparkSession
     import spark.implicits._
     // null key/ts/id rows dropped (see scaladoc): one poison row must not
@@ -148,7 +123,7 @@ object StreamingAsOfJoin {
             val buf = fresh ::: old
             val wm = state.getCurrentWatermarkMs()
             val (emit, keep) =
-              if (!progressive || wm <= 0) (Nil, buf)
+              if (wm <= 0) (Nil, buf)
               else {
                 // prefix-finalize: everything below the watermark is
                 // immutable under in-bound arrivals — emit its rights,

@@ -135,8 +135,7 @@ object StreamingJobs {
                         watermarkDelay: String = "10 seconds",
                         finalizeDelayMs: Long = 10000L,
                         maxFilesPerTrigger: Int = 8,
-                        stateStoreProvider: Option[String] = None,
-                        progressive: Boolean = true): StreamingQuery =
+                        stateStoreProvider: Option[String] = None): StreamingQuery =
     StateBackend.withProvider(spark, stateStoreProvider) {
     val ev = JsonStreams.decode(
       spark.readStream.option("maxFilesPerTrigger", maxFilesPerTrigger)
@@ -146,8 +145,7 @@ object StreamingJobs {
     val attributed = StreamingAsOfJoin.lastBeforeStream(
       side("view"), side("click"),
       key = "user_id", ts = "ts", leftId = "event_id", rightId = "event_id",
-      watermarkDelay = watermarkDelay, finalizeDelayMs = finalizeDelayMs,
-      progressive = progressive)
+      watermarkDelay = watermarkDelay, finalizeDelayMs = finalizeDelayMs)
     JsonStreams.writeValueTopic(JsonStreams.encode(attributed),
       s"$workDir/attributions", s"$workDir/_checkpoints/attributions")
   }

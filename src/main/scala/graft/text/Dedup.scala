@@ -675,42 +675,27 @@ object Dedup {
    * near-dup evidence (from any of the pair operators) is only half the
    * job; a pipeline must then group transitively-connected documents and
    * pick ONE canonical representative per group to keep. This computes
-   * connected components over the pair graph by distributed min-label
-   * propagation: every clustered doc gets `cluster_id` = the smallest
-   * doc_id reachable through near-dup edges, plus the cluster size and an
-   * `is_canonical` flag (the doc a dedup pass would keep). Documents with
-   * no near-dup edge are singletons and are not emitted.
+   * connected components over the pair graph: every clustered doc gets
+   * `cluster_id` = the smallest doc_id reachable through near-dup edges,
+   * plus the cluster size and an `is_canonical` flag (the doc a dedup
+   * pass would keep). Documents with no near-dup edge are singletons and
+   * are not emitted.
    *
-   * Two algorithms, same output, selected by `algorithm`:
-   *
-   *  - `"star"` (default): alternating large-star/small-star contraction
-   *    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-   *    SoCC '14) — converges in O(log n) rounds on ANY topology,
-   *    including adversarial long chains, with one groupBy + one
-   *    equi-join per phase (all hash shuffles on node id, never anything
-   *    pairwise). The 100 TB-safe default.
-   *  - `"propagation"`: min-label propagation — rounds = graph diameter.
-   *    On the clique-like graphs LSH actually emits (most members linked
-   *    directly) the folded first round usually converges immediately,
-   *    making it the cheaper choice when the caller KNOWS diameter is
-   *    tiny.
-   *
-   * Both carry only a per-round convergence COUNT on the driver, never
-   * data, and both truncate lineage per round (see the localCheckpoint
-   * note below). DedupSpec pins star-vs-propagation output equality on
-   * seeded random graphs and the O(log n)-vs-O(diameter) round counts on
-   * a long chain.
+   * The components come from alternating large-star/small-star
+   * contraction (Kiveris et al., "Connected Components in MapReduce and
+   * Beyond", SoCC '14): O(log n) rounds on ANY topology, including
+   * adversarial long chains, with one groupBy + one equi-join per phase
+   * (all hash shuffles on node id, never anything pairwise). It carries
+   * only a per-round convergence check on the driver, never data, and
+   * truncates lineage per round ([[starContraction]]). DedupSpec pins the
+   * output against a union-find reference on seeded random graphs and the
+   * O(log n) round count on a long chain.
    *
    * @param pairs near-dup pairs (doc_a, doc_b); doc_a < doc_b not required
    */
   def clusters(pairs: DataFrame, aCol: String = "doc_a",
-               bCol: String = "doc_b", algorithm: String = "star"): DataFrame = {
-    val labels = algorithm match {
-      case "star"        => starLabels(pairs, aCol, bCol)
-      case "propagation" => propagationLabels(pairs, aCol, bCol)
-      case other => throw new IllegalArgumentException(
-        s"unknown clusters algorithm '$other' (star | propagation)")
-    }
+               bCol: String = "doc_b"): DataFrame = {
+    val labels = starLabels(pairs, aCol, bCol)
     // labels frame is checkpoint-backed and read twice (membership +
     // sizes); the registry memoizes the whole builder
     val sizes = labels.groupBy(col("cluster_id")).agg(count(lit(1)).as("cluster_size"))
@@ -749,7 +734,12 @@ object Dedup {
    * minimum of its closed neighborhood; SMALL-STAR connects each node
    * and its smaller neighbors to the smallest of them. Each phase is one
    * hash aggregation + one equi-join on node id; convergence is two
-   * anti-join counts (edge set unchanged).
+   * anti-join counts (edge set unchanged). Each round's edges are
+   * localCheckpointed: the next round reads them several times, and a
+   * plan that kept the whole round chain would grow per round until
+   * Catalyst chokes on it (OOM on plan stringification) long before the
+   * data does. A long-running cluster job would use reliable
+   * checkpointing (executor loss kills localCheckpoint RDDs).
    */
   private[graft] def starContraction(canonical: DataFrame): (DataFrame, Int) = {
     var edges = canonical.localCheckpoint(true)
@@ -793,54 +783,6 @@ object Dedup {
     star.select(col("a").as("doc_id"), col("b").as("cluster_id"))
       .union(star.select(col("b").as("doc_id"), col("b").as("cluster_id")))
       .groupBy(col("doc_id")).agg(min(col("cluster_id")).as("cluster_id"))
-  }
-
-  /** Min-label propagation labels — see [[clusters]] for when this beats
-    * the star default. */
-  private def propagationLabels(pairs: DataFrame, aCol: String,
-                                bCol: String): DataFrame = {
-    // symmetrized edge list; tiny relative to the corpus (post-LSH pairs),
-    // persisted because every propagation round re-joins it
-    val edges = graft.queries.SharedFrames.aux(
-      pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
-        .union(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
-        .distinct())
-    // Each round MUST truncate lineage, not just cache: `labels` feeds
-    // both the neighbor join and the unchanged-label carry-through, so
-    // the logical plan doubles per round — persist alone keeps the full
-    // tree and Catalyst chokes (exponential plan, OOM on stringification)
-    // long before the data does. Eager localCheckpoint materializes the
-    // round and resets the plan to a leaf; ContextCleaner drops
-    // unreferenced round blocks. A long-running cluster job would use
-    // reliable checkpointing (executor loss kills localCheckpoint RDDs).
-    // initialization folds in the first propagation round: label₀ =
-    // min(self, direct neighbors) — min-label converges from any
-    // per-node value ≥ the component minimum, and LSH near-dup
-    // components are mostly direct cliques, so this usually leaves just
-    // the one confirming round
-    var labels = edges.groupBy(col("src"))
-      .agg(min(col("dst")).as("__mn"))
-      .select(col("src").as("doc_id"),
-        least(col("src"), col("__mn")).as("cluster_id"))
-      .localCheckpoint(true)
-    var changed = 1L
-    while (changed > 0) {
-      val viaNeighbors = edges
-        .join(labels.withColumnRenamed("doc_id", "__nid"),
-          col("dst") === col("__nid"))
-        .groupBy(col("src")).agg(min(col("cluster_id")).as("__nbl"))
-      // inner join: every labeled node appears as src in the symmetrized
-      // edge list, so viaNeighbors covers the whole key set by invariant
-      val next = labels
-        .join(viaNeighbors, col("doc_id") === col("src"))
-        .select(col("doc_id"), col("cluster_id"),
-          least(col("cluster_id"), col("__nbl")).as("__next"))
-        .localCheckpoint(true)
-      changed = next.filter(col("__next") < col("cluster_id")).count()
-      labels = next.select(col("doc_id"), col("__next").as("cluster_id"))
-    }
-    edges.unpersist()
-    labels
   }
 
   /**

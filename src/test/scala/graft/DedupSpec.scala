@@ -325,33 +325,30 @@ class DedupSpec extends SparkSpec {
     assert(math.abs(j - 4.0 / 6.0) < 1e-6, s"got $j")
   }
 
-  for (algo <- Seq("star", "propagation")) {
-    test(s"clusters($algo): transitive pairs collapse to min-label components") {
-      // chain 5-3-8 (via two pairs) plus isolated pair (10, 12): two
-      // components, labels = min member, canonical = the min member
-      val pairs = Seq((3L, 5L), (3L, 8L), (10L, 12L)).toDF("doc_a", "doc_b")
-      val out = Dedup.clusters(pairs, algorithm = algo).collect()
-        .map(r => (r.getAs[Long]("doc_id"),
-          (r.getAs[Long]("cluster_id"), r.getAs[Long]("cluster_size"),
-            r.getAs[Boolean]("is_canonical")))).toMap
-      assert(out.keySet == Set(3L, 5L, 8L, 10L, 12L))
-      assert(out(3L) == ((3L, 3L, true)))
-      assert(out(5L) == ((3L, 3L, false)))
-      assert(out(8L) == ((3L, 3L, false)))
-      assert(out(10L) == ((10L, 2L, true)))
-      assert(out(12L) == ((10L, 2L, false)))
-    }
+  test("clusters(star): transitive pairs collapse to min-label components") {
+    // chain 5-3-8 (via two pairs) plus isolated pair (10, 12): two
+    // components, labels = min member, canonical = the min member
+    val pairs = Seq((3L, 5L), (3L, 8L), (10L, 12L)).toDF("doc_a", "doc_b")
+    val out = Dedup.clusters(pairs).collect()
+      .map(r => (r.getAs[Long]("doc_id"),
+        (r.getAs[Long]("cluster_id"), r.getAs[Long]("cluster_size"),
+          r.getAs[Boolean]("is_canonical")))).toMap
+    assert(out.keySet == Set(3L, 5L, 8L, 10L, 12L))
+    assert(out(3L) == ((3L, 3L, true)))
+    assert(out(5L) == ((3L, 3L, false)))
+    assert(out(8L) == ((3L, 3L, false)))
+    assert(out(10L) == ((10L, 2L, true)))
+    assert(out(12L) == ((10L, 2L, false)))
+  }
 
-    test(s"clusters($algo): a long chain converges to one component") {
-      // path graph 1-2-3-...-9 given as consecutive pairs: diameter 8 —
-      // the adversarial case for propagation, routine for star
-      val pairs = (1L until 9L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-      val out = Dedup.clusters(pairs, algorithm = algo).collect()
-      assert(out.length == 9)
-      assert(out.forall(_.getAs[Long]("cluster_id") == 1L))
-      assert(out.forall(_.getAs[Long]("cluster_size") == 9L))
-      assert(out.count(_.getAs[Boolean]("is_canonical")) == 1)
-    }
+  test("clusters(star): a long chain converges to one component") {
+    // path graph 1-2-3-...-9 given as consecutive pairs: diameter 8
+    val pairs = (1L until 9L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    val out = Dedup.clusters(pairs).collect()
+    assert(out.length == 9)
+    assert(out.forall(_.getAs[Long]("cluster_id") == 1L))
+    assert(out.forall(_.getAs[Long]("cluster_size") == 9L))
+    assert(out.count(_.getAs[Boolean]("is_canonical")) == 1)
   }
 
   test("star contraction resolves a 200-node chain in O(log n) rounds") {
@@ -366,13 +363,6 @@ class DedupSpec extends SparkSpec {
     val got = star.collect().map(r => (r.getAs[Long]("a"), r.getAs[Long]("b")))
     assert(got.length == n)
     assert(got.forall(_._2 == 0L))
-  }
-
-  test("clusters: unknown algorithm is rejected") {
-    val pairs = Seq((1L, 2L)).toDF("doc_a", "doc_b")
-    intercept[IllegalArgumentException] {
-      Dedup.clusters(pairs, algorithm = "bogus")
-    }
   }
 
   test("clusters matches a union-find reference on seeded random graphs") {
@@ -391,27 +381,25 @@ class DedupSpec extends SparkSpec {
       val byRoot = nodes.groupBy(find)
       byRoot.valuesIterator.flatMap(ms => ms.map(_ -> ms.min)).toMap
     }
-    for (seed <- Seq(7, 42, 1234); algo <- Seq("star", "propagation")) {
+    for (seed <- Seq(7, 42, 1234)) {
       val rnd = new scala.util.Random(seed)
       val pairs = Seq.fill(40)((rnd.nextInt(30).toLong, rnd.nextInt(30).toLong))
         .filter { case (a, b) => a != b }
         .map { case (a, b) => (math.min(a, b), math.max(a, b)) }
         .distinct
-      val got = Dedup.clusters(pairs.toDF("doc_a", "doc_b"), algorithm = algo)
+      val got = Dedup.clusters(pairs.toDF("doc_a", "doc_b"))
         .collect()
         .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("cluster_id")).toMap
-      assert(got == unionFind(pairs), s"seed $seed mismatch ($algo)")
+      assert(got == unionFind(pairs), s"seed $seed mismatch")
     }
   }
 
   test("clusters: empty pair input yields an empty frame with the output schema") {
-    for (algo <- Seq("star", "propagation")) {
-      val empty = Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")
-      val out = Dedup.clusters(empty, algorithm = algo)
-      assert(out.columns.toSeq ==
-        Seq("doc_id", "cluster_id", "cluster_size", "is_canonical"))
-      assert(out.count() == 0)
-    }
+    val empty = Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")
+    val out = Dedup.clusters(empty)
+    assert(out.columns.toSeq ==
+      Seq("doc_id", "cluster_id", "cluster_size", "is_canonical"))
+    assert(out.count() == 0)
   }
 
   test("curate_corpus is exactly the set algebra of its verified stages") {

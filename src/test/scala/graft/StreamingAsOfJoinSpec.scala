@@ -188,8 +188,8 @@ class StreamingAsOfJoinSpec extends SparkSpec {
     "attributions as the watermark passes them (the hot-key remedy), " +
     "carries the latest pruned view, and matches the batch twin exactly") {
     // ONE user stays active the whole run — the inactivity timeout never
-    // fires, which in default mode defers every emission to the flush
-    // (and lets the buffer grow with the stream's lifetime)
+    // fires, so every emission before the final flush comes from the
+    // watermark prefix
     val u = 7L
     val vStream = MemoryStream[(Long, Long, Timestamp)](spark)
     val cStream = MemoryStream[(Long, Long, Timestamp)](spark)
@@ -198,7 +198,7 @@ class StreamingAsOfJoinSpec extends SparkSpec {
     val out = StreamingAsOfJoin.lastBeforeStream(
       df(vStream), df(cStream),
       key = "user_id", ts = "ts", leftId = "event_id", rightId = "event_id",
-      watermarkDelay = "1 second", progressive = true)
+      watermarkDelay = "1 second")
     val q = out.writeStream.format("memory").queryName("sasof_prog")
       .outputMode("append").start()
     val views = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Timestamp)]
@@ -223,7 +223,7 @@ class StreamingAsOfJoinSpec extends SparkSpec {
       // b3: wm = 999 s → click 100 @15 finalizes against the CARRIED
       // tie-winning view (its own-era views were pruned in b2); the new
       // click @1001 is in-bound (≥ wm) and stays live. The key never
-      // went inactive — in default mode NOTHING would be visible yet.
+      // went inactive — an inactivity-only flush would show nothing yet.
       addC((103L, u, ts(1001)))
       q.processAllAvailable()
       val early = spark.table("sasof_prog").collect()
@@ -263,12 +263,11 @@ class StreamingAsOfJoinSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("progressive lateness bound: in-bound late arrivals are exact in " +
-    "both modes; beyond-bound arrivals are dropped by the operator's " +
-    "late-input filter in BOTH modes — progressive output ≡ default " +
-    "output under the watermark contract") {
+  test("progressive lateness bound: in-bound late arrivals are exact; " +
+    "beyond-bound arrivals are dropped by the operator's late-input " +
+    "filter under the watermark contract") {
     val u = 7L
-    def run(progressive: Boolean): Map[Long, Option[Long]] = {
+    val got = {
       val vStream = MemoryStream[(Long, Long, Timestamp)](spark)
       val cStream = MemoryStream[(Long, Long, Timestamp)](spark)
       def df(s: MemoryStream[(Long, Long, Timestamp)]) =
@@ -276,9 +275,8 @@ class StreamingAsOfJoinSpec extends SparkSpec {
       val out = StreamingAsOfJoin.lastBeforeStream(
         df(vStream), df(cStream),
         key = "user_id", ts = "ts", leftId = "event_id",
-        rightId = "event_id", watermarkDelay = "5 seconds",
-        progressive = progressive)
-      val name = s"sasof_late_$progressive"
+        rightId = "event_id", watermarkDelay = "5 seconds")
+      val name = "sasof_late"
       val q = out.writeStream.format("memory").queryName(name)
         .outputMode("append").start()
       try {
@@ -295,15 +293,14 @@ class StreamingAsOfJoinSpec extends SparkSpec {
         cStream.addData((101L, u, ts(19)))
         q.processAllAvailable()
         // b3: pacer @40 → wm 35 next batch; @18/@19 finalize there —
-        // in-bound lateness must be EXACT in both modes
+        // in-bound lateness must be EXACT
         vStream.addData((91L, u, ts(40)))
         q.processAllAvailable()
         // b4 (wm 35): BEYOND-BOUND late click 103 @7 — the stateful
         // operator's late-input filter (every row below the watermark)
-        // drops it BEFORE the state function in BOTH modes: the class
-        // progressive pruning could have missed (its oracle view 4 @5
-        // was pruned in b2) never reaches the buffer in the default
-        // form either. Click 102 @38 is live/in-bound.
+        // drops it BEFORE the state function: the class prefix pruning
+        // could have missed (its oracle view 4 @5 was pruned in b2)
+        // never reaches the buffer. Click 102 @38 is live/in-bound.
         cStream.addData((102L, u, ts(38)), (103L, u, ts(7)))
         q.processAllAvailable()
         // flush: far sentinel advances wm past everything, then the
@@ -318,8 +315,6 @@ class StreamingAsOfJoinSpec extends SparkSpec {
           .toMap
       } finally q.stop()
     }
-    val dflt = run(progressive = false)
-    val prog = run(progressive = true)
     // oracle over the complete set (arrival order irrelevant)
     val views = Seq((4L, ts(5)), (1L, ts(10)), (90L, ts(20)), (2L, ts(18)),
       (91L, ts(40)), (92L, ts(100000))).map { case (i, t) => (i, u, t) }
@@ -334,25 +329,21 @@ class StreamingAsOfJoinSpec extends SparkSpec {
       .map(r => r.getAs[Long]("event_id") ->
         Option(r.getAs[java.lang.Long]("matched_event_id")).map(_.toLong))
       .toMap
-    // MODE EQUIVALENCE — the r16 drill's settled finding: on any input
-    // the watermark admits, progressive output equals default output
-    // (the carry retains the newest below-watermark left, and any
-    // pruned left is strictly older than what an in-bound right can
-    // need), and beyond-bound arrivals never reach either mode's buffer
-    assert(dflt == prog, s"modes diverged: $dflt vs $prog")
     // every in-bound click — including the one matching the in-bound
-    // LATE view — is exact vs the batch oracle in both modes
+    // LATE view — is exact vs the batch oracle: the carry retains the
+    // newest below-watermark left, and any pruned left is strictly
+    // older than what an in-bound right can need
     for (c <- Seq(100L, 101L, 102L))
-      assert(prog(c) == oracle(c), s"in-bound click $c: $prog vs $oracle")
+      assert(got(c) == oracle(c), s"in-bound click $c: $got vs $oracle")
     assert(oracle(101L).contains(2L) && oracle(102L).contains(90L))
     // the batch oracle sees the beyond-bound click (batch has no
-    // watermark); BOTH streaming modes dropped it at the late-input
-    // filter — the watermark contract, not a progressive-only trade
+    // watermark); the stream dropped it at the late-input filter — the
+    // watermark contract, not a pruning trade
     assert(oracle(103L).contains(4L))
-    assert(!prog.contains(103L) && !dflt.contains(103L),
-      s"beyond-bound click should be dropped in both modes: $prog $dflt")
-    assert((prog - 103L) == (oracle - 103L),
-      s"divergence beyond the dropped late click: $prog vs $oracle")
+    assert(!got.contains(103L),
+      s"beyond-bound click should be dropped: $got")
+    assert((got - 103L) == (oracle - 103L),
+      s"divergence beyond the dropped late click: $got vs $oracle")
   }
 
   test("progressive attribution job: crash mid-stream, restart from the " +
@@ -381,7 +372,7 @@ class StreamingAsOfJoinSpec extends SparkSpec {
     write("w0.json", wave0)
     val q1 = StreamingJobs.runAttributionJob(spark, topic.toString, work,
       watermarkDelay = "5 seconds", finalizeDelayMs = 3600000L,
-      stateStoreProvider = rocks, progressive = true)
+      stateStoreProvider = rocks)
     try q1.processAllAvailable() finally q1.stop() // CRASH mid-stream
     // wave 1 lands while the job is DOWN: more in-bound events for the
     // same keys (all ts > the recovered watermark of 55 s)
@@ -391,7 +382,7 @@ class StreamingAsOfJoinSpec extends SparkSpec {
     write("w1.json", wave1)
     val q2 = StreamingJobs.runAttributionJob(spark, topic.toString, work,
       watermarkDelay = "5 seconds", finalizeDelayMs = 3600000L,
-      stateStoreProvider = rocks, progressive = true)
+      stateStoreProvider = rocks)
     try {
       q2.processAllAvailable()
       // flush waves: advance the watermark far, then fire timeouts

@@ -60,24 +60,28 @@ class StreamingParitySpec extends SparkSpec {
     val clickA = jsonLines(ev.clicks.filter(_.event_timestamp < cutMs).toDF())
     val clickB = jsonLines(ev.clicks.filter(_.event_timestamp >= cutMs).toDF())
 
-    val imprStream = MemoryStream[String](spark)
-    val clickStream = MemoryStream[String](spark)
+    // ONE source tagged by side ("i" impressions, "c" clicks), split by a
+    // filter: each addData lands both halves of a batch atomically. With
+    // two sources, a microbatch can take a batch's impressions without
+    // its clicks, advance the watermark on them alone, and drop the
+    // clicks that follow as late.
+    val events = MemoryStream[(String, String)](spark)
+    def side(tag: String) =
+      events.toDF().filter(col("_1") === tag).select(col("_2").as("value"))
+    def land(impr: Seq[String], clicks: Seq[String]): Unit =
+      events.addData(impr.map("i" -> _) ++ clicks.map("c" -> _))
 
-    val impressions = JsonStreams.decode(
-      imprStream.toDF().select(col("value")), AdModel.impressionSchema)
-    val clicks = JsonStreams.decode(
-      clickStream.toDF().select(col("value")), AdModel.clickSchema)
+    val impressions = JsonStreams.decode(side("i"), AdModel.impressionSchema)
+    val clicks = JsonStreams.decode(side("c"), AdModel.clickSchema)
 
     val joined = StreamingPipelines.joinedStream(
       impressions, clicks, watermarkDelay = "2 seconds")
 
-    // batch A lands BEFORE the queries start: a watermark operator that
-    // has never seen data is absent from the min-policy map, so a
-    // microbatch racing between the two addData calls would compute the
-    // global watermark from the impression side alone and the next batch
-    // would drop every batch-A click as late. With both sides in batch 0
-    // the operators register together and the min policy holds after.
-    imprStream.addData(imprA); clickStream.addData(clickA)
+    // batch A lands BEFORE the queries start, both sides in batch 0: a
+    // watermark operator that has never seen data is absent from the
+    // min-policy map, so both must register in the first microbatch for
+    // the min policy to hold after.
+    land(imprA, clickA)
 
     val ctrQ = StreamingPipelines.ctrByCampaign(joined)
       .writeStream.format("memory").queryName("parity_ctr")
@@ -91,10 +95,10 @@ class StreamingParitySpec extends SparkSpec {
       // sentinel batches to push the watermark past every real window
       def step(): Unit = { ctrQ.processAllAvailable(); engQ.processAllAvailable() }
       step() // batch A was added before start
-      imprStream.addData(imprB); clickStream.addData(clickB); step()
-      imprStream.addData(sentinelImpression(0)); clickStream.addData(sentinelClick(0)); step()
-      imprStream.addData(sentinelImpression(3600000L)); clickStream.addData(sentinelClick(3600000L)); step()
-      imprStream.addData(sentinelImpression(7200000L)); clickStream.addData(sentinelClick(7200000L)); step()
+      land(imprB, clickB); step()
+      for (off <- Seq(0L, 3600000L, 7200000L)) {
+        land(Seq(sentinelImpression(off)), Seq(sentinelClick(off))); step()
+      }
 
       val iBatch = EventTime.withEventTime(ev.impressions.toDF())
       val cBatch = EventTime.withEventTime(ev.clicks.toDF())
