@@ -7,10 +7,13 @@ import graft.streaming.StreamThroughput
  * [[Bench]]: finds each job's ceiling with [[StreamThroughput.climb]]
  * (2,000 events/s doubled per step until the job falls behind, the
  * feeder runs short or 8 steps are done) and prints ONE JSON line with
- * every step, each job's highest sustained events/s and the `bound` that
+ * every step (with its landed→sink-visible latency, measured on the same
+ * run), each job's highest sustained events/s and the `bound` that
  * stopped its ladder (`job`, `feed` — the value is a lower bound — or
- * `ladder`). Latency steps then run at half of each job's ceiling. The
- * reference's only published operating point is its EVENT_RATE=50
+ * `ladder`). The `latency` array repeats, per job, the latency of the
+ * step at half of its top sustained rate
+ * ([[StreamThroughput.Ceiling.latencyStep]]).
+ * The reference's only published operating point is its EVENT_RATE=50
  * generator envelope (`docker-compose.yml:121`); results are recorded as
  * the streaming table in BASELINE.md.
  *
@@ -28,8 +31,11 @@ object StreamBench {
 
   def main(args: Array[String]): Unit = {
     val cpus = GraftSession.cpus(32)
+    // FAIR: the feeders run in their own pool (StreamThroughput.feedTopic),
+    // so a job near its ceiling does not starve the load it is offered
     val spark = GraftSession.builder(cpus)
       .config("spark.sql.shuffle.partitions", ShufflePartitions)
+      .config("spark.scheduler.mode", "FAIR")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
@@ -56,28 +62,23 @@ object StreamBench {
     val annBin = StreamThroughput.climb(
       StreamThroughput.annJobStep(spark, _, FeedMs, codec = "binary"))
 
-    // r14: end-to-end latency receipts (landed→sink-visible percentiles,
-    // BASELINE.md's SLA table) at half of each job's measured ceiling; a
-    // job that sustained no step gets none
-    val latSteps = Seq[(Long, Int => StreamThroughput.LatencyResult)](
-      main.value -> (StreamThroughput.mainLatencyStep(spark, _, FeedMs)),
-      ingest.value -> (StreamThroughput.ingestLatencyStep(spark, _, FeedMs)),
-      ann.value -> (StreamThroughput.annLatencyStep(spark, _, FeedMs)))
-      .collect { case (c, step) if c >= 2 => step((c / 2).toInt) }
-
     val ceilings = Seq("" -> main, "ingest_" -> ingest, "ann_" -> ann,
       "ingest_binary_" -> ingestBin, "ann_binary_" -> annBin)
     val perJob = ceilings.map { case (prefix, c) =>
       s""""${prefix}value":${c.value},"${prefix}bound":"${c.bound}","""
     }.mkString
     val allSteps = ceilings.flatMap(_._2.steps).map(_.json).mkString(",")
+    // latency as measured by each job's step at half its top sustained
+    // rate; a job that sustained no step gets none
+    val latency = ceilings.flatMap(_._2.latencyStep)
+      .map(_.latencyJson).mkString(",")
     println(
       s"""{"metric":"stream_max_sustained_events_per_sec",""" +
       s""""unit":"events_per_sec",$perJob""" +
       s""""feed_ms":$FeedMs,"cpus":$cpus,""" +
       s""""reference_envelope_events_per_sec":50,""" +
       s""""steps":[$allSteps],""" +
-      s""""latency":[${latSteps.map(_.json).mkString(",")}]}""")
+      s""""latency":[$latency]}""")
     spark.stop()
   }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.{ColumnShim, RecordBinaryToStruct, StructToRecordBinary}
 import org.apache.spark.sql.types.{BinaryType, StructField, StructType}
@@ -77,8 +77,4 @@ object BinaryTopics {
                  trigger: Option[org.apache.spark.sql.streaming.Trigger] = None)
       : org.apache.spark.sql.streaming.StreamingQuery =
     writeValueTopic(encode(df), dir, checkpoint, trigger)
-
-  /** Count records on a binary topic (the JSON side counts text lines). */
-  def countTopic(spark: SparkSession, dir: String): Long =
-    spark.read.schema(valueSchema).parquet(dir).count()
 }

@@ -1,9 +1,11 @@
 package graft.streaming
 
 import graft.fixtures.StreamingEventGenerator
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.schema.AdModel
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 
 import java.nio.file.{Files, Path}
 
@@ -14,11 +16,13 @@ import java.nio.file.{Files, Path}
  * runs a REAL producer/consumer topology at a target input rate:
  *
  *  1. a feeder query — [[StreamingEventGenerator]]'s `rate` source (or
- *     [[docStream]] for the curation side) encoded to JSON and written to
- *     the same file-backed topics the jobs deploy against — produces at
- *     `rate` rows per wall-second for `feedMs`;
+ *     [[docStream]] / [[embStream]] for the curation side) encoded under
+ *     the step's wire codec and written to the same file-backed topics
+ *     the jobs deploy against — produces at `rate` rows per wall-second
+ *     for `feedMs`;
  *  2. the job under test ([[StreamingJobs.runMainJob]] /
- *     [[StreamingCurationJobs.runIngestJob]]) consumes CONCURRENTLY,
+ *     [[StreamingCurationJobs.runIngestJob]] /
+ *     [[StreamingCurationJobs.runAnnIngestJob]]) consumes CONCURRENTLY,
  *     exactly as deployed (same decode, same checkpoints, same sinks);
  *  3. when the feeder stops, the consumer drains its backlog; the step's
  *     verdict is how much backlog accumulated.
@@ -29,6 +33,17 @@ import java.nio.file.{Files, Path}
  * the whole feed+drain wall window (input-row throughput of the job as
  * deployed, file-sink I/O included); `p95BatchMs` the 95th-percentile
  * microbatch duration across the job's queries.
+ *
+ * After the verdict, the same run yields the step's end-to-end LATENCY:
+ * how long after a record lands on the input topic its effect is
+ * visible at the sink. Both clocks are read post-hoc from the
+ * filesystem — a file-backed topic's record becomes consumable exactly
+ * when its file commits (input file mtime), and visible when its sink
+ * file commits (output file mtime) — and joined back to the records by
+ * key, with zero instrumentation inside the jobs. Latency therefore
+ * includes everything a user waits for: source listing cadence,
+ * microbatch scheduling, state commits, chained-topology hops, and (for
+ * windowed aggregates) the watermark close itself.
  *
  * A job's ceiling is found by [[climb]]: steps at doubling rates until
  * one falls behind (the job is the limit), its feeder lands under 90% of
@@ -42,6 +57,19 @@ import java.nio.file.{Files, Path}
  */
 object StreamThroughput {
 
+  /** Landed→sink-visible latency of one step: `nRows` sink records (or
+    * windows, for the aggregating main job) matched to their input, and
+    * the percentiles of their latency in ms. */
+  final case class LatencyResult(nRows: Long, p50Ms: Long, p95Ms: Long,
+                                 maxMs: Long) {
+    def fields: String =
+      s""""rows":$nRows,"p50_ms":$p50Ms,"p95_ms":$p95Ms,"max_ms":$maxMs"""
+  }
+
+  object LatencyResult {
+    val Empty: LatencyResult = LatencyResult(0L, 0L, 0L, 0L)
+  }
+
   /** One rate step's measurements. `eventsIn` counts rows actually
     * landed on the input topics (impressions + clicks, or docs); `fed`
     * counts the rows the rate-driven feeder landed on its own topic
@@ -49,14 +77,16 @@ object StreamThroughput {
     * `ratePerSec` is end-to-end events/s over feed+drain (a lower bound
     * on capacity whether or not the step kept pace); [[sustainedRate]]
     * is the throughput the step demonstrates: the offered load when the
-    * job kept pace, the measured drain-inclusive rate when it queued. */
+    * job kept pace, the measured drain-inclusive rate when it queued.
+    * `latency` is measured on the same run, after the verdict. */
   final case class StepResult(job: String, rate: Int, eventsIn: Long,
                               feedMs: Long, drainMs: Long,
                               ratePerSec: Double, p95BatchMs: Long,
                               batches: Int, sustained: Boolean,
                               fed: Long,
                               stateRows: Long = -1L,
-                              stateBytes: Long = -1L) {
+                              stateBytes: Long = -1L,
+                              latency: LatencyResult = LatencyResult.Empty) {
     def sustainedRate: Double =
       if (sustained) eventsIn * 1000.0 / math.max(feedMs, 1L) else ratePerSec
     /** Landed share of the rows offered over the feed window: below 1
@@ -69,7 +99,10 @@ object StreamThroughput {
         s""""sustained_events_per_sec":${math.round(sustainedRate)},""" +
         s""""p95_batch_ms":$p95BatchMs,"batches":$batches,""" +
         s""""state_rows":$stateRows,"state_bytes":$stateBytes,""" +
-        s""""sustained":$sustained}"""
+        s""""sustained":$sustained,${latency.fields}}"""
+    /** The step's latency alone, as StreamBench's `latency` entries. */
+    def latencyJson: String =
+      s"""{"job":"$job","rate":$rate,${latency.fields}}"""
   }
 
   /** A job's measured ceiling: the ladder's steps and why it stopped —
@@ -79,6 +112,14 @@ object StreamThroughput {
   final case class Ceiling(steps: Seq[StepResult], bound: String) {
     def value: Long = steps.filter(_.sustained)
       .map(s => math.round(s.sustainedRate)).foldLeft(0L)(math.max)
+
+    /** The step the job's latency is reported at: the one at half the
+      * top sustained step's rate (the ladder ran it already), or the top
+      * sustained step itself when it has no half-rate step (only the
+      * first step was sustained). None when no step was sustained. */
+    def latencyStep: Option[StepResult] =
+      steps.filter(_.sustained).maxByOption(_.rate).map(top =>
+        steps.find(s => s.sustained && s.rate * 2 == top.rate).getOrElse(top))
   }
 
   /** The ladder: 2,000 events/s, doubled per step, at most 8 steps
@@ -150,25 +191,54 @@ object StreamThroughput {
       s"feeder produced no commit into $dir within ${timeoutMs}ms")
   }
 
+  /** Stops each feeder between its microbatches: `stop()` abandons a
+    * batch in flight together with its rows, so the batch a feeder is
+    * running when the feed window closes commits first (waiting at most
+    * `maxWaitMs`), and each feeder stops as soon as its own batch has —
+    * not after the others'. A feeder that keeps pace lands every whole
+    * second it was offered; a slow one still lands only what its batches
+    * covered. */
+  private def stopBetweenBatches(feeders: Seq[StreamingQuery],
+                                 maxWaitMs: Long): Unit = {
+    val deadline = System.nanoTime() + maxWaitMs * 1000000L
+    var running = feeders.map(f => f -> f.lastProgress)
+    while (running.nonEmpty) {
+      val (done, busy) = running.partition { case (f, before) =>
+        !f.isActive || !f.status.isTriggerActive ||
+          (f.lastProgress ne before) || System.nanoTime() >= deadline
+      }
+      done.foreach(_._1.stop())
+      running = busy
+      if (running.nonEmpty) Thread.sleep(5L)
+    }
+  }
+
   /** Synthetic curation-ingest document stream off the `rate` source, in
     * [[StreamingCurationJobs.docSchema]] shape: ~40-word texts drawn
-    * from a small vocabulary by per-(row, position) hash — varied enough
-    * to exercise shingling/fingerprinting, with natural duplicates so
-    * the dedup stage does real work. Event time advances `simMsPerRow`
-    * ms per row from `startMs`, independent of wall pace. */
+    * from a small vocabulary by per-(row, position) hash over the FULL
+    * row index, with a stopword every 5th token — so every document is
+    * unique and most clear the deployed quality gate, exercising
+    * shingling, fingerprinting, dedup state and the curated sink's write
+    * path. [[ingestJobStep]] requires a majority of the fed docs to reach
+    * the sink, so a gate or feed change that drops most of them fails
+    * the step instead of measuring an empty sink. Event time advances
+    * `simMsPerRow` ms per row from `startMs`, independent of wall pace. */
   def docStream(spark: SparkSession, rowsPerSecond: Int,
                 startMs: Long = 0L, simMsPerRow: Long = 20L,
                 vocab: Int = 64, wordsPerDoc: Int = 40): DataFrame = {
     val words = array((0 until vocab).map(i => lit(s"w$i")): _*)
+    val stops = array(lit("the"), lit("of"), lit("and"), lit("in"))
     spark.readStream.format("rate")
       .option("rowsPerSecond", rowsPerSecond)
       .load()
       .select(col("value").as("idx"))
       .select(
         col("idx").as("doc_id"),
-        concat_ws(" ", transform(sequence(lit(1), lit(wordsPerDoc)),
-          j => element_at(words,
-            (pmod(xxhash64(col("idx") % 5000, j), lit(vocab)) + 1).cast("int"))))
+        concat_ws(" ", transform(sequence(lit(1), lit(wordsPerDoc)), j =>
+          when(j % 5 === 0, element_at(stops,
+            (pmod(xxhash64(col("idx"), j, lit(3)), lit(4)) + 1).cast("int")))
+            .otherwise(element_at(words,
+              (pmod(xxhash64(col("idx"), j), lit(vocab)) + 1).cast("int")))))
           .as("text"),
         lit("en").as("lang"),
         concat(lit("src-"), pmod(xxhash64(col("idx"), lit(7)), lit(4))).as("source"),
@@ -185,16 +255,94 @@ object StreamThroughput {
       .toDF("doc_id", "text")
   }
 
+  /** A file-backed topic: its records carry `schema` under the wire
+    * `codec` ([[JsonStreams]] text lines or [[BinaryTopics]] parquet). */
+  private final case class Topic(dir: Path, schema: StructType,
+                                 codec: String = "json")
+
+  /** A topic's records, decoded under its codec by the jobs' own decode
+    * — the one reader a step counts its input with and keys its latency
+    * from. */
+  private def decoded(spark: SparkSession, t: Topic): DataFrame =
+    if (t.codec == "binary") BinaryTopics.decode(
+      spark.read.schema(BinaryTopics.valueSchema).parquet(t.dir.toString),
+      t.schema)
+    else JsonStreams.decode(spark.read.text(t.dir.toString), t.schema)
+
+  /** (path, mtime) of a dir's data files — the post-hoc landing clock.
+    * Driver-side walk, bounded by the step's own file count. */
+  private def mtimeFrame(spark: SparkSession, dir: Path): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    // Files.walk must be CLOSED (it holds open DirectoryStreams)
+    val walk = Files.walk(dir)
+    val rows =
+      try walk.iterator().asScala
+        .filter(Files.isRegularFile(_))
+        .filterNot(_.toString.contains("_spark_metadata"))
+        .filterNot { p =>
+          val n = p.getFileName.toString
+          n.startsWith(".") || n.startsWith("_")
+        }
+        .map(p => (p.toAbsolutePath.toString,
+          Files.getLastModifiedTime(p).toMillis))
+        .toSeq
+      finally walk.close()
+    spark.createDataFrame(rows).toDF("__path", "__mtime")
+  }
+
+  /** [[decoded]] records, each with its file's commit time (ms) as `__t`. */
+  private def landed(spark: SparkSession, t: Topic): DataFrame =
+    decoded(spark, t)
+      .withColumn("__path",
+        regexp_replace(input_file_name(), "^file:/+", "/"))
+      .join(broadcast(mtimeFrame(spark, t.dir)), Seq("__path"))
+      .withColumnRenamed("__mtime", "__t")
+      .drop("__path")
+
+  /** Where a step's latency clocks are read: the job's `sink` topic,
+    * whose records are identified by the `keys` columns, and `inKeys`,
+    * the same keys derived from a landed input record. */
+  private final case class Probe(sink: Topic, keys: Seq[String],
+                                 inKeys: Seq[Column])
+
+  private object Probe {
+    /** Input and sink records share an `id` column. */
+    def byId(sink: Topic, id: String): Probe = Probe(sink, Seq(id), Seq(col(id)))
+  }
+
+  /** Landed→sink-visible latency per sink key: its first sink commit
+    * minus its input's last landing (a record's own landing; for a
+    * window, its last contributing record's). A sink holding keys of
+    * which none matches an input key means the probe's keys drifted from
+    * the job's output, and fails loudly instead of reporting rows=0. */
+  private def latencyOf(spark: SparkSession, feed: Topic, p: Probe)
+      : LatencyResult = {
+    val in = landed(spark, feed).groupBy(p.inKeys: _*)
+      .agg(max(col("__t")).as("__in"))
+    val out = landed(spark, p.sink).groupBy(p.keys.map(col): _*)
+      .agg(min(col("__t")).as("__out"))
+    val lat = col("__out") - col("__in")
+    val r = out.join(in, p.keys, "left")
+      .agg(count(lit(1)), count(lat), percentile(lat, lit(0.5)),
+        percentile(lat, lit(0.95)), max(lat))
+      .collect()(0)
+    require(r.getLong(0) == 0L || r.getLong(1) > 0L,
+      s"${r.getLong(0)} sink keys in ${p.sink.dir}, none matching an input " +
+        s"key on ${p.keys.mkString(", ")} - the probe no longer matches " +
+        "the job's output")
+    if (r.getLong(1) == 0L) LatencyResult.Empty
+    else LatencyResult(r.getLong(1), math.round(r.getDouble(2)),
+      math.round(r.getDouble(3)), r.getLong(4))
+  }
+
   private def runStep(job: String, rate: Int, feedMs: Long,
                       tailAllowanceMs: Long,
                       feeders: Seq[StreamingQuery],
-                      topics: Seq[Path],
+                      topics: Seq[Topic],
                       startConsumer: () => Seq[StreamingQuery],
-                      spark: SparkSession,
-                      countTopic: Option[Path => Long] = None): StepResult = {
-    val countFn: Path => Long =
-      countTopic.getOrElse(t => spark.read.text(t.toString).count())
-    topics.foreach(awaitTopic(_))
+                      probe: Probe,
+                      spark: SparkSession): StepResult = {
+    topics.foreach(t => awaitTopic(t.dir))
     // Peak accumulation MUST outlive the progress ring buffer:
     // recentProgress retains only the last
     // spark.sql.streaming.numRecentProgressUpdates (~100) entries, so a
@@ -223,18 +371,19 @@ object StreamThroughput {
     }
     spark.streams.addListener(listener)
     val consumers = startConsumer()
-    try {
+    val step = try {
       val feedStart = System.nanoTime()
       Thread.sleep(feedMs)
-      feeders.foreach(_.stop())
+      // the wait for an in-flight feeder batch stays inside the feed wall
+      stopBetweenBatches(feeders, feedMs)
       val feedEnd = System.nanoTime()
       // chained queries: drain in topology order, twice, so downstream
       // consumes what upstream wrote during the first drain pass
       consumers.foreach(_.processAllAvailable())
       consumers.foreach(_.processAllAvailable())
       val drainEnd = System.nanoTime()
-      val landed = topics.map(countFn)
-      val eventsIn = landed.sum
+      val landedRows = topics.map(decoded(spark, _).count())
+      val eventsIn = landedRows.sum
       val progress = consumers.flatMap(_.recentProgress.toSeq)
       val batchMs = progress
         .flatMap(p => Option(p.durationMs.get("triggerExecution")).map(_.toLong))
@@ -271,43 +420,62 @@ object StreamThroughput {
         ratePerSec = eventsIn * 1000.0 / math.max(feedWallMs + drainMs, 1L),
         p95BatchMs = p95(batchMs), batches = batchMs.size,
         sustained = drainMs <= drainBudgetMs(feedMs, tailAllowanceMs),
-        fed = landed.head, stateRows = stateRows, stateBytes = stateBytes)
+        fed = landedRows.head, stateRows = stateRows, stateBytes = stateBytes)
     } finally {
       feeders.foreach(f => if (f.isActive) f.stop())
       consumers.foreach(_.stop())
       spark.streams.removeListener(listener)
     }
+    // the verdict is taken; the same run's files now yield its latency
+    step.copy(latency = latencyOf(spark, topics.head, probe))
   }
 
   /** One main-job step: generator → impressions/clicks topics →
     * [[StreamingJobs.runMainJob]] (join + two windowed aggregations over
-    * three chained queries), measured as deployed. */
+    * three chained queries), measured as deployed. Its latency is
+    * per WINDOW: a ctr row's clock starts when its LAST contributing
+    * impression lands on the topic (clicks land in the same feed window;
+    * the impression clock is the window's completion point) and stops
+    * when the ctr row's sink file commits — so it includes the interval
+    * join, the materialized-topic hop and the chained watermark advance
+    * that closes the window. Only windows the watermark closed during
+    * the run emit (the last ~chainedWatermarkDelay of event time never
+    * closes — append-mode semantics, not measurement loss). */
   def mainJobStep(spark: SparkSession, rate: Int, feedMs: Long = 20000L,
                   simMsPerRow: Long = 20L,
                   stateStoreProvider: Option[String] = None,
                   skewShare: Double = 0.0): StepResult =
     inTempDir("graft-sthr-main") { root =>
-      val impr = root.resolve("impressions")
-      val clk = root.resolve("clicks")
+      val impr = Topic(root.resolve("impressions"), AdModel.impressionSchema)
+      val clk = Topic(root.resolve("clicks"), AdModel.clickSchema)
+      val work = root.resolve("work")
       val (iStream, cStream) = StreamingEventGenerator.events(spark, rate,
         startMs = 0L, simMsPerRow = simMsPerRow, skewShare = skewShare)
       // coalesce: the rate source defaults to one partition per core; at
       // these volumes 32 files per topic per microbatch is pure listing
       // overhead for the consumer
-      val f1 = JsonStreams.writeValueTopic(JsonStreams.encode(iStream).coalesce(2),
-        impr.toString, root.resolve("_ck/impr").toString)
-      val f2 = JsonStreams.writeValueTopic(JsonStreams.encode(cStream).coalesce(2),
-        clk.toString, root.resolve("_ck/clk").toString)
+      val f1 = feedTopic(iStream, impr, root.resolve("_ck/impr"))
+      val f2 = feedTopic(cStream, clk, root.resolve("_ck/clk"))
+      // Windows are re-derived with Spark's OWN window() over the job's
+      // OWN width constant, so a width/alignment change in runMainJob
+      // moves this side too (a mismatch fails latencyOf loudly).
+      val probe = Probe(
+        Topic(work.resolve("ctr_results"), AdModel.ctrResultSchema),
+        Seq("window_start", "campaign_id"),
+        Seq(window(timestamp_millis(col("event_timestamp")),
+            StreamingJobs.DefaultWindowLength).getField("start")
+            .as("window_start"),
+          col("campaign_id")))
       // 12s tail: three chained queries drained twice in topology order,
       // each with a multi-second state-commit batch floor — measured
       // rate-independent (no backlog component) across 5k..80k ev/s
       runStep(if (skewShare > 0) s"main-skew$skewShare" else "main",
         rate, feedMs, tailAllowanceMs = 12000L,
         Seq(f1, f2), Seq(impr, clk),
-        () => StreamingJobs.runMainJob(spark, impr.toString, clk.toString,
-          root.resolve("work").toString, maxFilesPerTrigger = 10000,
+        () => StreamingJobs.runMainJob(spark, impr.dir.toString,
+          clk.dir.toString, work.toString, maxFilesPerTrigger = 10000,
           stateStoreProvider = stateStoreProvider),
-        spark)
+        probe, spark)
     }
 
   /** Synthetic embedding stream off the `rate` source, in
@@ -325,19 +493,24 @@ object StreamThroughput {
           (pmod(xxhash64(col("value"), j), lit(1000L)).cast("double")
             / lit(500.0)) - lit(1.0)).as("embedding"))
 
-  /** Feeder + record counter for a topic under `codec` — the wire halves
-    * a step swaps as one unit ([[BinaryTopics]] vs [[JsonStreams]]). */
-  private def feedTopic(df: DataFrame, codec: String,
-                        dir: Path, ck: Path): StreamingQuery =
-    if (codec == "binary")
-      BinaryTopics.writeValueTopic(BinaryTopics.encode(df).coalesce(2),
-        dir.toString, ck.toString)
-    else JsonStreams.writeValueTopic(JsonStreams.encode(df).coalesce(2),
-      dir.toString, ck.toString)
-
-  private def topicCounter(spark: SparkSession, codec: String): Path => Long =
-    if (codec == "binary") t => BinaryTopics.countTopic(spark, t.toString)
-    else t => spark.read.text(t.toString).count()
+  /** Feeder writing `df` to `topic` under the topic's codec — the wire
+    * half [[decoded]] reads back. The feeder's jobs go to their own
+    * scheduler pool: under a FAIR scheduler (StreamBench's) a feeder task
+    * takes the next free task slot instead of queueing behind the job's
+    * tasks, so the job under test does not starve its own load
+    * generator. Under FIFO the pool is ignored. */
+  private def feedTopic(df: DataFrame, topic: Topic, ck: Path): StreamingQuery = {
+    val sc = df.sparkSession.sparkContext
+    // the query's thread inherits the starting thread's local properties
+    sc.setLocalProperty("spark.scheduler.pool", "feeders")
+    try
+      if (topic.codec == "binary")
+        BinaryTopics.writeValueTopic(BinaryTopics.encode(df).coalesce(2),
+          topic.dir.toString, ck.toString)
+      else JsonStreams.writeValueTopic(JsonStreams.encode(df).coalesce(2),
+        topic.dir.toString, ck.toString)
+    finally sc.setLocalProperty("spark.scheduler.pool", null)
+  }
 
   /** One ANN-ingest step: [[embStream]] → embeddings topic →
     * [[StreamingCurationJobs.runAnnIngestJob]] (stateless assignment
@@ -348,294 +521,58 @@ object StreamThroughput {
                  corpusDir: String = "/root/testdata/sf0.001",
                  codec: String = "json"): StepResult =
     inTempDir("graft-sthr-ann") { root =>
-      val emb = root.resolve("embeddings")
+      val emb = Topic(root.resolve("embeddings"),
+        StreamingCurationJobs.embSchema, codec)
+      val work = root.resolve("work")
       val model = graft.similarity.Similarity.freezeAnnIndex(
         spark.read.parquet(s"$corpusDir/embeddings.parquet"))
         .getOrElse(sys.error(s"no freezable corpus in $corpusDir"))
-      val feeder = feedTopic(embStream(spark, rate), codec,
-        emb, root.resolve("_ck/emb"))
+      // the codes topic carries the job's output schema under its codec
+      val codesSchema = StreamingCuration.annIngestStream(
+        spark.createDataFrame(java.util.List.of[Row](),
+          StreamingCurationJobs.embSchema), model).schema
+      val feeder = feedTopic(embStream(spark, rate), emb,
+        root.resolve("_ck/emb"))
       runStep(if (codec == "json") "ann" else s"ann-$codec",
         rate, feedMs, tailAllowanceMs = 3000L,
         Seq(feeder), Seq(emb),
-        () => Seq(StreamingCurationJobs.runAnnIngestJob(spark, emb.toString,
-          model, root.resolve("work").toString, codec = codec)),
-        spark, Some(topicCounter(spark, codec)))
-    }
-
-  // ── end-to-end latency receipts (r14) ──────────────────────────────
-  //
-  // Throughput says how much a job keeps up with; an SLA is stated in
-  // LATENCY: how long after a record lands on the input topic is its
-  // effect visible at the sink. Measured over the DEPLOYED topologies
-  // with zero instrumentation inside the jobs — a file-backed topic's
-  // record becomes consumable exactly when its file commits, so both
-  // clocks (ingest = input file mtime, sink-visible = output file
-  // mtime) are read POST-HOC from the filesystem and joined back to the
-  // records by id. Latency therefore includes everything a user waits
-  // for: source listing cadence, microbatch scheduling, state commits,
-  // chained-topology hops, and (for windowed aggregates) the watermark
-  // close itself.
-
-  final case class LatencyResult(job: String, rate: Int, nRows: Long,
-                                 p50Ms: Long, p95Ms: Long, maxMs: Long) {
-    def json: String =
-      s"""{"job":"$job","rate":$rate,"rows":$nRows,""" +
-        s""""p50_ms":$p50Ms,"p95_ms":$p95Ms,"max_ms":$maxMs}"""
-  }
-
-  /** (path, mtime) of a dir's data files — the post-hoc landing clock.
-    * Driver-side walk, bounded by the step's own file count. */
-  private def mtimeFrame(spark: SparkSession, dir: Path): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    // Files.walk must be CLOSED (it holds open DirectoryStreams)
-    val walk = Files.walk(dir)
-    val rows =
-      try walk.iterator().asScala
-        .filter(Files.isRegularFile(_))
-        .filterNot(_.toString.contains("_spark_metadata"))
-        .filterNot { p =>
-          val n = p.getFileName.toString
-          n.startsWith(".") || n.startsWith("_")
-        }
-        .map(p => (p.toAbsolutePath.toString,
-          Files.getLastModifiedTime(p).toMillis))
-        .toSeq
-      finally walk.close()
-    spark.createDataFrame(rows).toDF("__path", "__mtime")
-  }
-
-  /** Attach each row's file mtime (via `input_file_name`) as column `as`. */
-  private def withMtime(df: DataFrame, m: DataFrame, as: String): DataFrame =
-    df.withColumn("__path",
-        regexp_replace(input_file_name(), "^file:/+", "/"))
-      .join(broadcast(m), Seq("__path"))
-      .withColumnRenamed("__mtime", as)
-      .drop("__path")
-
-  private def latencyOf(lat: DataFrame, job: String,
-                        rate: Int): LatencyResult = {
-    val r = lat.agg(count(lit(1)), percentile(col("__lat"), lit(0.5)),
-      percentile(col("__lat"), lit(0.95)), max(col("__lat"))).collect()(0)
-    if (r.getLong(0) == 0L) LatencyResult(job, rate, 0L, 0L, 0L, 0L)
-    else LatencyResult(job, rate, r.getLong(0),
-      math.round(r.getDouble(1)), math.round(r.getDouble(2)), r.getLong(3))
-  }
-
-  /** Gate-PASSING, dedup-SURVIVING document stream for the latency
-    * receipt: the throughput feed ([[docStream]]) deliberately emits
-    * stopword-free, content-cycled docs that the quality gate and the
-    * exact dedup drop to zero — right for measuring the full drop
-    * pipeline's throughput, useless for landed→sink-visible latency
-    * (nothing reaches the sink). This variant interleaves stopwords
-    * (every 5th token) and varies tokens over the FULL row index, so
-    * every document is unique and MOST clear the deployed gates; the
-    * job under test is unchanged, which means its quality gate (stub
-    * weights when the runner passes none) still scores every arrival —
-    * the latency sample covers SURVIVORS only, and
-    * [[ingestLatencyStep]] asserts the survivor fraction stays high so
-    * a future gate change cannot quietly hollow the receipt out to a
-    * handful of lucky rows (ADVICE r14). */
-  def docStreamCurated(spark: SparkSession, rowsPerSecond: Int,
-                       startMs: Long = 0L, simMsPerRow: Long = 20L,
-                       vocab: Int = 64, wordsPerDoc: Int = 40): DataFrame = {
-    val words = array((0 until vocab).map(i => lit(s"w$i")): _*)
-    val stops = array(lit("the"), lit("of"), lit("and"), lit("in"))
-    spark.readStream.format("rate")
-      .option("rowsPerSecond", rowsPerSecond)
-      .load()
-      .select(col("value").as("idx"))
-      .select(
-        col("idx").as("doc_id"),
-        concat_ws(" ", transform(sequence(lit(1), lit(wordsPerDoc)), j =>
-          when(j % 5 === 0, element_at(stops,
-            (pmod(xxhash64(col("idx"), j, lit(3)), lit(4)) + 1).cast("int")))
-            .otherwise(element_at(words,
-              (pmod(xxhash64(col("idx"), j), lit(vocab)) + 1).cast("int")))))
-          .as("text"),
-        lit("en").as("lang"),
-        concat(lit("src-"), pmod(xxhash64(col("idx"), lit(7)), lit(4))).as("source"),
-        timestamp_millis(lit(startMs) + col("idx") * simMsPerRow).as("ingest_time"))
-  }
-
-  /** Per-record landed→sink-visible latency for the curation-ingest job
-    * over the [[docStreamCurated]] feed (the deployed job unchanged —
-    * the throughput feed's rows all drop at the gates by design, so a
-    * latency sample needs survivors). */
-  def ingestLatencyStep(spark: SparkSession, rate: Int,
-                        feedMs: Long = 20000L): LatencyResult =
-    inTempDir("graft-lat-ingest") { root =>
-      val docs = root.resolve("docs")
-      val work = root.resolve("work")
-      val feeder = feedTopic(docStreamCurated(spark, rate), "json", docs,
-        root.resolve("_ck/docs"))
-      awaitTopic(docs)
-      val consumer = StreamingCurationJobs.runIngestJob(spark, docs.toString,
-        benchDocs(spark), work.toString)
-      try {
-        Thread.sleep(feedMs)
-        feeder.stop()
-        consumer.processAllAvailable()
-      } finally {
-        if (feeder.isActive) feeder.stop()
-        consumer.stop()
-      }
-      val in = withMtime(
-        spark.read.text(docs.toString).select(
-          get_json_object(col("value"), "$.doc_id").cast("long").as("doc_id")),
-        mtimeFrame(spark, docs), "__in")
-        .groupBy(col("doc_id")).agg(min(col("__in")).as("__in"))
-      val out = withMtime(
-        spark.read.text(s"$work/curated").select(
-          get_json_object(col("value"), "$.doc_id").cast("long").as("doc_id")),
-        mtimeFrame(spark, work.resolve("curated")), "__out")
-        .groupBy(col("doc_id")).agg(min(col("__out")).as("__out"))
-      // The sample is SURVIVORS-only (the deployed job's gates still run);
-      // require a majority to reach the sink so a gate change that drops
-      // most of the feed fails the receipt loudly rather than silently
-      // measuring a handful of lucky rows (ADVICE r14).
-      val (nIn, nOut) = (in.count(), out.count())
-      require(nOut * 2 >= nIn,
-        s"ingestLatencyStep: only $nOut of $nIn fed docs reached the sink - " +
-          "the feed no longer clears the deployed gates; fix docStreamCurated " +
-          "or the gate knobs before trusting this latency sample")
-      latencyOf(out.join(in, "doc_id")
-        .select((col("__out") - col("__in")).as("__lat")), "ingest", rate)
-    }
-
-  /** Per-record landed→sink-visible latency for the ANN codes job. */
-  def annLatencyStep(spark: SparkSession, rate: Int,
-                     feedMs: Long = 20000L,
-                     corpusDir: String = "/root/testdata/sf0.001")
-      : LatencyResult =
-    inTempDir("graft-lat-ann") { root =>
-      val emb = root.resolve("embeddings")
-      val work = root.resolve("work")
-      val model = graft.similarity.Similarity.freezeAnnIndex(
-        spark.read.parquet(s"$corpusDir/embeddings.parquet"))
-        .getOrElse(sys.error(s"no freezable corpus in $corpusDir"))
-      val feeder = feedTopic(embStream(spark, rate), "json", emb,
-        root.resolve("_ck/emb"))
-      awaitTopic(emb)
-      val consumer = StreamingCurationJobs.runAnnIngestJob(spark, emb.toString,
-        model, work.toString)
-      try {
-        Thread.sleep(feedMs)
-        feeder.stop()
-        consumer.processAllAvailable()
-      } finally {
-        if (feeder.isActive) feeder.stop()
-        consumer.stop()
-      }
-      val in = withMtime(
-        spark.read.text(emb.toString).select(
-          get_json_object(col("value"), "$.vec_id").cast("long").as("vec_id")),
-        mtimeFrame(spark, emb), "__in")
-        .groupBy(col("vec_id")).agg(min(col("__in")).as("__in"))
-      val out = withMtime(
-        spark.read.text(s"$work/codes").select(
-          get_json_object(col("value"), "$.vec_id").cast("long").as("vec_id")),
-        mtimeFrame(spark, work.resolve("codes")), "__out")
-        .groupBy(col("vec_id")).agg(min(col("__out")).as("__out"))
-      latencyOf(out.join(in, "vec_id")
-        .select((col("__out") - col("__in")).as("__lat")), "ann", rate)
-    }
-
-  /**
-   * Per-WINDOW landed→sink-visible latency for the main ad job: a ctr
-   * output row's clock starts when its LAST contributing impression
-   * lands on the topic (clicks land in the same feed window; the
-   * impression clock is the window's completion point) and stops when
-   * the ctr row's sink file commits — so the measure includes the
-   * interval join, the materialized-topic hop, the chained watermark
-   * advance that closes the window, and every microbatch in between.
-   * Only windows the watermark actually closed during the run emit (the
-   * last ~chainedWatermarkDelay of event time never closes — correct
-   * append-mode semantics, not measurement loss).
-   */
-  def mainLatencyStep(spark: SparkSession, rate: Int,
-                      feedMs: Long = 20000L,
-                      simMsPerRow: Long = 20L,
-                      skewShare: Double = 0.0): LatencyResult =
-    inTempDir("graft-lat-main") { root =>
-      val impr = root.resolve("impressions")
-      val clk = root.resolve("clicks")
-      val work = root.resolve("work")
-      val (iStream, cStream) = StreamingEventGenerator.events(spark, rate,
-        startMs = 0L, simMsPerRow = simMsPerRow, skewShare = skewShare)
-      val f1 = JsonStreams.writeValueTopic(JsonStreams.encode(iStream).coalesce(2),
-        impr.toString, root.resolve("_ck/impr").toString)
-      val f2 = JsonStreams.writeValueTopic(JsonStreams.encode(cStream).coalesce(2),
-        clk.toString, root.resolve("_ck/clk").toString)
-      Seq(impr, clk).foreach(awaitTopic(_))
-      val consumers = StreamingJobs.runMainJob(spark, impr.toString,
-        clk.toString, work.toString, maxFilesPerTrigger = 10000)
-      try {
-        Thread.sleep(feedMs)
-        Seq(f1, f2).foreach(_.stop())
-        consumers.foreach(_.processAllAvailable())
-        consumers.foreach(_.processAllAvailable())
-      } finally {
-        Seq(f1, f2).foreach(f => if (f.isActive) f.stop())
-        consumers.foreach(_.stop())
-      }
-      // Reconstruct the job's windows with Spark's OWN window() over the
-      // job's OWN width constant — not a hardcoded date_trunc — so a
-      // future width/alignment change in runMainJob moves this side too
-      // (ADVICE r14: a mismatch here silently emptied the in/out join).
-      val in = withMtime(
-        spark.read.text(impr.toString).select(
-          get_json_object(col("value"), "$.campaign_id").as("campaign_id"),
-          get_json_object(col("value"), "$.event_timestamp").cast("long")
-            .as("__ts")),
-        mtimeFrame(spark, impr), "__in")
-        .select(col("campaign_id"),
-          window(timestamp_millis(col("__ts")),
-            StreamingJobs.DefaultWindowLength)
-            .getField("start").as("window_start"),
-          col("__in"))
-        .groupBy(col("window_start"), col("campaign_id"))
-        .agg(max(col("__in")).as("__in"))
-      val out = withMtime(
-        spark.read.text(s"$work/ctr_results").select(
-          get_json_object(col("value"), "$.campaign_id").as("campaign_id"),
-          get_json_object(col("value"), "$.window_start").cast("timestamp")
-            .as("window_start")),
-        mtimeFrame(spark, work.resolve("ctr_results")), "__out")
-        .groupBy(col("window_start"), col("campaign_id"))
-        .agg(min(col("__out")).as("__out"))
-      val joined = out.join(in, Seq("window_start", "campaign_id"))
-        .select((col("__out") - col("__in")).as("__lat"))
-      val res = latencyOf(joined,
-        if (skewShare > 0) s"main-skew$skewShare" else "main", rate)
-      // A sink with closed windows but an EMPTY in/out join is a
-      // measurement-code mismatch (window reconstruction drifted from the
-      // job), not "no windows closed" — fail loudly instead of reporting
-      // rows=0 (ADVICE r14).
-      if (res.nRows == 0L && !spark.read.text(s"$work/ctr_results").isEmpty)
-        sys.error("mainLatencyStep: ctr sink has rows but the window-keyed " +
-          "in/out join is empty - the step's window reconstruction no " +
-          "longer matches runMainJob's windowing")
-      res
+        () => Seq(StreamingCurationJobs.runAnnIngestJob(spark,
+          emb.dir.toString, model, work.toString, codec = codec)),
+        Probe.byId(Topic(work.resolve("codes"), codesSchema, codec), "vec_id"),
+        spark)
     }
 
   /** One curation-ingest step: [[docStream]] → docs topic →
     * [[StreamingCurationJobs.runIngestJob]] (benchmark exclusion →
-    * watermarked exact dedup → quality gate), measured as deployed. */
+    * watermarked exact dedup → quality gate → curated JSON topic),
+    * measured as deployed. A majority of the fed docs must reach the
+    * curated sink: a ceiling measured on a job that drops its whole feed
+    * would time the drop path only. */
   def ingestJobStep(spark: SparkSession, rate: Int, feedMs: Long = 20000L,
                     simMsPerRow: Long = 20L,
                     stateStoreProvider: Option[String] = None,
                     codec: String = "json"): StepResult =
     inTempDir("graft-sthr-ingest") { root =>
-      val docs = root.resolve("docs")
+      val docs = Topic(root.resolve("docs"),
+        StreamingCurationJobs.docSchema, codec)
+      val work = root.resolve("work")
       val feeder = feedTopic(docStream(spark, rate, simMsPerRow = simMsPerRow),
-        codec, docs, root.resolve("_ck/docs"))
+        docs, root.resolve("_ck/docs"))
       // single-query topology: one batch of tail is enough
-      runStep(if (codec == "json") "ingest" else s"ingest-$codec",
+      val step = runStep(if (codec == "json") "ingest" else s"ingest-$codec",
         rate, feedMs, tailAllowanceMs = 3000L,
         Seq(feeder), Seq(docs),
-        () => Seq(StreamingCurationJobs.runIngestJob(spark, docs.toString,
-          benchDocs(spark), root.resolve("work").toString,
+        () => Seq(StreamingCurationJobs.runIngestJob(spark, docs.dir.toString,
+          benchDocs(spark), work.toString,
           stateStoreProvider = stateStoreProvider, codec = codec)),
-        spark, Some(topicCounter(spark, codec)))
+        Probe.byId(Topic(work.resolve("curated"),
+          StreamingCurationJobs.curatedSchema), "doc_id"),
+        spark)
+      require(step.latency.nRows * 2 >= step.fed,
+        s"${step.job} step at $rate/s: only ${step.latency.nRows} of " +
+          s"${step.fed} fed docs reached the curated sink - the feed no " +
+          "longer clears the deployed gates; fix docStream or the gate " +
+          "knobs before trusting this step")
+      step
     }
 }

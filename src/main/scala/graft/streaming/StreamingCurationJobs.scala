@@ -132,9 +132,10 @@ object StreamingCurationJobs {
    *
    * @param benchDocs static benchmark frame (doc_id, text) — its shingle
    *                  index is built and broadcast once at job build
-   * @param codec     wire codec of BOTH the input topic and the curated
-   *                  output topic ("json" default, "binary" the
-   *                  fixed-width fast path — see [[BinaryTopics]])
+   * @param codec     wire codec of the input topic ("json" default,
+   *                  "binary" the fixed-width fast path — see
+   *                  [[BinaryTopics]]); the curated topic is always JSON,
+   *                  the format [[runStatsJob]] reads
    */
   def runIngestJob(spark: SparkSession, docsTopic: String,
                    benchDocs: DataFrame, workDir: String,
@@ -167,16 +168,13 @@ object StreamingCurationJobs {
       .filter(col("keep"))
       .select(col("doc_id"), col("text"), col("ingest_time"),
         col("fingerprint"), col("n_tokens").cast("long").as("n_tokens"))
-    // structured topic (like the ad pipeline's materialized join): the
-    // chained stats job re-reads it with the declared curatedSchema,
-    // under the same codec as the input side
-    val trig = triggerInterval.map(
-      org.apache.spark.sql.streaming.Trigger.ProcessingTime(_))
-    if (codec == "binary")
-      BinaryTopics.writeTopic(curated,
-        s"$workDir/curated", s"$workDir/_checkpoints/curated", trig)
-    else JsonStreams.writeTopic(curated,
-      s"$workDir/curated", s"$workDir/_checkpoints/curated", trig)
+    // structured topic (like the ad pipeline's materialized join),
+    // JSON under either input codec: its one consumer, the chained stats
+    // job, re-reads it as JSON with the declared curatedSchema
+    JsonStreams.writeTopic(curated,
+      s"$workDir/curated", s"$workDir/_checkpoints/curated",
+      triggerInterval.map(
+        org.apache.spark.sql.streaming.Trigger.ProcessingTime(_)))
   }
 
   /**

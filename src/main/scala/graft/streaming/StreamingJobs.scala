@@ -30,7 +30,7 @@ object StreamingJobs {
 
   /** The deployed main job's tumbling-window width (the reference's
     * TUMBLE INTERVAL '1' MINUTE, flink/flink_job.sql:80). Named so
-    * measurement harnesses ([[StreamThroughput.mainLatencyStep]])
+    * measurement harnesses ([[StreamThroughput.mainJobStep]]'s latency)
     * reconstruct the job's windows from the SAME constant instead of a
     * hardcoded truncation — a width/alignment change there must move
     * both sides or fail loudly, never silently empty the receipt's

@@ -133,8 +133,9 @@ class RecordCodecSpec extends SparkSpec {
       s"only-stream=${got -- batch} only-batch=${batch -- got}")
   }
 
-  test("runIngestJob emits identical curated rows under both codecs") {
-    val docs = (0L until 60L).map { i =>
+  /** 60 docs inside one minute (every 7th repeats verbatim, so the dedup
+    * drops some) as a docs-topic frame. */
+  private def codecDocs = (0L until 60L).map { i =>
       val text =
         if (i % 7 == 0) "dup dup dup this text repeats verbatim " * 4
         else s"document number $i with enough distinct words to pass the " +
@@ -142,36 +143,64 @@ class RecordCodecSpec extends SparkSpec {
           "epsilon zeta eta theta iota kappa lambda mu nu xi omicron pi"
       (i, text, "en", s"src-${i % 3}",
         java.sql.Timestamp.valueOf(s"2024-01-01 10:00:${"%02d".format(i % 60)}"))
-    }
-    val docsDf = docs.toDF("doc_id", "text", "lang", "source", "ingest_time")
+    }.toDF("doc_id", "text", "lang", "source", "ingest_time")
 
-    def runWith(codec: String): Set[Seq[Any]] = {
-      val work = Files.createTempDirectory(s"ingest_$codec").toString
-      val topic = s"$work/docs_topic"
-      if (codec == "binary")
-        BinaryTopics.encode(docsDf).write.parquet(topic)
-      else {
-        Files.createDirectories(Paths.get(topic))
-        val lines = JsonStreams.encode(docsDf).collect().map(_.getString(0))
-        Files.write(Paths.get(s"$topic/part-0.json"),
-          String.join("\n", lines: _*).getBytes)
-      }
-      val q = StreamingCurationJobs.runIngestJob(spark, topic,
-        graft.streaming.StreamThroughput.benchDocs(spark), work,
-        codec = codec)
-      try q.processAllAvailable() finally q.stop()
-      val out =
-        if (codec == "binary") BinaryTopics.decode(
-          spark.read.schema(BinaryTopics.valueSchema)
-            .parquet(s"$work/curated"),
-          StreamingCurationJobs.curatedSchema)
-        else spark.read.schema(StreamingCurationJobs.curatedSchema)
-          .json(s"$work/curated")
-      out.collect().map(_.toSeq).toSet
+  /** Lands `docsDf` as a docs topic under `codec` and runs the ingest job
+    * over it to completion; returns the job's work dir. */
+  private def ingestUnder(codec: String,
+                          docsDf: org.apache.spark.sql.DataFrame): String = {
+    val work = Files.createTempDirectory(s"ingest_$codec").toString
+    val topic = s"$work/docs_topic"
+    if (codec == "binary")
+      BinaryTopics.encode(docsDf).write.parquet(topic)
+    else {
+      Files.createDirectories(Paths.get(topic))
+      val lines = JsonStreams.encode(docsDf).collect().map(_.getString(0))
+      Files.write(Paths.get(s"$topic/part-0.json"),
+        String.join("\n", lines: _*).getBytes)
     }
+    val q = StreamingCurationJobs.runIngestJob(spark, topic,
+      graft.streaming.StreamThroughput.benchDocs(spark), work,
+      codec = codec)
+    try q.processAllAvailable() finally q.stop()
+    work
+  }
+
+  test("runIngestJob emits identical curated rows under both codecs") {
+    // the curated topic is JSON under either input codec
+    def runWith(codec: String): Set[Seq[Any]] =
+      spark.read.schema(StreamingCurationJobs.curatedSchema)
+        .json(s"${ingestUnder(codec, codecDocs)}/curated")
+        .collect().map(_.toSeq).toSet
 
     val json = runWith("json")
     val binary = runWith("binary")
+    assert(json.nonEmpty)
+    assert(json == binary,
+      s"only-json=${json -- binary} only-binary=${binary -- json}")
+  }
+
+  test("a binary-codec ingest feeds runStatsJob the same token counts as " +
+    "a JSON one") {
+    // a gate-passing sentinel an hour later advances the stats job's
+    // watermark past the corpus minute, so that window closes and emits
+    val sentinel = Seq((999999L,
+        ("the and for with from" +: (1 to 35).map(i => f"sw$i%03d"))
+          .mkString(" "),
+        "en", "sentinel",
+        java.sql.Timestamp.valueOf("2024-01-01 11:00:00")))
+      .toDF("doc_id", "text", "lang", "source", "ingest_time")
+    def tokenStats(codec: String): Set[String] = {
+      val work = ingestUnder(codec, codecDocs.union(sentinel))
+      val q = StreamingCurationJobs.runStatsJob(spark, work,
+        windowLength = "1 minute", watermarkDelay = "5 seconds")
+      try q.processAllAvailable() finally q.stop()
+      spark.read.text(s"$work/token_stats").collect()
+        .map(_.getString(0)).toSet
+    }
+
+    val json = tokenStats("json")
+    val binary = tokenStats("binary")
     assert(json.nonEmpty)
     assert(json == binary,
       s"only-json=${json -- binary} only-binary=${binary -- json}")

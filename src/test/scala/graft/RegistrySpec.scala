@@ -8,9 +8,9 @@ class RegistrySpec extends SparkSpec {
 
   /** The declared bench-only rows: approx/sketch escape hatches whose
     * values are engine-specific (HLL++, Greenwald-Khanna) so a value
-    * oracle cannot exist — each is tolerance-pinned against its exact
-    * twin in sbt instead (WindowedCountsSpec, SessionizeSpec,
-    * SketchesSpec). Anything NOT on this list must have an oracle. */
+    * oracle cannot exist — each registered row is gated against its
+    * exact twin at sf0.01 below instead. Anything NOT on this list must
+    * have an oracle. */
   private val benchOnly = Set(
     "ctr_by_campaign_approx", "profile_events_approx",
     "doc_length_quantiles_approx")
@@ -28,6 +28,82 @@ class RegistrySpec extends SparkSpec {
     assert(benchOnly.subsetOf(SparkEntry.queries.keySet))
     Seq("ctr_by_campaign", "profile_events", "doc_length_quantiles")
       .foreach(t => assert(SparkEntry.oracleSql.contains(t), s"exact twin $t"))
+  }
+
+  test("bench-only sketch rows stay within their sketch's stated bound " +
+    "of their exact twin at sf0.01") {
+    import org.apache.spark.sql.Row
+    val dir = "/root/testdata/sf0.01"
+    def run(name: String): Array[Row] =
+      SparkEntry.queries(name)(spark, dir).collect()
+    // HLL++ states a relative standard deviation (rsd); a distinct count
+    // must land within 3 of them of the exact count
+    def withinRsd(approx: Long, exact: Long, rsd: Double): Boolean =
+      math.abs(approx - exact) <= 3.0 * rsd * exact
+
+    // ctr_by_campaign_approx: HLL++ at rsd 0.01 (ctrAggApprox's default)
+    // on both counts; ctr is the guarded ratio of its own estimates
+    def byWindow(rows: Array[Row]) = rows.map(r =>
+      (r.getAs[java.sql.Timestamp]("window_start"),
+        r.getAs[String]("campaign_id")) -> r).toMap
+    val ctrExact = byWindow(run("ctr_by_campaign"))
+    val ctrApprox = byWindow(run("ctr_by_campaign_approx"))
+    assert(ctrExact.nonEmpty && ctrApprox.keySet == ctrExact.keySet)
+    for ((k, a) <- ctrApprox) {
+      for (c <- Seq("impression_count", "click_count"))
+        assert(withinRsd(a.getAs[Long](c), ctrExact(k).getAs[Long](c), 0.01),
+          s"ctr $k $c: approx ${a.getAs[Long](c)} vs exact " +
+            s"${ctrExact(k).getAs[Long](c)}")
+      val (ai, ac) = (a.getAs[Long]("impression_count"),
+        a.getAs[Long]("click_count"))
+      assert(a.getAs[Double]("ctr") == (if (ai > 0) ac.toDouble / ai else 0.0),
+        s"ctr $k: ${a.getAs[Double]("ctr")} is not $ac/$ai")
+    }
+
+    // profile_events_approx: row and null counts exact, distinct counts
+    // HLL++ at Spark's default rsd 0.05
+    def byColumn(rows: Array[Row]) =
+      rows.map(r => r.getAs[String]("column") -> r).toMap
+    val profExact = byColumn(run("profile_events"))
+    val profApprox = byColumn(run("profile_events_approx"))
+    assert(profExact.nonEmpty && profApprox.keySet == profExact.keySet)
+    for ((c, a) <- profApprox; e = profExact(c)) {
+      assert(a.getAs[Long]("n_rows") == e.getAs[Long]("n_rows"), c)
+      assert(a.getAs[Long]("n_nulls") == e.getAs[Long]("n_nulls"), c)
+      assert(withinRsd(a.getAs[Long]("n_distinct"),
+        e.getAs[Long]("n_distinct"), 0.05),
+        s"profile $c: approx ${a.getAs[Long]("n_distinct")} distinct vs " +
+          s"exact ${e.getAs[Long]("n_distinct")}")
+    }
+
+    // doc_length_quantiles_approx: n_rows and mean exact; each quantile
+    // is a sample whose rank lies within percentile_approx's rank error
+    // (n / accuracy, accuracy 10000 as Profile.quantiles states, plus one
+    // for rank rounding) of p·n in its group's true order
+    def bySource(rows: Array[Row]) =
+      rows.map(r => r.getAs[String]("source") -> r).toMap
+    val qExact = bySource(run("doc_length_quantiles"))
+    val qApprox = bySource(run("doc_length_quantiles_approx"))
+    assert(qExact.nonEmpty && qApprox.keySet == qExact.keySet)
+    val lengths = spark.read.parquet(s"$dir/documents.parquet")
+      .select("source", "n_chars").collect()
+      .groupBy(_.getString(0))
+      .view.mapValues(_.map(_.getAs[Number]("n_chars").doubleValue).toIndexedSeq)
+      .toMap
+    for ((g, a) <- qApprox) {
+      assert(a.getAs[Long]("n_rows") == qExact(g).getAs[Long]("n_rows"), g)
+      assert(a.getAs[Double]("mean") == qExact(g).getAs[Double]("mean"), g)
+      val vs = lengths(g)
+      val n = vs.size
+      for ((c, p) <- Seq("p10" -> 0.1, "p25" -> 0.25, "p50" -> 0.5,
+        "p75" -> 0.75, "p90" -> 0.9, "p99" -> 0.99)) {
+        val av = a.getAs[Double](c)
+        val (lo, hi) = (vs.count(_ < av), vs.count(_ <= av))
+        val slack = 1.0 + n / 10000.0
+        assert(hi > lo && p * n >= lo - slack && p * n <= hi + slack,
+          s"quantile $g $c: approx $av occupies ranks ($lo, $hi] of $n")
+      }
+    }
   }
 
   test("oracle SQL references only tables the driver provides") {

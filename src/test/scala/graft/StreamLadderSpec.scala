@@ -8,7 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
  * StreamBench's ceiling rule ([[StreamThroughput.climb]]) driven by fake
  * steps, no Spark: doubling from 2,000 events/s, it stops at the first
  * step that falls behind (`job`), at the first whose feeder landed under
- * 90% of the offered rows (`feed`), or after 8 steps (`ladder`).
+ * 90% of the offered rows (`feed`), or after 8 steps (`ladder`). The
+ * latency StreamBench reports per job is picked from the same steps
+ * ([[StreamThroughput.Ceiling.latencyStep]]).
  */
 class StreamLadderSpec extends AnyFunSuite {
 
@@ -73,5 +75,32 @@ class StreamLadderSpec extends AnyFunSuite {
       256000))
     assert(c.bound == "ladder")
     assert(c.value == 256000L)
+  }
+
+  test("latency pick: the step at half the top sustained rate, the " +
+    "first step when only it was sustained, none when no step was") {
+    def pick(sustainedBelow: Int, share: Int => Double = _ => 1.0)
+        : Option[Int] =
+      StreamThroughput.climb(r => step(r, sustained = r < sustainedBelow,
+          share = share(r)))
+        .latencyStep.map(_.rate)
+    // job-bound: 2k..64k sustained, 128k fell behind -> the 32k step
+    assert(pick(96000).contains(32000))
+    // only the first step sustained -> that step
+    assert(pick(3000).contains(2000))
+    // nothing sustained -> no latency
+    assert(pick(0).isEmpty)
+    // feed-bound: the short-fed 64k step was sustained, so it is the top
+    assert(pick(Int.MaxValue, r => if (r >= 64000) 0.5 else 1.0)
+      .contains(32000))
+    // ladder-capped: top 256k -> 128k
+    assert(pick(Int.MaxValue).contains(128000))
+    // the picked step's own latency is what the ladder reports
+    val c = StreamThroughput.Ceiling(Seq(2000, 4000).map(r =>
+      step(r).copy(latency = StreamThroughput.LatencyResult(10L, r, r, r))),
+      "job")
+    assert(c.latencyStep.map(_.latencyJson).contains(
+      """{"job":"ingest","rate":2000,"rows":10,"p50_ms":2000,""" +
+        """"p95_ms":2000,"max_ms":2000}"""))
   }
 }
