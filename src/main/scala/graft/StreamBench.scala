@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.StreamThroughput
+import graft.streaming.{BinaryTopics, StreamThroughput}
 
 /**
  * Streaming throughput benchmark main — the streaming sibling of
@@ -45,9 +45,9 @@ object StreamBench {
     StreamThroughput.ingestJobStep(spark, rate = 500, feedMs = 4000L)
     StreamThroughput.annJobStep(spark, rate = 500, feedMs = 4000L)
     StreamThroughput.ingestJobStep(spark, rate = 500, feedMs = 4000L,
-      codec = "binary")
+      codec = BinaryTopics)
     StreamThroughput.annJobStep(spark, rate = 500, feedMs = 4000L,
-      codec = "binary")
+      codec = BinaryTopics)
 
     val main = StreamThroughput.climb(
       StreamThroughput.mainJobStep(spark, _, FeedMs))
@@ -58,9 +58,9 @@ object StreamBench {
     // binary-codec twins of the decode-bound jobs (the r10 walls): same
     // topologies, BinaryTopics wire format
     val ingestBin = StreamThroughput.climb(
-      StreamThroughput.ingestJobStep(spark, _, FeedMs, codec = "binary"))
+      StreamThroughput.ingestJobStep(spark, _, FeedMs, codec = BinaryTopics))
     val annBin = StreamThroughput.climb(
-      StreamThroughput.annJobStep(spark, _, FeedMs, codec = "binary"))
+      StreamThroughput.annJobStep(spark, _, FeedMs, codec = BinaryTopics))
 
     val ceilings = Seq("" -> main, "ingest_" -> ingest, "ann_" -> ann,
       "ingest_binary_" -> ingestBin, "ann_binary_" -> annBin)

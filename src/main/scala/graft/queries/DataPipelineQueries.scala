@@ -1286,9 +1286,8 @@ object DataPipelineQueries {
     * arriving batch (the `dedup_incremental` split convention,
     * vec_id-keyed), the rest the existing corpus — each arrival
     * verdicted dup/new against its trained cell's corpus members.
-    * Streaming twin: [[graft.streaming.StreamingCuration
-    * .semanticDedupStream]] (flagged-id parity pinned in
-    * StreamingCurationSpec). */
+    * Streaming twin: [[graft.similarity.Similarity.semanticDedupFlags]]
+    * (flagged-id parity pinned in StreamingCurationSpec). */
   val dedupSemanticIncremental: (SparkSession, String) => DataFrame =
     memoized("dedupSemanticIncremental") { (spark, sfDir) =>
       Similarity.semanticDedupIncremental(embs(spark, sfDir),

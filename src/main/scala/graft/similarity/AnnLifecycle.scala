@@ -375,7 +375,9 @@ object AnnLifecycle {
 
   /**
    * Ingest generation N: arrivals from `topic` (JSON-lines
-   * (vec_id, embedding)) assigned under generation N's frozen centroids
+   * (vec_id, embedding), read like the curation jobs' topics through
+   * [[graft.streaming.TopicCodec.readStream]], so a backlog drains in
+   * one microbatch) assigned under generation N's frozen centroids
    * (plan literals — stateless projection) and landed
    * `(model_version, cell)`-partitioned into the shared live dir (see
    * the layout scaladoc: the leading version partition is what lets
@@ -388,17 +390,10 @@ object AnnLifecycle {
    */
   def runIngestGeneration(spark: SparkSession, dir: String, version: Int,
                           topic: String, checkpoint: String,
-                          dim: Int = 64,
-                          maxFilesPerTrigger: Int = 8)
+                          dim: Int = 64)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq(
-      StructField("vec_id", LongType),
-      StructField("embedding", ArrayType(DoubleType))))
-    val raw = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .json(topic)
+    val raw = graft.streaming.JsonStreams.readStream(spark, topic,
+        graft.streaming.StreamingCurationJobs.embSchema)
       .filter(col("vec_id").isNotNull && col("embedding").isNotNull &&
         size(col("embedding")) === dim)
     val cells = loadCells(spark, dir, version)

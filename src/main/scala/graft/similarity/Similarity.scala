@@ -293,9 +293,11 @@ object Similarity {
   /**
    * The STATELESS form of [[semanticDecontaminate]] — the same
    * bucket-candidate → exact-cosine-verify semantics folded entirely
-   * into per-row expressions, so it runs unchanged on a STREAMING frame
-   * (no join, no aggregation, no state; see
-   * [[graft.streaming.StreamingCuration.semanticDecontaminateStream]]).
+   * into per-row expressions, so it runs unchanged on a STREAMING frame:
+   * no join, no aggregation, no watermark and no state, every
+   * microbatch a pure projection (append-safe by construction, output
+   * rows ≤ input rows, nothing to GC), row-for-row equal to the batch
+   * operator across microbatch boundaries (StreamingCurationSpec).
    * The eval set collects to the driver ONCE — (table:bucket) → eval-id
    * map plus id → (vector, norm) maps, folded into the plan as literals
    * (the centroid/LUT contract: eval sets are benchmark-sized, orders of
@@ -413,9 +415,8 @@ object Similarity {
    * on (table, bucket), are exact-cosine verified on the joined row
    * (the same 6-dp round-before-compare), and collapse to one
    * (vec_id, `timeCol`) FLAG row per contaminated vector via
-   * watermark-bounded dedup — the
-   * [[graft.streaming.StreamingCuration.decontaminateFlags]] shape in
-   * embedding space. The flagged-id set equals the stateless form's for
+   * watermark-bounded dedup (a vector can match several eval vectors
+   * through several buckets). The flagged-id set equals the stateless form's for
    * the same (eval, bits, tables, threshold) — pinned, with the
    * plan-size bound, in StreamingCurationSpec.
    *
@@ -423,6 +424,10 @@ object Similarity {
    * per-doc aggregation — delayed emission — and the flag is what gates
    * ingestion; run the batch [[semanticDecontaminate]] for the audit
    * report, exactly as the n-gram flagger documents.)
+   *
+   * @param evalIndex an [[evalBucketIndex]] built with the SAME
+   *                  (bits, tables); caller-persisted for multi-batch
+   *                  streams
    */
   def semanticDecontaminateFlags(embStream: DataFrame, evalIndex: DataFrame,
                                  threshold: Double, bits: Int = 8,
@@ -443,8 +448,9 @@ object Similarity {
         lit(s" < bits*tables = ${bits * tables}"))))
       .otherwise(keys.head) +: keys.tail
     // watermark BEFORE the join: clean vectors emit zero join rows, so a
-    // post-join watermark would never advance on a clean stream (the
-    // decontaminateFlags note)
+    // post-join watermark would never advance on a clean stream and the
+    // per-vec dedup state would grow forever — the watermark must see
+    // every arriving vector
     embStream
       .withWatermark(timeCol, watermarkDelay)
       .select(col("vec_id"), col(timeCol),
@@ -462,11 +468,13 @@ object Similarity {
   }
 
   /**
-   * Streaming-safe SemDeDup admission flags — the core behind
-   * [[graft.streaming.StreamingCuration.semanticDedupStream]], the
-   * embedding-space sibling of [[semanticDecontaminateFlags]]: each
+   * Streaming SemDeDup admission flags — the embedding-space sibling of
+   * the MinHash ingest dedup and of [[semanticDecontaminateFlags]]: each
    * arriving vector is flagged iff some CORPUS vector in its trained
-   * cell reaches `threshold` — the same dup criterion as
+   * cell reaches `threshold`, so a continuous ingest can route semantic
+   * near-duplicates away from the landed corpus the way
+   * [[graft.text.Dedup.incremental]] routes textual ones — the same dup
+   * criterion as
    * [[semanticDedupIncremental]], whose 'dup' rows this flag set must
    * equal over the same split (pinned in StreamingCurationSpec).
    *
@@ -2137,7 +2145,13 @@ object Similarity {
    * expressions as [[productQuantize]]/[[incrementalAssign]] (bit-equal
    * codes, pinned in SimilaritySpec). No join, no aggregation, no
    * corpus read — append-safe on an unbounded stream with ZERO state
-   * ([[graft.streaming.StreamingCuration.annIngestStream]]).
+   * and no watermark, the living-index twin of [[incrementalAssign]] at
+   * the ingest boundary: appending the emitted rows to the frozen codes
+   * table keeps the [[ivfPqTopK]] serving structure current at
+   * O(arrival rate), never O(corpus). Codes match the batch operator
+   * row-for-row across microbatch boundaries (StreamingAnnIngestSpec;
+   * [[graft.streaming.StreamingCurationJobs.runAnnIngestJob]] is the
+   * topic-to-topic job).
    *
    * Input needs (vec_id, embedding); output one row per input vector:
    * (vec_id, cell, code0..m-1, recon_error).
@@ -2187,7 +2201,9 @@ object Similarity {
     * [[annAssignStateless]] with the centroid subtraction between the
     * argmax and the quantizer: one map-side projection, zero state,
     * append-safe; codes bit-equal to [[productQuantizeResidual]] against
-    * the same structures (SimilaritySpec). */
+    * the same structures (SimilaritySpec), and row-equal to
+    * [[incrementalAssignResidual]] across microbatch boundaries on a
+    * stream (StreamingAnnIngestSpec). */
   def annAssignResidualStateless(embeddings: DataFrame,
                                  model: AnnIndexModel): DataFrame = {
     val cfg = model.cfg
@@ -3524,8 +3540,8 @@ object Similarity {
    * `threshold` (match = best by cosine DESC, corpus id ASC), else
    * 'new'. Within-batch duplicates are out of scope (run
    * [[semanticDedupCells]] over the batch alone first); the streaming
-   * twin is [[graft.streaming.StreamingCuration.semanticDedupStream]],
-   * whose flagged-id set this operator's 'dup' rows must equal.
+   * twin is [[semanticDedupFlags]], whose flagged-id set this
+   * operator's 'dup' rows must equal.
    *
    * Scale shape: both sides assign map-side over plan-literal
    * centroids; the batch is orders of magnitude smaller than the

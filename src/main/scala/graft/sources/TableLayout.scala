@@ -348,17 +348,14 @@ object TableLayout {
    */
   def streamToCellPartitioned(assigned: DataFrame, dir: String,
                               checkpoint: String,
-                              trigger: Option[org.apache.spark.sql.streaming.Trigger] = None,
                               partitionCols: Seq[String] = Seq("cell"))
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val w = assigned.writeStream.format("parquet")
-      .option("path", dir)
-      .option("checkpointLocation", checkpoint)
-      .partitionBy(partitionCols: _*)
-      .outputMode("append")
-    trigger.foreach(w.trigger)
-    graft.streaming.StateBackend.start(assigned.sparkSession, w, dir, checkpoint)
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    graft.streaming.StateBackend.start(assigned.sparkSession,
+      assigned.writeStream.format("parquet")
+        .option("path", dir)
+        .option("checkpointLocation", checkpoint)
+        .partitionBy(partitionCols: _*)
+        .outputMode("append"), dir, checkpoint)
 
   /**
    * Merge live IVF segments into a fresh base layout — the maintenance
@@ -467,17 +464,14 @@ object TableLayout {
    * landing → compaction → refresh loop).
    */
   def streamToSourcePartitioned(docs: DataFrame, dir: String,
-                                checkpoint: String,
-                                trigger: Option[org.apache.spark.sql.streaming.Trigger] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val w = docs.writeStream.format("parquet")
-      .option("path", dir)
-      .option("checkpointLocation", checkpoint)
-      .partitionBy("source")
-      .outputMode("append")
-    trigger.foreach(w.trigger)
-    graft.streaming.StateBackend.start(docs.sparkSession, w, dir, checkpoint)
-  }
+                                checkpoint: String)
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    graft.streaming.StateBackend.start(docs.sparkSession,
+      docs.writeStream.format("parquet")
+        .option("path", dir)
+        .option("checkpointLocation", checkpoint)
+        .partitionBy("source")
+        .outputMode("append"), dir, checkpoint)
 
   /**
    * Compact the small files of selected date partitions into

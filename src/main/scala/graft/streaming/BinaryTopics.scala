@@ -18,7 +18,7 @@ import org.apache.spark.sql.types.{BinaryType, StructField, StructType}
  * ONLY — same topics, same checkpoints, same operators, same tolerance
  * class (a structurally damaged record drops whole, the Kafka
  * deserializer behavior); batch-parity and corrupt-record specs run on
- * both codecs in StreamingCurationJobsSpec.
+ * both codecs in RecordCodecSpec.
  *
  * Transport container: a Kafka record's `value` is bytes, so on real
  * Kafka the encoded record goes straight into the message. The
@@ -27,9 +27,15 @@ import org.apache.spark.sql.types.{BinaryType, StructField, StructType}
  * splittable choice — unlike the JSON topics' `text` lines, which cannot
  * carry raw bytes at all. The parquet page layer adds its own cheap
  * (vectorized) decode, which the measured step absorbs — the comparison
- * BinaryTopics wins is end-to-end as deployed.
+ * BinaryTopics wins is end-to-end as deployed. Jobs take it as their
+ * [[TopicCodec]] where JSON is the default.
  */
-object BinaryTopics {
+object BinaryTopics extends TopicCodec {
+
+  /** Named after its value's Spark type. */
+  val name: String = BinaryType.typeName
+
+  protected val format: String = "parquet"
 
   /** The Kafka value shape a binary topic reader yields. */
   val valueSchema: StructType =
@@ -49,32 +55,10 @@ object BinaryTopics {
     * parse-error skip. */
   def decode(raw: DataFrame, schema: StructType): DataFrame = {
     val rec: Column = ColumnShim.column(RecordBinaryToStruct(
-      ColumnShim.expression(col("value").cast("binary")), schema))
+      ColumnShim.expression(col("value").cast(BinaryType)), schema))
     raw.filter(col("value").isNotNull)
       .select(rec.as("r"))
       .filter(col("r").isNotNull)
       .select(schema.fieldNames.map(f => col(s"r.$f").as(f)).toIndexedSeq: _*)
   }
-
-  /** File-backed binary topic sink for an [[encode]]d single-`value`
-    * frame: parquet container, append mode, checkpointed — the codec
-    * twin of [[JsonStreams.writeValueTopic]]. */
-  def writeValueTopic(value: DataFrame, dir: String, checkpoint: String,
-                      trigger: Option[org.apache.spark.sql.streaming.Trigger] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val w = value.writeStream
-      .format("parquet")
-      .option("path", dir)
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-    trigger.foreach(w.trigger)
-    StateBackend.start(value.sparkSession, w, dir, checkpoint)
-  }
-
-  /** Encode + sink in one call — the codec twin of
-    * [[JsonStreams.writeTopic]]. */
-  def writeTopic(df: DataFrame, dir: String, checkpoint: String,
-                 trigger: Option[org.apache.spark.sql.streaming.Trigger] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    writeValueTopic(encode(df), dir, checkpoint, trigger)
 }

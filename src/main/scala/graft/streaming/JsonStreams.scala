@@ -2,7 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /**
  * Kafka-envelope JSON sources and sinks (SURVEY §2.1 S1-S4, S7-S9).
@@ -15,9 +16,17 @@ import org.apache.spark.sql.types.StructType
  * same code serves `spark.readStream.format("kafka")` (when the connector
  * jar is on the classpath), a file-backed topic directory (used by the
  * tests and local runners — this container has no Kafka), or a
- * `MemoryStream[String]` renamed to `value`.
+ * `MemoryStream[String]` renamed to `value`. The file-backed topics hold
+ * one JSON record per text line; as a [[TopicCodec]] this is every job's
+ * default wire format.
  */
-object JsonStreams {
+object JsonStreams extends TopicCodec {
+
+  val name: String = "json"
+
+  protected val format: String = "text"
+
+  val valueSchema: StructType = StructType(Seq(StructField("value", StringType)))
 
   /**
    * S4: decode a Kafka-shaped frame (`value` string/binary) into typed rows.
@@ -79,33 +88,14 @@ object JsonStreams {
     df.select(to_json(struct(df.columns.map(col).toIndexedSeq: _*)).as("value"))
 
   /**
-   * File-backed topic sink: append-mode JSON-lines with a checkpoint (T6 —
-   * the analogue of the reference's RocksDB checkpoint volume,
-   * docker-compose.yml:76-78; Spark persists source offsets + operator
-   * state under `checkpointLocation` and recovers exactly-once on restart).
-   * Returns the started query; caller awaits/stops it.
+   * Structured file-backed topic sink: `df`'s columns written as JSON
+   * lines (the `json` format, not an [[encode]]d `value`), appended with
+   * a checkpoint. Returns the started query; caller awaits/stops it.
    */
-  def writeTopic(df: DataFrame, dir: String, checkpoint: String,
-                 trigger: Option[org.apache.spark.sql.streaming.Trigger] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val w = df.writeStream
+  override def writeTopic(df: DataFrame, dir: String,
+                          checkpoint: String): StreamingQuery =
+    StateBackend.start(df.sparkSession, df.writeStream
       .format("json")
-      .option("path", dir)
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-    trigger.foreach(w.trigger)
-    StateBackend.start(df.sparkSession, w, dir, checkpoint)
-  }
-
-  /**
-   * File-backed sink for an [[encode]]d single-`value` frame, written with
-   * the `text` format so each line is exactly the Kafka message payload —
-   * symmetric with reading a topic via `spark.readStream.text(dir)`.
-   */
-  def writeValueTopic(value: DataFrame, dir: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    StateBackend.start(value.sparkSession, value.writeStream
-      .format("text")
       .option("path", dir)
       .option("checkpointLocation", checkpoint)
       .outputMode("append"), dir, checkpoint)

@@ -49,11 +49,11 @@ import java.nio.file.{Files, Path}
  * one falls behind (the job is the limit), its feeder lands under 90% of
  * the offered rows (the feeder is the limit) or the ladder tops out.
  *
- * Event time is decoupled from wall time (`simMsPerRow`) so watermarks,
- * window closes, and join-state GC run at a realistic event-time pace
- * regardless of the wall rate — state stays bounded by the same horizon
- * arithmetic as production, which is what makes a 20-second step
- * representative of a day-long run.
+ * Event time is decoupled from wall time (a fixed number of event-ms per
+ * row) so watermarks, window closes, and join-state GC run at a
+ * realistic event-time pace regardless of the wall rate — state stays
+ * bounded by the same horizon arithmetic as production, which is what
+ * makes a 20-second step representative of a day-long run.
  */
 object StreamThroughput {
 
@@ -213,20 +213,30 @@ object StreamThroughput {
     }
   }
 
+  /** Event-time pace of [[mainJobStep]]'s feed: 400 event-seconds per
+    * wall-second at any rate (200 ms per row at 2,000 rows/s), so a 20 s
+    * step closes more than a hundred of the job's 1-minute windows past
+    * its 11-minute chained watermark, and the step's latency rests on
+    * that many windows. */
+  private val MainEventMsPerWallSecond = 400000L
+
+  /** Event-time pace of [[docStream]]: ms per document. */
+  private val DocEventMsPerRow = 20L
+  private val DocVocab = 64
+  private val DocWords = 40
+
   /** Synthetic curation-ingest document stream off the `rate` source, in
-    * [[StreamingCurationJobs.docSchema]] shape: ~40-word texts drawn
-    * from a small vocabulary by per-(row, position) hash over the FULL
+    * [[StreamingCurationJobs.docSchema]] shape: 40-word texts drawn
+    * from a 64-word vocabulary by per-(row, position) hash over the FULL
     * row index, with a stopword every 5th token — so every document is
     * unique and most clear the deployed quality gate, exercising
     * shingling, fingerprinting, dedup state and the curated sink's write
     * path. [[ingestJobStep]] requires a majority of the fed docs to reach
     * the sink, so a gate or feed change that drops most of them fails
     * the step instead of measuring an empty sink. Event time advances
-    * `simMsPerRow` ms per row from `startMs`, independent of wall pace. */
-  def docStream(spark: SparkSession, rowsPerSecond: Int,
-                startMs: Long = 0L, simMsPerRow: Long = 20L,
-                vocab: Int = 64, wordsPerDoc: Int = 40): DataFrame = {
-    val words = array((0 until vocab).map(i => lit(s"w$i")): _*)
+    * 20 ms per row from the epoch, independent of wall pace. */
+  def docStream(spark: SparkSession, rowsPerSecond: Int): DataFrame = {
+    val words = array((0 until DocVocab).map(i => lit(s"w$i")): _*)
     val stops = array(lit("the"), lit("of"), lit("and"), lit("in"))
     spark.readStream.format("rate")
       .option("rowsPerSecond", rowsPerSecond)
@@ -234,15 +244,15 @@ object StreamThroughput {
       .select(col("value").as("idx"))
       .select(
         col("idx").as("doc_id"),
-        concat_ws(" ", transform(sequence(lit(1), lit(wordsPerDoc)), j =>
+        concat_ws(" ", transform(sequence(lit(1), lit(DocWords)), j =>
           when(j % 5 === 0, element_at(stops,
             (pmod(xxhash64(col("idx"), j, lit(3)), lit(4)) + 1).cast("int")))
             .otherwise(element_at(words,
-              (pmod(xxhash64(col("idx"), j), lit(vocab)) + 1).cast("int")))))
+              (pmod(xxhash64(col("idx"), j), lit(DocVocab)) + 1).cast("int")))))
           .as("text"),
         lit("en").as("lang"),
         concat(lit("src-"), pmod(xxhash64(col("idx"), lit(7)), lit(4))).as("source"),
-        timestamp_millis(lit(startMs) + col("idx") * simMsPerRow).as("ingest_time"))
+        timestamp_millis(col("idx") * DocEventMsPerRow).as("ingest_time"))
   }
 
   /** Small static benchmark set for the ingest job's decontamination
@@ -256,18 +266,20 @@ object StreamThroughput {
   }
 
   /** A file-backed topic: its records carry `schema` under the wire
-    * `codec` ([[JsonStreams]] text lines or [[BinaryTopics]] parquet). */
+    * `codec`. */
   private final case class Topic(dir: Path, schema: StructType,
-                                 codec: String = "json")
+                                 codec: TopicCodec = JsonStreams)
 
   /** A topic's records, decoded under its codec by the jobs' own decode
     * — the one reader a step counts its input with and keys its latency
     * from. */
   private def decoded(spark: SparkSession, t: Topic): DataFrame =
-    if (t.codec == "binary") BinaryTopics.decode(
-      spark.read.schema(BinaryTopics.valueSchema).parquet(t.dir.toString),
-      t.schema)
-    else JsonStreams.decode(spark.read.text(t.dir.toString), t.schema)
+    t.codec.read(spark, t.dir.toString, t.schema)
+
+  /** A step's name: the job's, suffixed with its codec's name unless the
+    * codec is the default JSON. */
+  private def stepName(job: String, codec: TopicCodec): String =
+    if (codec == JsonStreams) job else s"$job-${codec.name}"
 
   /** (path, mtime) of a dir's data files — the post-hoc landing clock.
     * Driver-side walk, bounded by the step's own file count. */
@@ -440,17 +452,18 @@ object StreamThroughput {
     * join, the materialized-topic hop and the chained watermark advance
     * that closes the window. Only windows the watermark closed during
     * the run emit (the last ~chainedWatermarkDelay of event time never
-    * closes — append-mode semantics, not measurement loss). */
+    * closes — append-mode semantics, not measurement loss). Event time
+    * advances [[MainEventMsPerWallSecond]] / `rate` ms per row. */
   def mainJobStep(spark: SparkSession, rate: Int, feedMs: Long = 20000L,
-                  simMsPerRow: Long = 20L,
-                  stateStoreProvider: Option[String] = None,
                   skewShare: Double = 0.0): StepResult =
     inTempDir("graft-sthr-main") { root =>
       val impr = Topic(root.resolve("impressions"), AdModel.impressionSchema)
       val clk = Topic(root.resolve("clicks"), AdModel.clickSchema)
       val work = root.resolve("work")
       val (iStream, cStream) = StreamingEventGenerator.events(spark, rate,
-        startMs = 0L, simMsPerRow = simMsPerRow, skewShare = skewShare)
+        startMs = 0L,
+        simMsPerRow = math.max(1L, MainEventMsPerWallSecond / rate),
+        skewShare = skewShare)
       // coalesce: the rate source defaults to one partition per core; at
       // these volumes 32 files per topic per microbatch is pure listing
       // overhead for the consumer
@@ -473,8 +486,7 @@ object StreamThroughput {
         rate, feedMs, tailAllowanceMs = 12000L,
         Seq(f1, f2), Seq(impr, clk),
         () => StreamingJobs.runMainJob(spark, impr.dir.toString,
-          clk.dir.toString, work.toString, maxFilesPerTrigger = 10000,
-          stateStoreProvider = stateStoreProvider),
+          clk.dir.toString, work.toString, maxFilesPerTrigger = 10000),
         probe, spark)
     }
 
@@ -503,12 +515,8 @@ object StreamThroughput {
     val sc = df.sparkSession.sparkContext
     // the query's thread inherits the starting thread's local properties
     sc.setLocalProperty("spark.scheduler.pool", "feeders")
-    try
-      if (topic.codec == "binary")
-        BinaryTopics.writeValueTopic(BinaryTopics.encode(df).coalesce(2),
-          topic.dir.toString, ck.toString)
-      else JsonStreams.writeValueTopic(JsonStreams.encode(df).coalesce(2),
-        topic.dir.toString, ck.toString)
+    try topic.codec.writeValueTopic(topic.codec.encode(df).coalesce(2),
+      topic.dir.toString, ck.toString)
     finally sc.setLocalProperty("spark.scheduler.pool", null)
   }
 
@@ -519,7 +527,7 @@ object StreamThroughput {
     * the serving snapshot the arrivals fold into. */
   def annJobStep(spark: SparkSession, rate: Int, feedMs: Long = 20000L,
                  corpusDir: String = "/root/testdata/sf0.001",
-                 codec: String = "json"): StepResult =
+                 codec: TopicCodec = JsonStreams): StepResult =
     inTempDir("graft-sthr-ann") { root =>
       val emb = Topic(root.resolve("embeddings"),
         StreamingCurationJobs.embSchema, codec)
@@ -528,12 +536,12 @@ object StreamThroughput {
         spark.read.parquet(s"$corpusDir/embeddings.parquet"))
         .getOrElse(sys.error(s"no freezable corpus in $corpusDir"))
       // the codes topic carries the job's output schema under its codec
-      val codesSchema = StreamingCuration.annIngestStream(
+      val codesSchema = graft.similarity.Similarity.annAssignStateless(
         spark.createDataFrame(java.util.List.of[Row](),
           StreamingCurationJobs.embSchema), model).schema
       val feeder = feedTopic(embStream(spark, rate), emb,
         root.resolve("_ck/emb"))
-      runStep(if (codec == "json") "ann" else s"ann-$codec",
+      runStep(stepName("ann", codec),
         rate, feedMs, tailAllowanceMs = 3000L,
         Seq(feeder), Seq(emb),
         () => Seq(StreamingCurationJobs.runAnnIngestJob(spark,
@@ -549,22 +557,19 @@ object StreamThroughput {
     * curated sink: a ceiling measured on a job that drops its whole feed
     * would time the drop path only. */
   def ingestJobStep(spark: SparkSession, rate: Int, feedMs: Long = 20000L,
-                    simMsPerRow: Long = 20L,
-                    stateStoreProvider: Option[String] = None,
-                    codec: String = "json"): StepResult =
+                    codec: TopicCodec = JsonStreams): StepResult =
     inTempDir("graft-sthr-ingest") { root =>
       val docs = Topic(root.resolve("docs"),
         StreamingCurationJobs.docSchema, codec)
       val work = root.resolve("work")
-      val feeder = feedTopic(docStream(spark, rate, simMsPerRow = simMsPerRow),
-        docs, root.resolve("_ck/docs"))
+      val feeder = feedTopic(docStream(spark, rate), docs,
+        root.resolve("_ck/docs"))
       // single-query topology: one batch of tail is enough
-      val step = runStep(if (codec == "json") "ingest" else s"ingest-$codec",
+      val step = runStep(stepName("ingest", codec),
         rate, feedMs, tailAllowanceMs = 3000L,
         Seq(feeder), Seq(docs),
         () => Seq(StreamingCurationJobs.runIngestJob(spark, docs.dir.toString,
-          benchDocs(spark), work.toString,
-          stateStoreProvider = stateStoreProvider, codec = codec)),
+          benchDocs(spark), work.toString, codec = codec)),
         Probe.byId(Topic(work.resolve("curated"),
           StreamingCurationJobs.curatedSchema), "doc_id"),
         spark)

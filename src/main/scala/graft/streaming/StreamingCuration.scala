@@ -3,6 +3,8 @@ package graft.streaming
 import graft.text.{Dedup, TextOps}
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.{ColumnShim, ShingleSetHit}
+import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /**
@@ -10,12 +12,16 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
  * pipeline runs while INGESTING a corpus, rather than over a landed one
  * (same relationship as [[StreamingPipelines]] to the batch ad queries).
  *
- * Both operators are built from the bounded-state primitives the ad
- * pipeline already exercises: `dropDuplicatesWithinWatermark` (state GC'd
- * once the watermark passes, the only viable dedup form at 100 TB — a
- * plain `dropDuplicates` pins every fingerprint ever seen) and
- * stream-static joins (the static side is planned per microbatch as an
- * ordinary broadcast — no streaming state at all).
+ * Stateful operators use the bounded-state primitives the ad pipeline
+ * already exercises: `dropDuplicatesWithinWatermark` (state GC'd once
+ * the watermark passes, the only viable dedup form at 100 TB — a plain
+ * `dropDuplicates` pins every fingerprint ever seen) and watermarked
+ * windowed aggregations. Static reference sets (the benchmark n-grams)
+ * travel as a broadcast set probed per row — no streaming state at all.
+ * The stateless scorers (quality classifier, language id, BM25 routing,
+ * semantic decontamination, ANN assignment) run on a stream as they are:
+ * call their `*Stateless` forms in [[graft.text.TextAnalysis]],
+ * [[graft.text.Retrieval]] and [[graft.similarity.Similarity]] directly.
  */
 object StreamingCuration {
 
@@ -107,133 +113,55 @@ object StreamingCuration {
     graft.ops.Sessionize.userSessions(
       events.withWatermark(tsCol, watermarkDelay), gapSeconds, tsCol)
 
-  /** The static benchmark shingle index `decontaminateFlags` joins
-    * against: one `shingle` row per distinct benchmark n-gram. Returned
-    * UNPERSISTED — the caller owns the cache (persist before starting
-    * the stream, unpersist on shutdown). An unpersisted index
-    * re-tokenizes and re-aggregates the benchmark corpus in EVERY
-    * microbatch of the stream-static join, so long-running jobs should
-    * always persist; building it inside `decontaminateFlags` (pre-r7)
-    * persisted a fresh untracked copy per invocation — a cache leak for
-    * tests and multi-stream jobs. */
+  /** The static benchmark shingle index [[decontaminateFlags]] and
+    * [[StreamingCurationJobs.decontaminateExclude]] probe: one `shingle`
+    * row per distinct benchmark n-gram. It is collected to the driver
+    * once, when the stream is built, so it needs no cache. */
   def benchShingleIndex(benchDocs: DataFrame, shingleWidth: Int = 5): DataFrame =
     Dedup.shingleArrays(benchDocs, shingleWidth)
       .select(explode(col("sh")).as("shingle"))
       .distinct()
 
-  /**
-   * Streaming benchmark decontamination: flag each arriving training
-   * document sharing any word `shingleWidth`-gram with the (static,
-   * small) benchmark set. The benchmark index is a plain batch frame —
-   * Spark broadcasts it into every microbatch (stream-static inner
-   * join, stateless); the only streaming state is the per-doc_id dedup
-   * that collapses multiple shingle hits to one flag row, bounded by
-   * the watermark like everything else.
-   *
-   * Output: one (doc_id, `timeCol`) row per flagged document. The
-   * per-doc hit COUNT of the batch twin ([[Dedup.decontaminate]]) is
-   * deliberately not computed here — it would need a windowed
-   * aggregation delaying emission until window close, and the flag is
-   * what gates ingestion; run the batch twin for the audit report.
-   *
-   * @param benchIndex a [[benchShingleIndex]] frame built with the SAME
-   *                   `shingleWidth`; caller-persisted for multi-batch
-   *                   streams (see [[benchShingleIndex]])
-   */
-  def decontaminateFlags(docStream: DataFrame, benchIndex: DataFrame,
-                         shingleWidth: Int = 5,
-                         timeCol: String = "ingest_time",
-                         watermarkDelay: String = "10 seconds"): DataFrame = {
-    // watermark BEFORE the shingle join: docs matching no benchmark
-    // shingle emit zero join rows, so a post-join watermark would never
-    // advance on a clean stream and the per-doc dedup state would grow
-    // forever — the watermark must see every arriving document
-    docStream
-      .withWatermark(timeCol, watermarkDelay)
-      .select(col("doc_id"), col(timeCol),
-        explode(array_distinct(
-          TextOps.shingles(TextOps.tokens(col("text")), shingleWidth)))
-          .as("shingle"))
-      .join(broadcast(benchIndex), "shingle")
-      .select(col("doc_id"), col(timeCol))
-      .dropDuplicatesWithinWatermark(Seq("doc_id"))
+  /** The per-row benchmark probe of [[decontaminateFlags]] and
+    * [[StreamingCurationJobs.decontaminateExclude]]: true iff one of the
+    * row's word `shingleWidth`-grams is in `benchIndex`. The index is
+    * collected to the driver ONCE, here, and shipped once as a
+    * `SparkContext.broadcast` set; each document is then one codegen'd
+    * probe ([[org.apache.spark.sql.graftshim.ShingleSetHit]]) of its
+    * shingles against that set — no join, no state, and no microbatch
+    * re-reads the index. None when the index is empty (no row can hit). */
+  private[streaming] def benchShingleHit(benchIndex: DataFrame,
+                                         shingleWidth: Int): Option[Column] = {
+    val shingles = new java.util.HashSet[UTF8String]()
+    benchIndex.collect().foreach(r =>
+      shingles.add(UTF8String.fromString(r.getString(0))))
+    Option.when(!shingles.isEmpty)(ColumnShim.column(ShingleSetHit(
+      ColumnShim.expression(TextOps.shingles(TextOps.tokens(col("text")), shingleWidth)),
+      benchIndex.sparkSession.sparkContext.broadcast(shingles))))
   }
 
   /**
-   * Streaming SEMANTIC decontamination — the embedding-space sibling of
-   * [[decontaminateFlags]], catching paraphrased benchmark leakage whose
-   * n-grams don't overlap: each arriving vector is flagged if its cosine
-   * to any (static, benchmark-sized) eval vector reaches `threshold`.
+   * Streaming benchmark decontamination: flag each arriving training
+   * document sharing any word `shingleWidth`-gram with the (static,
+   * small) benchmark set, through the broadcast probe of
+   * [[benchShingleHit]]. A pure per-row filter: no watermark and no
+   * state, so every arrival is judged on its own — a doc_id that
+   * arrives twice is flagged on each arrival.
    *
-   * Unlike the n-gram flagger this needs NO watermark and NO state at
-   * all: [[graft.similarity.Similarity.semanticDecontaminateStateless]]
-   * folds the whole candidate-bucket → exact-verify pipeline into
-   * per-row expressions over plan-literal eval maps, so every microbatch
-   * is a pure projection (append-safe by construction, output row count
-   * ≤ input row count, nothing to GC). Same outputs and tie rules as the
-   * batch operator, row-for-row.
+   * Output: one (doc_id, `timeCol`) row per flagged arrival. The
+   * per-doc hit COUNT of the batch twin ([[Dedup.decontaminate]]) is
+   * deliberately not computed here; the flag is what gates ingestion,
+   * run the batch twin for the audit report.
    *
-   * @param embStream   streaming frame with (vec_id, embedding)
-   * @param evalVectors static (vec_id, embedding) eval/benchmark set
+   * @param benchIndex a [[benchShingleIndex]] frame built with the SAME
+   *                   `shingleWidth`; collected once
    */
-  def semanticDecontaminateStream(embStream: DataFrame,
-                                  evalVectors: DataFrame,
-                                  threshold: Double, bits: Int = 8,
-                                  tables: Int = 8): DataFrame =
-    graft.similarity.Similarity.semanticDecontaminateStateless(
-      embStream, evalVectors, threshold, bits, tables)
-
-  /**
-   * The EVAL-SUITE-scale sibling of [[semanticDecontaminateStream]]:
-   * where the stateless form folds the eval vectors into the plan
-   * (right for benchmark-sized suites), this joins a BROADCAST
-   * [[graft.similarity.Similarity.evalBucketIndex]] — plan size
-   * constant, eval suite on the data plane, watermark-bounded per-doc
-   * flag dedup as the only state (the [[decontaminateFlags]] shape in
-   * embedding space). Flagged-id parity with the stateless form is
-   * pinned in StreamingCurationSpec.
-   *
-   * @param evalIndex an [[graft.similarity.Similarity.evalBucketIndex]]
-   *                  built with the SAME (bits, tables); caller-persisted
-   *                  for multi-batch streams
-   */
-  def semanticDecontaminateStreamBroadcast(embStream: DataFrame,
-                                           evalIndex: DataFrame,
-                                           threshold: Double,
-                                           bits: Int = 8, tables: Int = 8,
-                                           timeCol: String = "ingest_time",
-                                           watermarkDelay: String = "10 seconds")
-      : DataFrame =
-    graft.similarity.Similarity.semanticDecontaminateFlags(
-      embStream, evalIndex, threshold, bits, tables, timeCol, watermarkDelay)
-
-  /**
-   * Streaming SemDeDup admission — the embedding-space sibling of the
-   * MinHash ingest dedup: each arriving vector is flagged when an
-   * EXISTING corpus vector in its trained IVF cell reaches `threshold`
-   * cosine, so a continuous ingest can route semantic near-duplicates
-   * away from the landed corpus the way
-   * [[graft.text.Dedup.incremental]] routes textual ones. Delegates to
-   * [[graft.similarity.Similarity.semanticDedupFlags]]; flagged-id
-   * parity with the batch
-   * [[graft.similarity.Similarity.semanticDedupIncremental]]'s 'dup'
-   * verdicts over the same split is pinned in StreamingCurationSpec.
-   * Only the flag SET is contract (the per-flag best match is
-   * microbatch-order dependent — the scaladoc there explains); state is
-   * one watermark-bounded per-vec dedup, the static corpus side prunes
-   * to touched cells.
-   *
-   * @param embStream streaming (vec_id, embedding, `timeCol`)
-   * @param corpus    static (vec_id, embedding); caller-persisted
-   * @param cells     frozen trained centroids shared with the batch twin
-   */
-  def semanticDedupStream(embStream: DataFrame, corpus: DataFrame,
-                          cells: Array[(Long, Seq[Double], Double)],
-                          threshold: Double = 0.42, maxCellSize: Int = 4096,
-                          timeCol: String = "ingest_time",
-                          watermarkDelay: String = "10 seconds"): DataFrame =
-    graft.similarity.Similarity.semanticDedupFlags(embStream, corpus,
-      cells, threshold, maxCellSize, timeCol, watermarkDelay)
+  def decontaminateFlags(docStream: DataFrame, benchIndex: DataFrame,
+                         shingleWidth: Int = 5,
+                         timeCol: String = "ingest_time"): DataFrame =
+    docStream
+      .filter(benchShingleHit(benchIndex, shingleWidth).getOrElse(lit(false)))
+      .select(col("doc_id"), col(timeCol))
 
   /** Input row of [[selectTokenBudgetStream]] after the token meter
     * (public: encoder codegen cannot deserialize a private class). */
@@ -304,10 +232,10 @@ object StreamingCuration {
     * before sorting — the STATE is a single long, but a hot source in a
     * giant trigger concentrates that batch buffer in one task (the
     * StreamingAnomaly/StreamingZscore per-group discipline). Deployments
-    * with a dominant source should bound the trigger
-    * (maxOffsetsPerTrigger / maxFilesPerTrigger) so a microbatch-group
-    * stays task-sized; the admission itself is order-deterministic at
-    * any trigger size. */
+    * with a dominant source should bound the source's per-trigger
+    * admission (Kafka offsets or topic files per trigger) so a
+    * microbatch-group stays task-sized; the admission itself is
+    * order-deterministic at any trigger size. */
   private def perSourceAdmit(budget: Long)(
       source: String, rows: Iterator[DocTokens],
       state: GroupState[Long]): Iterator[TokenBudgetAdmit] = {
@@ -353,44 +281,8 @@ object StreamingCuration {
         col("r"), col("b"), col("c"))
 
   /**
-   * Streaming model-based quality filter — the ingest-time shape of
-   * [[graft.text.TextAnalysis.hashedLinearScore]]: the broadcast weight
-   * table becomes one array literal in the plan and each document
-   * scores over its OWN tokens with a per-row fold
-   * ([[graft.text.TextAnalysis.hashedLinearScoreStateless]]) — a pure
-   * projection, so the stream holds zero state, needs no watermark, and
-   * is append-safe by construction. Scores match the batch operator
-   * row-for-row across microbatch boundaries (StreamingCurationSpec).
-   *
-   * @param docStream streaming frame with (doc_id, text)
-   */
-  def qualityClassifierStream(docStream: DataFrame, nBuckets: Int = 4096,
-                              threshold: Double = 0.0,
-                              weights: Option[Array[Long]] = None): DataFrame =
-    graft.text.TextAnalysis.hashedLinearScoreStateless(
-      docStream, nBuckets, threshold, weights)
-
-  /**
-   * Streaming language ID (r20) — the ingest-time shape of the TRAINED
-   * [[graft.text.TextAnalysis.langIdTrained]]: the |langs| weight
-   * tables fold into the plan as literals and every arriving document
-   * folds its own trigram array per-row
-   * ([[graft.text.TextAnalysis.langIdTrainedStateless]]) — a pure
-   * projection, ZERO state, no watermark, append-safe, row-for-row
-   * equal to the batch scorer (TextAnalysisSpec pins the twin;
-   * StreamingCurationSpec pins it under a real stream). The production
-   * shape: train on a labeled snapshot, stamp language at ingest.
-   */
-  def langIdStream(docStream: DataFrame,
-                   weights: Map[String, Array[Long]],
-                   langs: Seq[String] =
-                     graft.text.TextAnalysis.LangIdLangs,
-                   nBuckets: Int = 4096): DataFrame =
-    graft.text.TextAnalysis.langIdTrainedStateless(
-      docStream, langs, nBuckets, weights)
-
-  /**
-   * [[qualityClassifierStream]] under a VERSIONED frozen model — the
+   * [[graft.text.TextAnalysis.hashedLinearScoreStateless]] (the
+   * streaming quality classifier) under a VERSIONED frozen model — the
    * [[FrozenModelStore]] recipe's classifier instance (r16 verdict ask
    * #6): resolves the store's current generation ONCE at build, scores
    * under that generation's weights, and stamps every output row
@@ -401,7 +293,7 @@ object StreamingCuration {
    * model version with no row re-scored or skipped (offsets continue).
    * Drilled in FrozenModelSwapSpec; the recipe scaladoc in
    * [[FrozenModelStore]] is shared by the other stateless twins
-   * ([[bm25RouteStream]], the robust-gate baselines, semantic
+   * ([[bm25RouteStreamVersioned]], the robust-gate baselines, semantic
    * decontamination).
    */
   def qualityClassifierStreamVersioned(spark: org.apache.spark.sql.SparkSession,
@@ -413,29 +305,14 @@ object StreamingCuration {
     val w = FrozenModelStore.loadWeights(spark, storeDir, v)
     require(w.length == nBuckets,
       s"published weight table ${w.length} != nBuckets $nBuckets")
-    qualityClassifierStream(docStream, nBuckets, threshold, Some(w))
+    graft.text.TextAnalysis.hashedLinearScoreStateless(
+        docStream, nBuckets, threshold, Some(w))
       .withColumn("model_version", org.apache.spark.sql.functions.lit(v))
   }
 
   /**
-   * Streaming BM25 standing-query router — the ingest-time shape of
-   * [[graft.text.Retrieval.bm25MoreLikeThis]]: a frozen
-   * [[graft.text.Retrieval.Bm25Model]] (query terms + idf + corpus mean
-   * length, collected once from a corpus snapshot) folds into the plan
-   * as literals and every arriving document is scored per-row against
-   * each query it shares a term with — a pure projection, zero state, no
-   * watermark, append-safe. Scores equal the batch operator's for the
-   * same (query, doc) pair across microbatch boundaries
-   * (StreamingCurationSpec).
-   *
-   * @param docStream streaming frame with (doc_id, text)
-   */
-  def bm25RouteStream(docStream: DataFrame,
-                      model: graft.text.Retrieval.Bm25Model): DataFrame =
-    graft.text.Retrieval.bm25ScoreStateless(docStream, model)
-
-  /**
-   * [[bm25RouteStream]] under a VERSIONED frozen model — the second
+   * [[graft.text.Retrieval.bm25ScoreStateless]] (the streaming BM25
+   * standing-query router) under a VERSIONED frozen model — the second
    * [[FrozenModelStore]] instance (r17 verdict ask #3: the recipe is a
    * recipe, not a classifier one-off): resolves the store's current
    * generation ONCE at build, scores against that generation's
@@ -450,7 +327,7 @@ object StreamingCuration {
     val v = FrozenModelStore.currentVersion(storeDir).getOrElse(
       sys.error(s"no published BM25 model under $storeDir"))
     val m = FrozenModelStore.loadBm25(spark, storeDir, v)
-    bm25RouteStream(docStream, m)
+    graft.text.Retrieval.bm25ScoreStateless(docStream, m)
       .withColumn("model_version", org.apache.spark.sql.functions.lit(v))
   }
 
@@ -474,37 +351,4 @@ object StreamingCuration {
     graft.text.TextAnalysis.robustLengthGateStream(docStream, stats, threshold)
       .withColumn("model_version", org.apache.spark.sql.functions.lit(v))
   }
-
-  /**
-   * Streaming ANN ingest — the living-index twin of
-   * [[graft.similarity.Similarity.incrementalAssign]] at the ingest
-   * boundary: every arriving vector is assigned its IVF cell and PQ
-   * codes against a FROZEN [[graft.similarity.Similarity.AnnIndexModel]]
-   * (coarse centroids + codebook collected once from the landed corpus
-   * snapshot and folded into the plan as literals). A pure projection —
-   * no join, no aggregation, zero state, no watermark, append-safe —
-   * so appending the emitted (vec_id, cell, code*) rows to the frozen
-   * codes table keeps the [[graft.similarity.Similarity.ivfPqTopK]]
-   * serving structure current at O(arrival rate), never O(corpus).
-   * Codes match the batch operator row-for-row across microbatch
-   * boundaries (StreamingAnnIngestSpec).
-   *
-   * @param embStream streaming frame with (vec_id, embedding)
-   */
-  def annIngestStream(embStream: DataFrame,
-                      model: graft.similarity.Similarity.AnnIndexModel)
-      : DataFrame =
-    graft.similarity.Similarity.annAssignStateless(embStream, model)
-
-  /** [[annIngestStream]] for a RESIDUAL-encoded index (r20): the frozen
-    * model's codebook was trained on residuals
-    * ([[graft.similarity.Similarity.freezeAnnIndexResidual]]) and
-    * arriving vectors get cells + residual codes in the same zero-state
-    * map-side projection — the ingest stream matching the registered
-    * residual IVF-PQ search family. Row-equal to the batch operator
-    * across microbatch boundaries (StreamingAnnIngestSpec). */
-  def annIngestResidualStream(embStream: DataFrame,
-                              model: graft.similarity.Similarity.AnnIndexModel)
-      : DataFrame =
-    graft.similarity.Similarity.annAssignResidualStateless(embStream, model)
 }

@@ -1,13 +1,10 @@
 package graft.streaming
 
-import graft.text.{TextAnalysis, TextOps}
-import org.apache.spark.network.util.JavaUtils
+import graft.text.TextAnalysis
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftshim.{ColumnShim, ShingleSetHit}
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType, TimestampType}
-import org.apache.spark.unsafe.types.UTF8String
 
 /**
  * End-to-end streaming CURATION topology — the training-data analogue of
@@ -33,13 +30,14 @@ import org.apache.spark.unsafe.types.UTF8String
  * and dedup/agg state survive restart with exactly-once file sinks —
  * identical recovery semantics to the ad jobs (T6).
  *
- * Admission: every curation job reads its topic through [[readDecoded]],
- * which caps a microbatch by BYTES at one file split per core
- * (`spark.sql.files.maxPartitionBytes` × `defaultParallelism`, both
- * session settings). A job that falls behind therefore drains its whole
- * backlog in the next microbatch, up to what one wave of tasks reads,
- * and pays the fixed per-batch cost (listing, planning, sink commit)
- * once per backlog instead of once per handful of files.
+ * Admission: every curation job reads its topic through its codec's
+ * [[TopicCodec.readStream]], which caps a microbatch by BYTES at one
+ * file split per core (`spark.sql.files.maxPartitionBytes` ×
+ * `defaultParallelism`, both session settings). A job that falls behind
+ * therefore drains its whole backlog in the next microbatch, up to what
+ * one wave of tasks reads. Trigger cadence and the state store provider
+ * are not job parameters: each query runs the default trigger under the
+ * session's provider.
  *
  * Scale notes: the only stateful operators are the ingest dedup (state
  * GC'd at the watermark horizon) and the windowed count aggregations
@@ -68,19 +66,15 @@ object StreamingCurationJobs {
 
   /**
    * The stateless benchmark-overlap exclusion: drops every row sharing a
-   * word `shingleWidth`-gram with the benchmark set — the inline sibling
-   * of [[StreamingCuration.decontaminateFlags]] (the flagger REPORTS
-   * matches and needs per-doc dedup state; this FILTERS, which a pure
-   * per-row predicate can do).
+   * word `shingleWidth`-gram with the benchmark set — the complement of
+   * [[StreamingCuration.decontaminateFlags]] (the flagger REPORTS the
+   * matching rows; this drops them), over the same probe.
    *
-   * The index is collected to the driver ONCE, here, and shipped once as
-   * a `SparkContext.broadcast` set; each document is then one codegen'd
-   * probe ([[org.apache.spark.sql.graftshim.ShingleSetHit]]) of its
-   * shingles against that set. A document is dropped iff one of its
-   * shingles is in the index — exactly the LEFT ANTI join on
-   * `array_contains(shingles, shingle)` against the same index, without
-   * the join: every microbatch does one scan, one decode and one Spark
-   * job, and no microbatch re-reads the index.
+   * A document is dropped iff one of its shingles is in the index
+   * ([[StreamingCuration.benchShingleHit]]'s broadcast probe) — exactly
+   * the LEFT ANTI join on `array_contains(shingles, shingle)` against the
+   * same index, without the join: every microbatch does one scan, one
+   * decode and one Spark job, and no microbatch re-reads the index.
    *
    * The set is not a plan literal: plan and codegen size would grow
    * linearly with the eval suite (megabytes at a real multi-benchmark
@@ -92,38 +86,9 @@ object StreamingCurationJobs {
    *                   built with the SAME `shingleWidth`; collected once
    */
   def decontaminateExclude(docStream: DataFrame, benchIndex: DataFrame,
-                           shingleWidth: Int = 5): DataFrame = {
-    val shingles = new java.util.HashSet[UTF8String]()
-    benchIndex.collect().foreach(r =>
-      shingles.add(UTF8String.fromString(r.getString(0))))
-    if (shingles.isEmpty) return docStream
-    val hit = ShingleSetHit(ColumnShim.expression(
-        TextOps.shingles(TextOps.tokens(col("text")), shingleWidth)),
-      docStream.sparkSession.sparkContext.broadcast(shingles))
-    docStream.filter(!ColumnShim.column(hit))
-  }
-
-  /** Decode `topic` with the declared schema under the chosen wire
-    * codec — `"json"` (text-lines, [[JsonStreams]]; the reference's
-    * format and the default) or `"binary"` ([[BinaryTopics]], the
-    * measured-throughput path). Same tolerance class either way:
-    * damaged records drop, they never fail the query. Admission is by
-    * bytes: at most `spark.sql.files.maxPartitionBytes` ×
-    * `defaultParallelism` per microbatch, one file split per core. */
-  private def readDecoded(spark: SparkSession, topic: String,
-                          schema: StructType, codec: String): DataFrame = {
-    val splitBytes = JavaUtils.byteStringAsBytes(
-      spark.conf.get("spark.sql.files.maxPartitionBytes"))
-    val reader = spark.readStream.option("maxBytesPerTrigger",
-      splitBytes * spark.sparkContext.defaultParallelism)
-    codec match {
-      case "json" => JsonStreams.decode(reader.text(topic), schema)
-      case "binary" => BinaryTopics.decode(
-        reader.schema(BinaryTopics.valueSchema).parquet(topic), schema)
-      case other => throw new IllegalArgumentException(
-        s"unknown topic codec '$other' (json | binary)")
-    }
-  }
+                           shingleWidth: Int = 5): DataFrame =
+    StreamingCuration.benchShingleHit(benchIndex, shingleWidth)
+      .fold(docStream)(hit => docStream.filter(!hit))
 
   /**
    * Ingest job: `docsTopic` ([[docSchema]] under `codec`) → benchmark
@@ -132,22 +97,18 @@ object StreamingCurationJobs {
    *
    * @param benchDocs static benchmark frame (doc_id, text) — its shingle
    *                  index is built and broadcast once at job build
-   * @param codec     wire codec of the input topic ("json" default,
-   *                  "binary" the fixed-width fast path — see
-   *                  [[BinaryTopics]]); the curated topic is always JSON,
-   *                  the format [[runStatsJob]] reads
+   * @param codec     wire codec of the input topic ([[BinaryTopics]] is
+   *                  the fixed-width fast path); the curated topic is
+   *                  always JSON, the format [[runStatsJob]] reads
    */
   def runIngestJob(spark: SparkSession, docsTopic: String,
                    benchDocs: DataFrame, workDir: String,
                    watermarkDelay: String = "10 seconds",
                    shingleWidth: Int = 5,
-                   stateStoreProvider: Option[String] = None,
                    contractChecks: Seq[graft.contracts.Contracts.Check] =
                      Seq.empty,
-                   codec: String = "json",
-                   triggerInterval: Option[String] = None): StreamingQuery =
-    StateBackend.withProvider(spark, stateStoreProvider) {
-    val decoded = readDecoded(spark, docsTopic, docSchema, codec)
+                   codec: TopicCodec = JsonStreams): StreamingQuery = {
+    val decoded = codec.readStream(spark, docsTopic, docSchema)
     // contract gate FIRST (a pure projection — cheapest stage, and a
     // violating row must not reach dedup state or the curated topic);
     // the violators themselves are recorded by the dead-letter twin
@@ -172,9 +133,7 @@ object StreamingCurationJobs {
     // JSON under either input codec: its one consumer, the chained stats
     // job, re-reads it as JSON with the declared curatedSchema
     JsonStreams.writeTopic(curated,
-      s"$workDir/curated", s"$workDir/_checkpoints/curated",
-      triggerInterval.map(
-        org.apache.spark.sql.streaming.Trigger.ProcessingTime(_)))
+      s"$workDir/curated", s"$workDir/_checkpoints/curated")
   }
 
   /**
@@ -191,7 +150,7 @@ object StreamingCurationJobs {
   def runQuarantineJob(spark: SparkSession, docsTopic: String,
                        contractChecks: Seq[graft.contracts.Contracts.Check],
                        workDir: String): StreamingQuery = {
-    val decoded = readDecoded(spark, docsTopic, docSchema, "json")
+    val decoded = JsonStreams.readStream(spark, docsTopic, docSchema)
     JsonStreams.writeTopic(
       graft.contracts.Contracts.quarantine(decoded, contractChecks)
         .filter(!col("keep")).drop("keep"),
@@ -205,13 +164,14 @@ object StreamingCurationJobs {
       org.apache.spark.sql.types.DoubleType))))
 
   /**
-   * ANN ingest job: `embTopic` (JSON-lines, [[embSchema]]) →
-   * [[StreamingCuration.annIngestStream]] against the frozen `model` →
-   * `<workDir>/codes` (JSON topic of (vec_id, cell, code*, recon_error)
-   * rows, ready to append to the serving codes table). A fully stateless
-   * topology — decode + projection + append sink — so the checkpoint
-   * carries only source offsets; null/malformed vectors are dropped at
-   * decode (vec_id or embedding missing ⇒ no assignment is meaningful).
+   * ANN ingest job: `embTopic` ([[embSchema]] under `codec`) →
+   * [[graft.similarity.Similarity.annAssignStateless]] against the
+   * frozen `model` → `<workDir>/codes` (a topic of (vec_id, cell, code*,
+   * recon_error) rows under the same codec, ready to append to the
+   * serving codes table). A fully stateless topology — decode +
+   * projection + append sink — so the checkpoint carries only source
+   * offsets; null/malformed vectors are dropped at decode (vec_id or
+   * embedding missing ⇒ no assignment is meaningful).
    *
    * @param model a [[graft.similarity.Similarity.freezeAnnIndex]] of the
    *              landed corpus snapshot — frozen at job build, exactly
@@ -220,24 +180,12 @@ object StreamingCurationJobs {
   def runAnnIngestJob(spark: SparkSession, embTopic: String,
                       model: graft.similarity.Similarity.AnnIndexModel,
                       workDir: String,
-                      codec: String = "json",
-                      triggerInterval: Option[String] = None): StreamingQuery = {
-    val raw = readDecoded(spark, embTopic, embSchema, codec)
+                      codec: TopicCodec = JsonStreams): StreamingQuery = {
+    val raw = codec.readStream(spark, embTopic, embSchema)
       .filter(col("vec_id").isNotNull && col("embedding").isNotNull &&
         size(col("embedding")) === model.cfg.dim)
-    val codes = StreamingCuration.annIngestStream(raw, model)
-    // a stateless job's microbatch cost is mostly FIXED (listing +
-    // planning + sink commit): at high arrival rates the default
-    // as-fast-as-possible trigger spends it on small batches, so a
-    // processing-time trigger that accumulates more files per cycle
-    // amortizes the floor — the measured knob in BASELINE.md r11
-    val trig = triggerInterval.map(
-      org.apache.spark.sql.streaming.Trigger.ProcessingTime(_))
-    if (codec == "binary")
-      BinaryTopics.writeTopic(codes,
-        s"$workDir/codes", s"$workDir/_checkpoints/codes", trig)
-    else JsonStreams.writeTopic(codes,
-      s"$workDir/codes", s"$workDir/_checkpoints/codes", trig)
+    codec.writeTopic(graft.similarity.Similarity.annAssignStateless(raw, model),
+      s"$workDir/codes", s"$workDir/_checkpoints/codes")
   }
 
   /**
@@ -255,19 +203,16 @@ object StreamingCurationJobs {
   def runAnnLayoutJob(spark: SparkSession, embTopic: String,
                       corpus: DataFrame, layoutDir: String,
                       checkpoint: String,
-                      codec: String = "json",
-                      nCells: Int = 16,
-                      triggerInterval: Option[String] = None): StreamingQuery = {
+                      codec: TopicCodec = JsonStreams,
+                      nCells: Int = 16): StreamingQuery = {
     val dim = corpus.select(size(col("embedding"))).head().getInt(0)
-    val raw = readDecoded(spark, embTopic, embSchema, codec)
+    val raw = codec.readStream(spark, embTopic, embSchema)
       .filter(col("vec_id").isNotNull && col("embedding").isNotNull &&
         size(col("embedding")) === dim)
     graft.sources.TableLayout.streamToCellPartitioned(
       graft.similarity.Similarity.ivfCellAssignmentsAgainst(raw, corpus,
         nCells),
-      layoutDir, checkpoint,
-      triggerInterval.map(
-        org.apache.spark.sql.streaming.Trigger.ProcessingTime(_)))
+      layoutDir, checkpoint)
   }
 
   /**
@@ -278,9 +223,7 @@ object StreamingCurationJobs {
    */
   def runStatsJob(spark: SparkSession, workDir: String,
                   windowLength: String = "1 minute",
-                  watermarkDelay: String = "10 seconds",
-                  stateStoreProvider: Option[String] = None): StreamingQuery =
-    StateBackend.withProvider(spark, stateStoreProvider) {
+                  watermarkDelay: String = "10 seconds"): StreamingQuery = {
     val curated = JsonStreams.readTopic(spark, s"$workDir/curated", curatedSchema)
     JsonStreams.writeValueTopic(
       JsonStreams.encode(StreamingCuration.windowedTokenCounts(

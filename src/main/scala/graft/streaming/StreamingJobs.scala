@@ -24,7 +24,10 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType, Timestam
  *
  * Each query checkpoints under `<workDir>/_checkpoints/<name>` (T6 — the
  * RocksDB-volume analogue, docker-compose.yml:76-78): offsets + join/agg/
- * dedup state survive restart with exactly-once file sinks.
+ * dedup state survive restart with exactly-once file sinks. The state
+ * store provider is a deployment setting, not a job parameter: the jobs
+ * use the session's `spark.sql.streaming.stateStore.providerClass`
+ * (scope it around a start with [[StateBackend.withProvider]]).
  */
 object StreamingJobs {
 
@@ -50,14 +53,19 @@ object StreamingJobs {
     StructField("click_time", TimestampType)
   ))
 
+  /** Per-batch source admission of the ad jobs' raw topics, in files.
+    * Topic files are appended in rough time order, so a cap on files per
+    * trigger bounds how far one batch advances the watermark; see
+    * [[runMainJob]]'s `maxFilesPerTrigger` for why that matters. */
+  val MaxFilesPerTrigger: Int = 8
+
   /**
    * Main job (flink/flink_job.sql). Input topics are JSON-lines files in
    * the Kafka `value` shape (S1/S2); outputs land in `<workDir>/ctr_results`
    * and `<workDir>/engagement_results` (S7/S8). Returns the three started
    * queries (join materialization + two aggregations) — callers drive them
    * with `processAllAvailable()` / `awaitTermination()` and stop.
-   */
-  /**
+   *
    * @param chainedWatermarkDelay watermark delay for consumers of the
    *   materialized joined topic. Across a topic boundary the upstream
    *   join's watermark does not propagate, and unmatched (NULL-padded)
@@ -81,9 +89,7 @@ object StreamingJobs {
                  joinInterval: String = "INTERVAL 10 MINUTES",
                  windowLength: String = DefaultWindowLength,
                  chainedWatermarkDelay: String = "11 minutes",
-                 maxFilesPerTrigger: Int = 8,
-                 stateStoreProvider: Option[String] = None): Seq[StreamingQuery] =
-    StateBackend.withProvider(spark, stateStoreProvider) {
+                 maxFilesPerTrigger: Int = MaxFilesPerTrigger): Seq[StreamingQuery] = {
     def readValues(topic: String) = spark.readStream
       .option("maxFilesPerTrigger", maxFilesPerTrigger).text(topic)
     val impressions = JsonStreams.decode(readValues(imprTopic), AdModel.impressionSchema)
@@ -133,12 +139,9 @@ object StreamingJobs {
   def runAttributionJob(spark: SparkSession, eventsTopic: String,
                         workDir: String,
                         watermarkDelay: String = "10 seconds",
-                        finalizeDelayMs: Long = 10000L,
-                        maxFilesPerTrigger: Int = 8,
-                        stateStoreProvider: Option[String] = None): StreamingQuery =
-    StateBackend.withProvider(spark, stateStoreProvider) {
+                        finalizeDelayMs: Long = 10000L): StreamingQuery = {
     val ev = JsonStreams.decode(
-      spark.readStream.option("maxFilesPerTrigger", maxFilesPerTrigger)
+      spark.readStream.option("maxFilesPerTrigger", MaxFilesPerTrigger)
         .text(eventsTopic), eventSchema)
     def side(t: String) = ev.filter(org.apache.spark.sql.functions.col("event_type") === t)
       .select("event_id", "user_id", "ts")
@@ -157,9 +160,7 @@ object StreamingJobs {
    * applies the streaming LAG (§7.5), and writes anomaly_alerts (S9).
    */
   def runAnomalyJob(spark: SparkSession, ctrTopic: String, workDir: String,
-                    watermarkDelay: String = "5 seconds",
-                    stateStoreProvider: Option[String] = None): StreamingQuery =
-    StateBackend.withProvider(spark, stateStoreProvider) {
+                    watermarkDelay: String = "5 seconds"): StreamingQuery = {
     val ctr = JsonStreams.decode(
       spark.readStream.text(ctrTopic), AdModel.ctrResultSchema)
     JsonStreams.writeValueTopic(

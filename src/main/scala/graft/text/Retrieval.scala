@@ -162,8 +162,9 @@ object Retrieval {
    * shares a term with). The model folds into the plan as literals and
    * each row is scored by folding over its OWN tokens — no explode to
    * occurrence grain, no join, no aggregation, so the operator is
-   * append-safe on an unbounded stream with ZERO state (see
-   * [[graft.streaming.StreamingCuration.bm25RouteStream]]).
+   * append-safe on an unbounded stream with ZERO state and no watermark
+   * (the streaming standing-query router; scores equal the batch
+   * operator's across microbatch boundaries, StreamingCurationSpec).
    *
    * Per-term micro-unit contributions are the batch arithmetic verbatim
    * (same association order, same HALF_UP micro rounding), so scores are

@@ -803,8 +803,10 @@ object TextAnalysis {
    * a single array literal in the plan (`typedlit`, one Literal node,
    * not 4096), and the score folds over each row's own tokens with
    * `aggregate(...)` — no explode, no join, no aggregation, so the
-   * operator is append-safe on an unbounded stream with ZERO state
-   * (see [[graft.streaming.StreamingCuration.qualityClassifierStream]]).
+   * operator is append-safe on an unbounded stream with ZERO state and
+   * no watermark: the streaming model-based quality filter, equal to
+   * the batch operator across microbatch boundaries
+   * (StreamingCurationSpec).
    * Weights are the same salted-md5 stub computed driver-side
    * (O(nBuckets) scalar work); scores are identical to the batch
    * operator row-for-row (asserted in TextAnalysisSpec, incl. the
@@ -2273,8 +2275,10 @@ object TextAnalysis {
    * tables are plan literals, each row folds its OWN trigram array with
    * `aggregate(...)` — no explode, no join, no aggregation, ZERO state
    * on an unbounded stream. Row-for-row equal to the batch scorer
-   * (pinned in TextAnalysisSpec): the fold sums the same longs in
-   * string order, and long addition commutes exactly.
+   * (pinned in TextAnalysisSpec; StreamingCurationSpec pins it under a
+   * real stream): the fold sums the same longs in string order, and
+   * long addition commutes exactly. The production shape: train on a
+   * labeled snapshot, stamp language at ingest.
    */
   def langIdTrainedStateless(docs: DataFrame,
                              langs: Seq[String] = LangIdLangs,

@@ -1,7 +1,7 @@
 package graft
 
 import graft.similarity.Similarity
-import graft.streaming.{BinaryTopics, JsonStreams, StreamingCurationJobs}
+import graft.streaming.{BinaryTopics, JsonStreams, StreamingCurationJobs, TopicCodec}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -92,45 +92,47 @@ class RecordCodecSpec extends SparkSpec {
     val isNew = col("vec_id") % 10 === 0
     val model = Similarity.freezeAnnIndex(all.filter(!isNew)).get
 
-    val work = Files.createTempDirectory("ann_bin_job").toString
-    val topic = s"$work/emb_topic"
-    // produce the topic exactly as a binary producer would, plus junk
-    // records the decode must drop
-    val goodValues = BinaryTopics.encode(
-        all.filter(isNew).select(col("vec_id"),
-          transform(col("embedding"), x => x.cast("double")).as("embedding")))
-      .collect().map(_.getAs[Array[Byte]](0))
-    val junk: Seq[Array[Byte]] = Seq(
-      "not a record".getBytes, goodValues.head.dropRight(5))
-    spark.createDataFrame(
-        spark.sparkContext.parallelize(
-          (goodValues ++ junk).map(Row(_)).toIndexedSeq, 2),
-        BinaryTopics.valueSchema)
-      .write.parquet(topic)
+    withTempDir("ann_bin_job") { dir =>
+      val work = dir.toString
+      val topic = s"$work/emb_topic"
+      // produce the topic exactly as a binary producer would, plus junk
+      // records the decode must drop
+      val goodValues = BinaryTopics.encode(
+          all.filter(isNew).select(col("vec_id"),
+            transform(col("embedding"), x => x.cast("double")).as("embedding")))
+        .collect().map(_.getAs[Array[Byte]](0))
+      val junk: Seq[Array[Byte]] = Seq(
+        "not a record".getBytes, goodValues.head.dropRight(5))
+      spark.createDataFrame(
+          spark.sparkContext.parallelize(
+            (goodValues ++ junk).map(Row(_)).toIndexedSeq, 2),
+          BinaryTopics.valueSchema)
+        .write.parquet(topic)
 
-    val q = StreamingCurationJobs.runAnnIngestJob(spark, topic, model, work,
-      codec = "binary")
-    try q.processAllAvailable() finally q.stop()
+      val q = StreamingCurationJobs.runAnnIngestJob(spark, topic, model, work,
+        codec = BinaryTopics)
+      try q.processAllAvailable() finally q.stop()
 
-    // schema + row projection derived from the model's m, so the spec
-    // keeps covering EVERY code column if the PQ defaults move again
-    val m = model.cfg.m
-    def codeRow(r: Row) = (r.getAs[Long]("vec_id"), r.getAs[Long]("cell"),
-      (0 until m).map(s => r.getAs[Int](s"code$s")).toList,
-      r.getAs[Double]("recon_error"))
-    val codesSchema = StructType(
-      Seq(StructField("vec_id", LongType), StructField("cell", LongType)) ++
-      (0 until m).map(s => StructField(s"code$s", IntegerType)) :+
-      StructField("recon_error", DoubleType))
-    val got = BinaryTopics.decode(
-        spark.read.schema(BinaryTopics.valueSchema).parquet(s"$work/codes"),
-        codesSchema)
-      .collect().map(codeRow).toSet
-    val batch = Similarity.incrementalAssign(all, isNew)
-      .collect().map(codeRow).toSet
-    assert(batch.nonEmpty)
-    assert(got == batch,
-      s"only-stream=${got -- batch} only-batch=${batch -- got}")
+      // schema + row projection derived from the model's m, so the spec
+      // keeps covering EVERY code column if the PQ defaults move again
+      val m = model.cfg.m
+      def codeRow(r: Row) = (r.getAs[Long]("vec_id"), r.getAs[Long]("cell"),
+        (0 until m).map(s => r.getAs[Int](s"code$s")).toList,
+        r.getAs[Double]("recon_error"))
+      val codesSchema = StructType(
+        Seq(StructField("vec_id", LongType), StructField("cell", LongType)) ++
+        (0 until m).map(s => StructField(s"code$s", IntegerType)) :+
+        StructField("recon_error", DoubleType))
+      val got = BinaryTopics.decode(
+          spark.read.schema(BinaryTopics.valueSchema).parquet(s"$work/codes"),
+          codesSchema)
+        .collect().map(codeRow).toSet
+      val batch = Similarity.incrementalAssign(all, isNew)
+        .collect().map(codeRow).toSet
+      assert(batch.nonEmpty)
+      assert(got == batch,
+        s"only-stream=${got -- batch} only-batch=${batch -- got}")
+    }
   }
 
   /** 60 docs inside one minute (every 7th repeats verbatim, so the dedup
@@ -145,36 +147,40 @@ class RecordCodecSpec extends SparkSpec {
         java.sql.Timestamp.valueOf(s"2024-01-01 10:00:${"%02d".format(i % 60)}"))
     }.toDF("doc_id", "text", "lang", "source", "ingest_time")
 
-  /** Lands `docsDf` as a docs topic under `codec` and runs the ingest job
-    * over it to completion; returns the job's work dir. */
-  private def ingestUnder(codec: String,
-                          docsDf: org.apache.spark.sql.DataFrame): String = {
-    val work = Files.createTempDirectory(s"ingest_$codec").toString
-    val topic = s"$work/docs_topic"
-    if (codec == "binary")
-      BinaryTopics.encode(docsDf).write.parquet(topic)
-    else {
-      Files.createDirectories(Paths.get(topic))
-      val lines = JsonStreams.encode(docsDf).collect().map(_.getString(0))
-      Files.write(Paths.get(s"$topic/part-0.json"),
-        String.join("\n", lines: _*).getBytes)
+  /** Lands `docsDf` as a docs topic under `codec`, runs the ingest job
+    * over it to completion and returns `read` of the job's work dir,
+    * which is deleted afterwards. */
+  private def ingestUnder[A](codec: TopicCodec,
+                             docsDf: org.apache.spark.sql.DataFrame)
+                            (read: String => A): A =
+    withTempDir(s"ingest_${codec.name}") { dir =>
+      val work = dir.toString
+      val topic = s"$work/docs_topic"
+      if (codec == BinaryTopics)
+        BinaryTopics.encode(docsDf).write.parquet(topic)
+      else {
+        Files.createDirectories(Paths.get(topic))
+        val lines = JsonStreams.encode(docsDf).collect().map(_.getString(0))
+        Files.write(Paths.get(s"$topic/part-0.json"),
+          String.join("\n", lines: _*).getBytes)
+      }
+      val q = StreamingCurationJobs.runIngestJob(spark, topic,
+        graft.streaming.StreamThroughput.benchDocs(spark), work,
+        codec = codec)
+      try q.processAllAvailable() finally q.stop()
+      read(work)
     }
-    val q = StreamingCurationJobs.runIngestJob(spark, topic,
-      graft.streaming.StreamThroughput.benchDocs(spark), work,
-      codec = codec)
-    try q.processAllAvailable() finally q.stop()
-    work
-  }
 
   test("runIngestJob emits identical curated rows under both codecs") {
     // the curated topic is JSON under either input codec
-    def runWith(codec: String): Set[Seq[Any]] =
-      spark.read.schema(StreamingCurationJobs.curatedSchema)
-        .json(s"${ingestUnder(codec, codecDocs)}/curated")
-        .collect().map(_.toSeq).toSet
+    def runWith(codec: TopicCodec): Set[Seq[Any]] =
+      ingestUnder(codec, codecDocs)(work =>
+        spark.read.schema(StreamingCurationJobs.curatedSchema)
+          .json(s"$work/curated")
+          .collect().map(_.toSeq).toSet)
 
-    val json = runWith("json")
-    val binary = runWith("binary")
+    val json = runWith(JsonStreams)
+    val binary = runWith(BinaryTopics)
     assert(json.nonEmpty)
     assert(json == binary,
       s"only-json=${json -- binary} only-binary=${binary -- json}")
@@ -190,17 +196,17 @@ class RecordCodecSpec extends SparkSpec {
         "en", "sentinel",
         java.sql.Timestamp.valueOf("2024-01-01 11:00:00")))
       .toDF("doc_id", "text", "lang", "source", "ingest_time")
-    def tokenStats(codec: String): Set[String] = {
-      val work = ingestUnder(codec, codecDocs.union(sentinel))
-      val q = StreamingCurationJobs.runStatsJob(spark, work,
-        windowLength = "1 minute", watermarkDelay = "5 seconds")
-      try q.processAllAvailable() finally q.stop()
-      spark.read.text(s"$work/token_stats").collect()
-        .map(_.getString(0)).toSet
-    }
+    def tokenStats(codec: TopicCodec): Set[String] =
+      ingestUnder(codec, codecDocs.union(sentinel)) { work =>
+        val q = StreamingCurationJobs.runStatsJob(spark, work,
+          windowLength = "1 minute", watermarkDelay = "5 seconds")
+        try q.processAllAvailable() finally q.stop()
+        spark.read.text(s"$work/token_stats").collect()
+          .map(_.getString(0)).toSet
+      }
 
-    val json = tokenStats("json")
-    val binary = tokenStats("binary")
+    val json = tokenStats(JsonStreams)
+    val binary = tokenStats(BinaryTopics)
     assert(json.nonEmpty)
     assert(json == binary,
       s"only-json=${json -- binary} only-binary=${binary -- json}")

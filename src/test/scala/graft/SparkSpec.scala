@@ -4,6 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import java.nio.file.{Files, Path}
+
 /** Shared local SparkSession for ScalaTest specs (UTC, small shuffle). */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
@@ -11,6 +13,14 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = {
     // session is shared across suites; never stop it here
     super.afterAll()
+  }
+
+  /** Runs `body` in a fresh temp dir named `prefix*` under the JVM temp
+    * dir and deletes the dir afterwards, whether `body` passes or not. */
+  def withTempDir[A](prefix: String)(body: Path => A): A = {
+    val dir = Files.createTempDirectory(prefix)
+    try body(dir)
+    finally org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
   }
 }
 

@@ -87,12 +87,11 @@ class StreamThroughputSpec extends SparkSpec {
     val attempts = Iterator.range(0, 3).map { i =>
       if (i > 0) Thread.sleep(5000L)
       awaitQuietSession()
-      // simMsPerRow 200: event time must outrun the 11-minute chained
-      // watermark inside the 8 s feed or no window ever closes — 2000
-      // rows/s × 200 ms = 400 event-seconds per wall second, the same
-      // event/wall ratio the bench's 20k-rate default runs at
+      // event time must outrun the 11-minute chained watermark inside
+      // the 8 s feed or no window ever closes: mainJobStep runs 400
+      // event-seconds per wall second at any rate (200 ms per row here)
       val step = StreamThroughput.mainJobStep(spark, rate = 2000,
-        feedMs = 8000L, simMsPerRow = 200L)
+        feedMs = 8000L)
       info(step.json)
       step.latency
     }
@@ -126,7 +125,7 @@ class StreamThroughputSpec extends SparkSpec {
       if (i > 0) Thread.sleep(5000L)
       awaitQuietSession()
       val step = StreamThroughput.mainJobStep(spark, rate = 2000,
-        feedMs = 8000L, simMsPerRow = 200L, skewShare = 0.9)
+        feedMs = 8000L, skewShare = 0.9)
       info("skew latency: " + step.json)
       step.latency
     }

@@ -89,58 +89,59 @@ class StreamingAsOfJoinSpec extends SparkSpec {
   test("attribution job over file topics reproduces the batch as-of join " +
     "(golden end-to-end)") {
     import graft.streaming.StreamingJobs
-    val root = java.nio.file.Files.createTempDirectory("graft-attribution")
-    val topic = root.resolve("events")
-    java.nio.file.Files.createDirectories(topic)
-    val work = root.resolve("work").toString
-    // deterministic event feed: views and clicks interleaved per user,
-    // the second wave carrying EARLIER views than wave one's clicks
-    def ev(id: Long, user: Long, sec: Long, t: String) =
-      (id, new Timestamp(sec * 1000L), user, t)
-    val wave0 = Seq(
-      ev(1, 7, 10, "view"), ev(100, 7, 15, "click"),
-      ev(2, 7, 20, "view"), ev(101, 7, 25, "click"),
-      ev(102, 8, 40, "click"), ev(103, 9, 50, "click"))
-    val wave1 = Seq( // u8's view at 30 arrives AFTER its click at 40
-      ev(4, 8, 30, "view"), ev(11, 9, 50, "view"), ev(12, 9, 50, "view"))
-    def write(name: String, rows: Seq[(Long, Timestamp, Long, String)]): Unit =
-      java.nio.file.Files.write(topic.resolve(name), String.join("\n",
-        rows.toDF("event_id", "ts", "user_id", "event_type")
-          .toJSON.collect(): _*).getBytes)
-    write("wave0.json", wave0)
-    val q = StreamingJobs.runAttributionJob(spark, topic.toString, work,
-      watermarkDelay = "1 hour")
-    try {
-      q.processAllAvailable()
-      write("wave1.json", wave1); q.processAllAvailable()
-      write("s1.json", Seq(ev(900, 999, 100000, "view"))); q.processAllAvailable()
-      write("s2.json", Seq(ev(901, 999, 200000, "view"))); q.processAllAvailable()
-      val emitted = spark.read.schema(
-          "event_id long, user_id long, ts timestamp, " +
-            "matched_event_id long, matched_ts timestamp, lag_ms long")
-        .json(s"$work/attributions")
-        .filter(col("user_id") =!= 999L)
-      val all = (wave0 ++ wave1)
-        .toDF("event_id", "ts", "user_id", "event_type")
-      val want = AsOfJoin.lastBefore(
-        all.filter(col("event_type") === "view")
-          .select("event_id", "user_id", "ts"),
-        all.filter(col("event_type") === "click")
-          .select("event_id", "user_id", "ts"),
-        key = "user_id", ts = "ts", leftId = "event_id", rightId = "event_id")
-      def keyOf(r: org.apache.spark.sql.Row) =
-        (r.getAs[Long]("event_id"),
-          Option(r.getAs[java.lang.Long]("matched_event_id")).map(_.toLong),
-          Option(r.getAs[java.lang.Long]("lag_ms")).map(_.toLong))
-      val got = emitted.collect().map(keyOf).toSet
-      val exp = want.collect().map(keyOf).toSet
-      assert(exp.size == 4 && got == exp,
-        s"only-stream=${got -- exp} only-batch=${exp -- got}")
-      // the late-view repair and the equal-ts at-or-before tie survived
-      // the topic round-trip
-      assert(got.contains((102L, Some(4L), Some(10000L))))
-      assert(got.contains((103L, Some(12L), Some(0L))))
-    } finally q.stop()
+    withTempDir("graft-attribution") { root =>
+      val topic = root.resolve("events")
+      java.nio.file.Files.createDirectories(topic)
+      val work = root.resolve("work").toString
+      // deterministic event feed: views and clicks interleaved per user,
+      // the second wave carrying EARLIER views than wave one's clicks
+      def ev(id: Long, user: Long, sec: Long, t: String) =
+        (id, new Timestamp(sec * 1000L), user, t)
+      val wave0 = Seq(
+        ev(1, 7, 10, "view"), ev(100, 7, 15, "click"),
+        ev(2, 7, 20, "view"), ev(101, 7, 25, "click"),
+        ev(102, 8, 40, "click"), ev(103, 9, 50, "click"))
+      val wave1 = Seq( // u8's view at 30 arrives AFTER its click at 40
+        ev(4, 8, 30, "view"), ev(11, 9, 50, "view"), ev(12, 9, 50, "view"))
+      def write(name: String, rows: Seq[(Long, Timestamp, Long, String)]): Unit =
+        java.nio.file.Files.write(topic.resolve(name), String.join("\n",
+          rows.toDF("event_id", "ts", "user_id", "event_type")
+            .toJSON.collect(): _*).getBytes)
+      write("wave0.json", wave0)
+      val q = StreamingJobs.runAttributionJob(spark, topic.toString, work,
+        watermarkDelay = "1 hour")
+      try {
+        q.processAllAvailable()
+        write("wave1.json", wave1); q.processAllAvailable()
+        write("s1.json", Seq(ev(900, 999, 100000, "view"))); q.processAllAvailable()
+        write("s2.json", Seq(ev(901, 999, 200000, "view"))); q.processAllAvailable()
+        val emitted = spark.read.schema(
+            "event_id long, user_id long, ts timestamp, " +
+              "matched_event_id long, matched_ts timestamp, lag_ms long")
+          .json(s"$work/attributions")
+          .filter(col("user_id") =!= 999L)
+        val all = (wave0 ++ wave1)
+          .toDF("event_id", "ts", "user_id", "event_type")
+        val want = AsOfJoin.lastBefore(
+          all.filter(col("event_type") === "view")
+            .select("event_id", "user_id", "ts"),
+          all.filter(col("event_type") === "click")
+            .select("event_id", "user_id", "ts"),
+          key = "user_id", ts = "ts", leftId = "event_id", rightId = "event_id")
+        def keyOf(r: org.apache.spark.sql.Row) =
+          (r.getAs[Long]("event_id"),
+            Option(r.getAs[java.lang.Long]("matched_event_id")).map(_.toLong),
+            Option(r.getAs[java.lang.Long]("lag_ms")).map(_.toLong))
+        val got = emitted.collect().map(keyOf).toSet
+        val exp = want.collect().map(keyOf).toSet
+        assert(exp.size == 4 && got == exp,
+          s"only-stream=${got -- exp} only-batch=${exp -- got}")
+        // the late-view repair and the equal-ts at-or-before tie survived
+        // the topic round-trip
+        assert(got.contains((102L, Some(4L), Some(10000L))))
+        assert(got.contains((103L, Some(12L), Some(0L))))
+      } finally q.stop()
+    }
   }
 
   test("null key/ts/id rows are dropped, not poison: the job survives " +
@@ -349,72 +350,75 @@ class StreamingAsOfJoinSpec extends SparkSpec {
   test("progressive attribution job: crash mid-stream, restart from the " +
     "checkpoint under RocksDB — final attributions equal the batch " +
     "oracle with zero duplicates") {
-    import graft.streaming.StreamingJobs
-    val root = java.nio.file.Files.createTempDirectory("graft-asof-prog-rs")
-    val topic = root.resolve("events")
-    java.nio.file.Files.createDirectories(topic)
-    val work = root.resolve("work").toString
-    def ev(id: Long, user: Long, sec: Long, t: String) =
-      (id, new Timestamp(sec * 1000L), user, t)
-    def write(name: String, rows: Seq[(Long, Timestamp, Long, String)]): Unit =
-      java.nio.file.Files.write(topic.resolve(name), String.join("\n",
-        rows.toDF("event_id", "ts", "user_id", "event_type")
-          .toJSON.collect(): _*).getBytes)
-    val rocks = Some(graft.streaming.StateBackend.RocksDb)
-    // wave 0: two users, clicks already finalizable once the watermark
-    // moves (pacer @60 → wm 55; wave-1 event times must stay ABOVE the
-    // recovered watermark or the late-input filter correctly drops them)
-    val wave0 = Seq(
-      ev(1, 7, 10, "view"), ev(100, 7, 15, "click"),
-      ev(2, 7, 20, "view"), ev(101, 7, 25, "click"),
-      ev(3, 8, 30, "view"), ev(102, 8, 35, "click"),
-      ev(50, 6, 60, "view"))
-    write("w0.json", wave0)
-    val q1 = StreamingJobs.runAttributionJob(spark, topic.toString, work,
-      watermarkDelay = "5 seconds", finalizeDelayMs = 3600000L,
-      stateStoreProvider = rocks)
-    try q1.processAllAvailable() finally q1.stop() // CRASH mid-stream
-    // wave 1 lands while the job is DOWN: more in-bound events for the
-    // same keys (all ts > the recovered watermark of 55 s)
-    val wave1 = Seq(
-      ev(4, 7, 70, "view"), ev(103, 7, 75, "click"),
-      ev(104, 8, 80, "click"), ev(51, 6, 400, "view"))
-    write("w1.json", wave1)
-    val q2 = StreamingJobs.runAttributionJob(spark, topic.toString, work,
-      watermarkDelay = "5 seconds", finalizeDelayMs = 3600000L,
-      stateStoreProvider = rocks)
-    try {
-      q2.processAllAvailable()
-      // flush waves: advance the watermark far, then fire timeouts
-      write("s1.json", Seq(ev(900, 999, 100000, "view")))
-      q2.processAllAvailable()
-      write("s2.json", Seq(ev(901, 999, 200000, "view")))
-      q2.processAllAvailable()
-    } finally q2.stop()
-    val emitted = spark.read.schema(
-        "event_id long, user_id long, ts timestamp, " +
-          "matched_event_id long, matched_ts timestamp, lag_ms long")
-      .json(s"$work/attributions")
-      .filter(col("user_id") =!= 999L)
-      .collect()
-      .map(r => (r.getAs[Long]("event_id"),
-        Option(r.getAs[java.lang.Long]("matched_event_id")).map(_.toLong)))
-    val all = (wave0 ++ wave1).toDF("event_id", "ts", "user_id", "event_type")
-    val want = AsOfJoin.lastBefore(
-        all.filter(col("event_type") === "view")
-          .select("event_id", "user_id", "ts"),
-        all.filter(col("event_type") === "click")
-          .select("event_id", "user_id", "ts"),
-        key = "user_id", ts = "ts", leftId = "event_id",
-        rightId = "event_id")
-      .collect()
-      .map(r => (r.getAs[Long]("event_id"),
-        Option(r.getAs[java.lang.Long]("matched_event_id")).map(_.toLong)))
-      .toSet
-    assert(emitted.length == emitted.toSet.size,
-      s"duplicate attributions after the restart: ${emitted.toSeq}")
-    assert(emitted.toSet == want,
-      s"only-stream=${emitted.toSet -- want} only-batch=${want -- emitted.toSet}")
+    import graft.streaming.{StateBackend, StreamingJobs}
+    withTempDir("graft-asof-prog-rs") { root =>
+      val topic = root.resolve("events")
+      java.nio.file.Files.createDirectories(topic)
+      val work = root.resolve("work").toString
+      def ev(id: Long, user: Long, sec: Long, t: String) =
+        (id, new Timestamp(sec * 1000L), user, t)
+      def write(name: String, rows: Seq[(Long, Timestamp, Long, String)]): Unit =
+        java.nio.file.Files.write(topic.resolve(name), String.join("\n",
+          rows.toDF("event_id", "ts", "user_id", "event_type")
+            .toJSON.collect(): _*).getBytes)
+      // the state store provider is the session's: scope RocksDB around
+      // each start
+      def launch() =
+        StateBackend.withProvider(spark, Some(StateBackend.RocksDb)) {
+          StreamingJobs.runAttributionJob(spark, topic.toString, work,
+            watermarkDelay = "5 seconds", finalizeDelayMs = 3600000L)
+        }
+      // wave 0: two users, clicks already finalizable once the watermark
+      // moves (pacer @60 → wm 55; wave-1 event times must stay ABOVE the
+      // recovered watermark or the late-input filter correctly drops them)
+      val wave0 = Seq(
+        ev(1, 7, 10, "view"), ev(100, 7, 15, "click"),
+        ev(2, 7, 20, "view"), ev(101, 7, 25, "click"),
+        ev(3, 8, 30, "view"), ev(102, 8, 35, "click"),
+        ev(50, 6, 60, "view"))
+      write("w0.json", wave0)
+      val q1 = launch()
+      try q1.processAllAvailable() finally q1.stop() // CRASH mid-stream
+      // wave 1 lands while the job is DOWN: more in-bound events for the
+      // same keys (all ts > the recovered watermark of 55 s)
+      val wave1 = Seq(
+        ev(4, 7, 70, "view"), ev(103, 7, 75, "click"),
+        ev(104, 8, 80, "click"), ev(51, 6, 400, "view"))
+      write("w1.json", wave1)
+      val q2 = launch()
+      try {
+        q2.processAllAvailable()
+        // flush waves: advance the watermark far, then fire timeouts
+        write("s1.json", Seq(ev(900, 999, 100000, "view")))
+        q2.processAllAvailable()
+        write("s2.json", Seq(ev(901, 999, 200000, "view")))
+        q2.processAllAvailable()
+      } finally q2.stop()
+      val emitted = spark.read.schema(
+          "event_id long, user_id long, ts timestamp, " +
+            "matched_event_id long, matched_ts timestamp, lag_ms long")
+        .json(s"$work/attributions")
+        .filter(col("user_id") =!= 999L)
+        .collect()
+        .map(r => (r.getAs[Long]("event_id"),
+          Option(r.getAs[java.lang.Long]("matched_event_id")).map(_.toLong)))
+      val all = (wave0 ++ wave1).toDF("event_id", "ts", "user_id", "event_type")
+      val want = AsOfJoin.lastBefore(
+          all.filter(col("event_type") === "view")
+            .select("event_id", "user_id", "ts"),
+          all.filter(col("event_type") === "click")
+            .select("event_id", "user_id", "ts"),
+          key = "user_id", ts = "ts", leftId = "event_id",
+          rightId = "event_id")
+        .collect()
+        .map(r => (r.getAs[Long]("event_id"),
+          Option(r.getAs[java.lang.Long]("matched_event_id")).map(_.toLong)))
+        .toSet
+      assert(emitted.length == emitted.toSet.size,
+        s"duplicate attributions after the restart: ${emitted.toSeq}")
+      assert(emitted.toSet == want,
+        s"only-stream=${emitted.toSet -- want} only-batch=${want -- emitted.toSet}")
+    }
   }
 
   test("matchSeq equals lastBefore on randomized inputs, any arrival order") {

@@ -27,7 +27,7 @@ class StreamingCurationSpec extends SparkSpec {
       .collect().map(r => (r.getAs[Long]("vec_id"),
         r.getAs[scala.collection.Seq[Float]]("embedding").toSeq))
     val stream = MemoryStream[(Long, Seq[Float])](spark)
-    val out = StreamingCuration.semanticDecontaminateStream(
+    val out = graft.similarity.Similarity.semanticDecontaminateStateless(
       stream.toDF().toDF("vec_id", "embedding"), evalSet, threshold = 0.25)
     assert(out.isStreaming)
     // two microbatches — stateless means batch boundaries can't matter
@@ -67,7 +67,7 @@ class StreamingCurationSpec extends SparkSpec {
           new java.sql.Timestamp(base + i * 1000L))
       }
     val stream = MemoryStream[(Long, Seq[Float], java.sql.Timestamp)](spark)
-    val out = StreamingCuration.semanticDecontaminateStreamBroadcast(
+    val out = Similarity.semanticDecontaminateFlags(
       stream.toDF().toDF("vec_id", "embedding", "ingest_time"), index,
       threshold = 0.25, watermarkDelay = "1 hour")
     assert(out.isStreaming)
@@ -317,7 +317,7 @@ class StreamingCurationSpec extends SparkSpec {
       .select("doc_id", "text").collect()
       .map(r => (r.getLong(0), r.getString(1)))
     val stream = MemoryStream[(Long, String)](spark)
-    val out = StreamingCuration.qualityClassifierStream(
+    val out = graft.text.TextAnalysis.hashedLinearScoreStateless(
       stream.toDF().toDF("doc_id", "text"), weights = weights)
     assert(out.isStreaming)
     stream.addData(docRows.take(40).toIndexedSeq)
@@ -349,8 +349,8 @@ class StreamingCurationSpec extends SparkSpec {
       .select("doc_id", "text").collect()
       .map(r => (r.getLong(0), r.getString(1)))
     val stream = MemoryStream[(Long, String)](spark)
-    val out = StreamingCuration.langIdStream(
-      stream.toDF().toDF("doc_id", "text"), w)
+    val out = graft.text.TextAnalysis.langIdTrainedStateless(
+      stream.toDF().toDF("doc_id", "text"), weights = w)
     assert(out.isStreaming)
     stream.addData(docRows.take(40).toIndexedSeq)
     val q = out.writeStream.format("memory").queryName("slangid")
@@ -381,7 +381,7 @@ class StreamingCurationSpec extends SparkSpec {
     val model = Retrieval.bm25Model(docs)
     val docRows = docs.collect().map(r => (r.getLong(0), r.getString(1)))
     val stream = MemoryStream[(Long, String)](spark)
-    val out = StreamingCuration.bm25RouteStream(
+    val out = Retrieval.bm25ScoreStateless(
       stream.toDF().toDF("doc_id", "text"), model)
     assert(out.isStreaming)
     stream.addData(docRows.take(40).toIndexedSeq)
@@ -563,9 +563,7 @@ class StreamingCurationSpec extends SparkSpec {
       (3L, "one two three four five six"))
 
     val stream = MemoryStream[(Long, String, Timestamp)](spark)
-    // caller-managed index (r7): persist before the stream, unpersist after
     val benchIndex = StreamingCuration.benchShingleIndex(bench)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val out = StreamingCuration.decontaminateFlags(
       stream.toDF().toDF("doc_id", "text", "ingest_time"), benchIndex)
     stream.addData(trainRows.zipWithIndex.map {
@@ -584,7 +582,12 @@ class StreamingCurationSpec extends SparkSpec {
         .collect().map(_.getAs[Long]("doc_id")).toSeq
       assert(got.sorted == want.sorted,
         s"streaming flags $got != batch flags $want")
-    } finally { q.stop(); benchIndex.unpersist() }
+      // a per-row probe of the broadcast shingle set: no batch of the
+      // query holds streaming state
+      assert(q.recentProgress.nonEmpty &&
+        q.recentProgress.forall(_.stateOperators.isEmpty),
+        q.recentProgress.flatMap(_.stateOperators).mkString("\n"))
+    } finally q.stop()
   }
 
   test("semanticDedupStream: flagged-id set equals the batch incremental " +
@@ -608,7 +611,7 @@ class StreamingCurationSpec extends SparkSpec {
         new Timestamp(3600000L + i * 1000L))
     }
     val stream = MemoryStream[(Long, Seq[Float], Timestamp)](spark)
-    val out = StreamingCuration.semanticDedupStream(
+    val out = Similarity.semanticDedupFlags(
       stream.toDF().toDF("vec_id", "embedding", "ingest_time"),
       corpus, cells, threshold = 0.42, watermarkDelay = "1 hour")
     assert(out.isStreaming)
@@ -675,51 +678,52 @@ class StreamingCurationSpec extends SparkSpec {
     "the admitted total — a source filled before the stop admits NOTHING " +
     "after it; no document re-admitted or skipped") {
     import java.nio.file.Files
-    val work = Files.createTempDirectory("stb_restart")
-    val topic = Files.createDirectories(work.resolve("topic"))
-    val outDir = work.resolve("out").toString
-    val ck = work.resolve("ck").toString
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("text",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("source",
-        org.apache.spark.sql.types.StringType)))
-    def feed(name: String, rows: Seq[(Long, String, String)]): Unit = {
-      val lines = rows.toDF("doc_id", "text", "source").toJSON.collect()
-      Files.write(topic.resolve(name),
-        String.join("\n", lines: _*).getBytes("UTF-8"))
+    withTempDir("stb_restart") { work =>
+      val topic = Files.createDirectories(work.resolve("topic"))
+      val outDir = work.resolve("out").toString
+      val ck = work.resolve("ck").toString
+      val schema = org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("doc_id",
+          org.apache.spark.sql.types.LongType),
+        org.apache.spark.sql.types.StructField("text",
+          org.apache.spark.sql.types.StringType),
+        org.apache.spark.sql.types.StructField("source",
+          org.apache.spark.sql.types.StringType)))
+      def feed(name: String, rows: Seq[(Long, String, String)]): Unit = {
+        val lines = rows.toDF("doc_id", "text", "source").toJSON.collect()
+        Files.write(topic.resolve(name),
+          String.join("\n", lines: _*).getBytes("UTF-8"))
+      }
+      def launch() = StreamingCuration.selectTokenBudgetStream(
+          graft.streaming.JsonStreams.decode(
+            spark.readStream.option("maxFilesPerTrigger", 1)
+              .text(topic.toString), schema),
+          budget = 6L)
+        .toDF().writeStream.format("parquet")
+        .option("path", outDir).option("checkpointLocation", ck)
+        .outputMode("append").start()
+
+      // phase 1 fills s1's budget exactly past the brim (4 + 4 ≥ 6)
+      feed("b0.json", Seq((1L, "a b c d", "s1"), (2L, "a b c d", "s1")))
+      val p1 = launch()
+      try p1.processAllAvailable() finally p1.stop()
+
+      // phase 2 on the SAME checkpoint: if state were lost, doc 3 would
+      // re-admit against a fresh budget
+      feed("b1.json", Seq((3L, "a b", "s1"), (30L, "x y", "s2")))
+      val p2 = launch()
+      try p2.processAllAvailable() finally p2.stop()
+
+      val got = spark.read.parquet(outDir).collect()
+        .map(r => r.getAs[Long]("doc_id") ->
+          (r.getAs[Long]("admitted_before"), r.getAs[Boolean]("selected")))
+        .toMap
+      assert(got.keySet == Set(1L, 2L, 3L, 30L),
+        s"docs skipped or re-emitted across restart: ${got.keySet}")
+      assert(got(1L)._2 && got(2L)._2, "phase-1 admissions")
+      assert(got(3L) == ((8L, false)),
+        "recovered state must reject doc 3 against the consumed budget")
+      assert(got(30L) == ((0L, true)), "fresh source admits after restart")
     }
-    def launch() = StreamingCuration.selectTokenBudgetStream(
-        graft.streaming.JsonStreams.decode(
-          spark.readStream.option("maxFilesPerTrigger", 1)
-            .text(topic.toString), schema),
-        budget = 6L)
-      .toDF().writeStream.format("parquet")
-      .option("path", outDir).option("checkpointLocation", ck)
-      .outputMode("append").start()
-
-    // phase 1 fills s1's budget exactly past the brim (4 + 4 ≥ 6)
-    feed("b0.json", Seq((1L, "a b c d", "s1"), (2L, "a b c d", "s1")))
-    val p1 = launch()
-    try p1.processAllAvailable() finally p1.stop()
-
-    // phase 2 on the SAME checkpoint: if state were lost, doc 3 would
-    // re-admit against a fresh budget
-    feed("b1.json", Seq((3L, "a b", "s1"), (30L, "x y", "s2")))
-    val p2 = launch()
-    try p2.processAllAvailable() finally p2.stop()
-
-    val got = spark.read.parquet(outDir).collect()
-      .map(r => r.getAs[Long]("doc_id") ->
-        (r.getAs[Long]("admitted_before"), r.getAs[Boolean]("selected")))
-      .toMap
-    assert(got.keySet == Set(1L, 2L, 3L, 30L),
-      s"docs skipped or re-emitted across restart: ${got.keySet}")
-    assert(got(1L)._2 && got(2L)._2, "phase-1 admissions")
-    assert(got(3L) == ((8L, false)),
-      "recovered state must reject doc 3 against the consumed budget")
-    assert(got(30L) == ((0L, true)), "fresh source admits after restart")
   }
 }
