@@ -26,13 +26,19 @@ object AdPipelines {
       leftTime = "event_time", rightTime = "event_time",
       interval = interval)
 
-  /** Q1 (flink_job.sql:76-98): ctr per (1-min window, campaign). */
-  def ctrByCampaign(joined: DataFrame, windowLength: String = "1 minute"): DataFrame =
+  /** Distinct impressions and clicks per (window on impression time,
+    * impression column `key`) of the joined frame. */
+  private def perWindow(joined: DataFrame, key: String, windowLength: String,
+                        withRatio: Boolean): DataFrame =
     WindowedCounts.ctrAgg(joined,
-      groupKey = col("i.campaign_id"), keyOut = "campaign_id",
+      groupKey = col(s"i.$key"), keyOut = key,
       timeCol = col("i.event_time"), windowLength = windowLength,
       distinctA = col("i.impression_id"), distinctB = col("c.click_id"),
-      withRatio = true)
+      withRatio = withRatio)
+
+  /** Q1 (flink_job.sql:76-98): ctr per (1-min window, campaign). */
+  def ctrByCampaign(joined: DataFrame, windowLength: String = "1 minute"): DataFrame =
+    perWindow(joined, "campaign_id", windowLength, withRatio = true)
 
   /**
    * Q2 (flink_job.sql:100-118): engagement per (window, device). Groups by
@@ -40,11 +46,7 @@ object AdPipelines {
    * exactly as the reference does (group key :118, projection :106).
    */
   def engagementByDevice(joined: DataFrame, windowLength: String = "1 minute"): DataFrame =
-    WindowedCounts.ctrAgg(joined,
-      groupKey = col("i.device_type"), keyOut = "device_type",
-      timeCol = col("i.event_time"), windowLength = windowLength,
-      distinctA = col("i.impression_id"), distinctB = col("c.click_id"),
-      withRatio = false)
+    perWindow(joined, "device_type", windowLength, withRatio = false)
       .withColumn("device_type", coalesce(col("device_type"), lit("Unknown")))
 
   /** P2 (anomaly_job.sql:45-84): alerts from a ctr_result frame. */

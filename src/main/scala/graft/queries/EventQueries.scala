@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.ops.{AnomalyDetect, AsOfJoin, IntervalJoin, Sessionize, WindowedCounts}
+import graft.pipelines.AdPipelines
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -89,11 +90,7 @@ object EventQueries {
    */
   def ctrByCampaign(spark: SparkSession, sfDir: String): DataFrame =
     memo(spark, sfDir, "ctr") {
-      WindowedCounts.ctrAgg(joined(spark, sfDir),
-        groupKey = col("i.campaign_id"), keyOut = "campaign_id",
-        timeCol = col("i.event_time"), windowLength = "1 minute",
-        distinctA = col("i.impression_id"), distinctB = col("c.click_id"),
-        withRatio = true)
+      AdPipelines.ctrByCampaign(joined(spark, sfDir))
     }
 
   /** Hopping-window knobs shared by the Spark query and its oracle. */
@@ -116,17 +113,12 @@ object EventQueries {
 
   /** Q2: engagement per (window, device) — flink_job.sql:100-118. */
   def engagementByDevice(spark: SparkSession, sfDir: String): DataFrame =
-    WindowedCounts.ctrAgg(joined(spark, sfDir),
-      groupKey = col("i.device_type"), keyOut = "device_type",
-      timeCol = col("i.event_time"), windowLength = "1 minute",
-      distinctA = col("i.impression_id"), distinctB = col("c.click_id"),
-      withRatio = false)
-      .withColumn("device_type", coalesce(col("device_type"), lit("Unknown")))
+    AdPipelines.engagementByDevice(joined(spark, sfDir))
 
   /** P2: spike/drop alerts chained off Q1's persisted frame —
     * anomaly_job.sql:45-84. */
   def anomalyAlerts(spark: SparkSession, sfDir: String): DataFrame =
-    AnomalyDetect.alerts(ctrByCampaign(spark, sfDir))
+    AdPipelines.anomalyAlerts(ctrByCampaign(spark, sfDir))
 
   /** Impression floor shared by the min-traffic query and its oracle.
     * The reference suggests `> 10` for its 1-minute windows
@@ -145,12 +137,7 @@ object EventQueries {
     * floor a real distribution to cut (same operators, one parameter
     * changed — grain and floor are both knobs, not new code). */
   def anomalyAlertsMinTraffic(spark: SparkSession, sfDir: String): DataFrame =
-    AnomalyDetect.alerts(
-      WindowedCounts.ctrAgg(joined(spark, sfDir),
-        groupKey = col("i.campaign_id"), keyOut = "campaign_id",
-        timeCol = col("i.event_time"), windowLength = "1 day",
-        distinctA = col("i.impression_id"), distinctB = col("c.click_id"),
-        withRatio = true),
+    AnomalyDetect.alerts(AdPipelines.ctrByCampaign(joined(spark, sfDir), "1 day"),
       minImpressions = anomalyMinImpressions)
 
   /** Z-score knobs shared by the Spark query and its oracle — ONE set of

@@ -3,7 +3,9 @@ package graft.similarity
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import graft.sources.VersionedDir
+
+import java.nio.file.Paths
 
 /**
  * Drift-triggered ANN index lifecycle — the operating component the
@@ -36,9 +38,11 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
  *                                  rows per elapsed generation) and so
  *                                  [[compactLive]] can reclaim a dead
  *                                  generation by dropping ONE directory
- *   <dir>/MANIFEST                 current version, written tmp +
- *                                  ATOMIC_MOVE
+ *   <dir>/MANIFEST                 current version
  * }}}
+ *
+ * The version trees, the manifest flip and every retire/heal step follow
+ * the [[graft.sources.VersionedDir]] protocol.
  *
  * Serving invariant — "never a mix": a query resolves the manifest
  * ONCE, then reads `v<N>/layout ∪ live WHERE model_version = N` — every
@@ -71,8 +75,8 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
  *  4. GC on an operator cadence: [[compactLive]] after each swap,
  *     [[pruneGenerations]] to retire `v<k>` trees older than the
  *     pinned-read horizon. Both are crash-safe (retire-under-hidden-
- *     name then delete, healed at every lifecycle entry — the
- *     [[graft.sources.TableLayout]] swap discipline) and both are
+ *     name then delete, healed at every lifecycle entry —
+ *     [[graft.sources.VersionedDir.retire]]) and both are
  *     no-ops when re-run (AnnLifecycleGcSpec crashes them at every
  *     boundary and asserts serves stay row-exact throughout).
  *
@@ -104,8 +108,6 @@ object AnnLifecycle {
   final case class Decision(driftZ: Double, newShare: Double,
                             fired: Boolean, published: Option[PublishInfo])
 
-  private def manifestPath(dir: String): Path = Paths.get(dir, "MANIFEST")
-
   /** Live-dir schema, declared EXPLICITLY on every read: after
     * [[compactLive]] the sink's `_spark_metadata` log still references
     * the deleted dead-generation files, so schema inference (which opens
@@ -123,22 +125,7 @@ object AnnLifecycle {
   }
 
   /** Current serving version, or None before the first publish. */
-  def currentVersion(dir: String): Option[Int] = {
-    val p = manifestPath(dir)
-    if (Files.exists(p)) Some(new String(Files.readAllBytes(p)).trim.toInt)
-    else None
-  }
-
-  /** Atomic manifest flip: readers see either the old version or the
-    * new one, never a torn read (write-to-temp + ATOMIC_MOVE on the
-    * same filesystem). */
-  private def flipManifest(dir: String, version: Int): Unit = {
-    val tmp = Paths.get(dir, s".MANIFEST.tmp.$version")
-    Files.createDirectories(Paths.get(dir))
-    Files.write(tmp, version.toString.getBytes)
-    Files.move(tmp, manifestPath(dir), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
+  def currentVersion(dir: String): Option[Int] = VersionedDir.currentVersion(dir)
 
   /**
    * Publish generation `version`: write the centroid table and the full
@@ -146,29 +133,21 @@ object AnnLifecycle {
    * `v<version>/` tree, then flip the manifest. `corpus` must be the
    * complete (vec_id, embedding) set this generation serves (previous
    * snapshot ∪ everything arrived); one partitioned write, centroid
-   * literals the only driver value.
+   * literals the only driver value. A generation that took effect is
+   * refused ([[VersionedDir.publish]]'s guard): serves that resolved it
+   * would splice two layouts into one answer.
    */
   def publish(spark: SparkSession, dir: String, version: Int,
               cells: Array[(Long, Seq[Double], Double)],
               corpus: DataFrame): PublishInfo = {
-    // immutability guard (the FrozenModelStore discipline, ADVICE r17):
-    // a generation that TOOK EFFECT (<= current manifest) must never be
-    // restaged — serves that resolved it would splice two layouts into
-    // one answer. version > current stays writable: that is the staged-
-    // retry path (an abandoned unflipped tree is overwrite-replaced).
-    currentVersion(dir).foreach { cur =>
-      require(version > cur,
-        s"generation v$version already took effect under $dir (current " +
-          s"v$cur) — flipped trees are immutable; a retrain publishes " +
-          s"v${cur + 1}")
-    }
     val t0 = System.nanoTime()
-    val n = stageGeneration(spark, dir, version, cells, corpus)
-    flipManifest(dir, version)
+    val n = VersionedDir.publish(dir, version) {
+      stageGeneration(spark, dir, version, cells, corpus)
+    }
     PublishInfo(version, n, (System.nanoTime() - t0) / 1e9)
   }
 
-  /** [[publish]] WITHOUT the manifest flip: write the immutable
+  /** The stage step of [[publish]]: write the immutable
     * `v<version>/` tree and return its row count. The controller stages
     * first, re-validates the arrived snapshot (straggler guard — ADVICE
     * r16), and only then flips; an abandoned staged tree is harmless
@@ -204,14 +183,12 @@ object AnnLifecycle {
   private def liveFrame(spark: SparkSession, dir: String)
       : Option[DataFrame] = {
     val d = liveDir(dir)
-    val hasData = Files.exists(Paths.get(d)) && {
-      val s = Files.list(Paths.get(d))
-      // hidden entries are compaction debris (.model_version=… retired
-      // dirs), not data — a fully-compacted live dir holds only
-      // _spark_metadata and reads as absent
-      try s.anyMatch(p => !p.getFileName.toString.startsWith("_") &&
-        !p.getFileName.toString.startsWith("."))
-      finally s.close()
+    // hidden entries are compaction debris (retired model_version dirs),
+    // not data — a fully-compacted live dir holds only _spark_metadata
+    // and reads as absent
+    val hasData = VersionedDir.entries(Paths.get(d)).exists { p =>
+      val name = p.getFileName.toString
+      !name.startsWith("_") && !name.startsWith(".")
     }
     if (hasData) Some(spark.read.schema(liveSchema).parquet(d)) else None
   }
@@ -239,8 +216,7 @@ object AnnLifecycle {
   def serveTopK(spark: SparkSession, dir: String, queries: DataFrame,
                 nQueries: Int, k: Int, nCells: Int,
                 nProbe: Int): (Int, DataFrame) = {
-    val v = currentVersion(dir).getOrElse(
-      sys.error(s"no published index under $dir"))
+    val v = VersionedDir.current(dir, "index")
     (v, serveTopKAt(spark, dir, v, queries, nQueries, k, nCells, nProbe))
   }
 
@@ -303,8 +279,7 @@ object AnnLifecycle {
                        zThreshold: Double = 3.0,
                        shareBudget: Double = 0.25,
                        ivfSalt: String = "ivf"): Decision = {
-    val v = currentVersion(dir).getOrElse(
-      sys.error(s"no published index under $dir"))
+    val v = VersionedDir.current(dir, "index")
     val arrived = liveVectors(spark, dir, v)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -331,27 +306,29 @@ object AnnLifecycle {
         .getOrElse(sys.error("combined corpus too small to retrain"))
         .cells.toArray
       val t0 = System.nanoTime()
-      val n = stageGeneration(spark, dir, v + 1, cells,
-        combined.select(col("vec_id"), col("embedding")))
-      // straggler guard, hard half (ADVICE r16): the never-a-mix /
-      // exactly-once invariants assume generation v's ingest stopped
-      // BEFORE this controller ran. The active-query check above is
-      // best-effort (a query that has not yet reported progress is
-      // invisible to it); this recount is the guarantee — a row landed
-      // in live(v) after the `arrived` snapshot would be absent from
-      // v(v+1)'s staged layout and excluded by every future serving
-      // read, a silent permanent loss. Detect it BEFORE the flip and
-      // abort: the staged tree is overwrite-replaced by the retry once
-      // the caller actually stops the ingest.
-      val nA2 = liveVectors(spark, dir, v).count()
-      if (nA2 != nA)
-        throw new IllegalStateException(
-          s"live(v$v) grew during retrain ($nA -> $nA2 rows): generation " +
-            s"$v's ingest is still landing vectors — stop it before " +
-            "maybeRetrainSwap (swap protocol step 1); aborting before the " +
-            s"manifest flip so no row is lost (staged v${v + 1} tree will " +
-            "be overwritten by the retry)")
-      flipManifest(dir, v + 1)
+      val n = VersionedDir.publish(dir, v + 1) {
+        val staged = stageGeneration(spark, dir, v + 1, cells,
+          combined.select(col("vec_id"), col("embedding")))
+        // straggler guard, hard half (ADVICE r16): the never-a-mix /
+        // exactly-once invariants assume generation v's ingest stopped
+        // BEFORE this controller ran. The active-query check above is
+        // best-effort (a query that has not yet reported progress is
+        // invisible to it); this recount is the guarantee — a row landed
+        // in live(v) after the `arrived` snapshot would be absent from
+        // v(v+1)'s staged layout and excluded by every future serving
+        // read, a silent permanent loss. Detect it BEFORE the flip and
+        // abort: the staged tree is overwrite-replaced by the retry once
+        // the caller actually stops the ingest.
+        val nA2 = liveVectors(spark, dir, v).count()
+        if (nA2 != nA)
+          throw new IllegalStateException(
+            s"live(v$v) grew during retrain ($nA -> $nA2 rows): generation " +
+              s"$v's ingest is still landing vectors — stop it before " +
+              "maybeRetrainSwap (swap protocol step 1); aborting before the " +
+              s"manifest flip so no row is lost (staged v${v + 1} tree will " +
+              "be overwritten by the retry)")
+        staged
+      }
       Decision(z, share, fired = true,
         Some(PublishInfo(v + 1, n, (System.nanoTime() - t0) / 1e9)))
     } finally arrived.unpersist()
@@ -386,17 +363,17 @@ object AnnLifecycle {
    * the file-source offsets and the sink's metadata-log batch ids
    * continue, so rows drained under generation N are never re-read by
    * generation N+1 (they arrive there through v<N+1>'s snapshot
-   * instead).
+   * instead). Vectors whose dimension differs from the generation's
+   * centroids drop at the gate.
    */
   def runIngestGeneration(spark: SparkSession, dir: String, version: Int,
-                          topic: String, checkpoint: String,
-                          dim: Int = 64)
+                          topic: String, checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery = {
+    val cells = loadCells(spark, dir, version)
     val raw = graft.streaming.JsonStreams.readStream(spark, topic,
         graft.streaming.StreamingCurationJobs.embSchema)
       .filter(col("vec_id").isNotNull && col("embedding").isNotNull &&
-        size(col("embedding")) === dim)
-    val cells = loadCells(spark, dir, version)
+        size(col("embedding")) === cells.head._2.length)
     graft.sources.TableLayout.streamToCellPartitioned(
       Similarity.ivfCellAssignmentsWith(raw, cells)
         .withColumn("model_version", lit(version)),
@@ -405,78 +382,25 @@ object AnnLifecycle {
 
   // ------------------------------------------------------------------
   // Generation GC — the lifecycle's promised reclamation (r16 verdict
-  // ask #1), under the TableLayout crash discipline: retire under a
+  // ask #1), under the VersionedDir crash discipline: retire under a
   // hidden UUID-suffixed name, delete, heal at every entry.
   // ------------------------------------------------------------------
 
   /** Versions whose `v<k>` tree exists under `dir`, ascending. */
-  def publishedVersions(dir: String): Seq[Int] = {
-    val d = Paths.get(dir)
-    if (!Files.isDirectory(d)) return Seq.empty
-    val s = Files.list(d)
-    try s.toArray.map(_.asInstanceOf[Path].getFileName.toString)
-      .collect { case n if n.matches("v\\d+") => n.drop(1).toInt }
-      .sorted.toSeq
-    finally s.close()
-  }
+  def publishedVersions(dir: String): Seq[Int] =
+    VersionedDir.publishedVersions(dir)
 
   /** Crash recovery for [[compactLive]] / [[pruneGenerations]], run at
-    * every lifecycle maintenance entry: a hidden `.…retired-<uuid>`
-    * survivor means a GC pass died between its retire move and its
-    * delete. Live-dir partition debris heals through
-    * [[graft.sources.TableLayout.healRetired]] (restore-when-no-live-
-    * sibling — the restored dead rows are harmless, still version-
-    * pruned from every read, and the next compact re-collects them);
-    * top-level `v<k>` debris is restored the same way so an interrupted
-    * prune converges by re-deciding; abandoned `.MANIFEST.tmp.*` writes
-    * are swept (the atomic move never happened — the manifest is
-    * whichever version last flipped). The tmp sweep is AGE-GATED
-    * (ADVICE r17): a GC pass concurrent with a [[flipManifest]] in
-    * another thread/process must not delete the tmp file in the window
-    * between its write and its ATOMIC_MOVE — a fresh tmp is an
-    * in-flight publish, not debris; only files older than
-    * `tmpSweepAgeMs` (default 60 s, orders of magnitude beyond the
-    * write→move gap of a live flip) are abandoned-by-construction. */
-  private[similarity] val tmpSweepAgeMs: Long = 60000L
-
+    * every lifecycle maintenance entry ([[VersionedDir.heal]]): a live
+    * `model_version=<k>` partition retired by a pass that died before
+    * its delete is restored (the restored dead rows are harmless, still
+    * version-pruned from every read, and the next compact re-collects
+    * them); top-level `v<k>` debris is restored the same way so an
+    * interrupted prune converges by re-deciding; stale manifest temp
+    * files are swept. */
   def healLifecycle(dir: String): Unit = {
-    graft.sources.TableLayout.healRetired(Paths.get(liveDir(dir)),
-      "model_version")
-    val d = Paths.get(dir)
-    if (!Files.isDirectory(d)) return
-    val retiredRe = "^\\.(v\\d+)\\.retired(-[0-9a-fA-F-]+)?$".r
-    val s = Files.list(d)
-    val entries = try {
-      val it = s.iterator()
-      val buf = scala.collection.mutable.ListBuffer.empty[Path]
-      while (it.hasNext) buf += it.next()
-      buf.toList
-    } finally s.close()
-    entries.foreach { p =>
-      val name = p.getFileName.toString
-      name match {
-        case retiredRe(orig, _) =>
-          val live = d.resolve(orig)
-          if (Files.exists(live))
-            org.apache.commons.io.FileUtils.deleteDirectory(p.toFile)
-          else Files.move(p, live)
-        case _ =>
-          if (name.startsWith(".MANIFEST.tmp.") &&
-              Files.getLastModifiedTime(p).toMillis
-                < System.currentTimeMillis() - tmpSweepAgeMs)
-            Files.deleteIfExists(p)
-      }
-    }
-  }
-
-  /** Retire-then-delete one directory, crash-hooked at the boundary the
-    * sweep spec kills ([[graft.sources.TableLayout.crashHook]]). */
-  private def retireAndDelete(target: Path, hook: String): Unit = {
-    val retired = target.resolveSibling(
-      s".${target.getFileName}.retired-${java.util.UUID.randomUUID()}")
-    Files.move(target, retired)
-    graft.sources.TableLayout.crashHook(hook)
-    org.apache.commons.io.FileUtils.deleteDirectory(retired.toFile)
+    VersionedDir.heal(Paths.get(liveDir(dir)), "model_version=.+")
+    VersionedDir.heal(Paths.get(dir), VersionedDir.VersionName)
   }
 
   /**
@@ -511,26 +435,18 @@ object AnnLifecycle {
   def compactLive(dir: String, readerHorizon: Int = 1): Seq[Int] = {
     require(readerHorizon >= 0,
       s"readerHorizon must be >= 0, got $readerHorizon")
-    val cur = currentVersion(dir).getOrElse(
-      sys.error(s"no published index under $dir"))
+    val cur = VersionedDir.current(dir, "index")
     healLifecycle(dir)
-    val live = Paths.get(liveDir(dir))
-    if (!Files.isDirectory(live)) return Seq.empty
     val partRe = "^model_version=(\\d+)$".r
-    val s = Files.list(live)
-    val dead = try {
-      val it = s.iterator()
-      val buf = scala.collection.mutable.ListBuffer.empty[(Int, Path)]
-      while (it.hasNext) {
-        val p = it.next()
-        p.getFileName.toString match {
-          case partRe(k) if k.toInt < cur - readerHorizon => buf += ((k.toInt, p))
-          case _ => ()
-        }
-      }
-      buf.toList.sortBy(_._1)
-    } finally s.close()
-    dead.foreach { case (_, p) => retireAndDelete(p, "live-gen-retired") }
+    val dead = VersionedDir.entries(Paths.get(liveDir(dir)))
+      .flatMap(p => p.getFileName.toString match {
+        case partRe(k) if k.toInt < cur - readerHorizon => Some((k.toInt, p))
+        case _ => None
+      })
+      .sortBy(_._1)
+    dead.foreach { case (_, p) =>
+      VersionedDir.delete(VersionedDir.retire(p, "live-gen-retired"))
+    }
     dead.map(_._1)
   }
 
@@ -544,15 +460,7 @@ object AnnLifecycle {
    * Returns the pruned versions.
    */
   def pruneGenerations(dir: String, keep: Int = 2): Seq[Int] = {
-    require(keep >= 1, s"keep must be >= 1, got $keep")
-    val cur = currentVersion(dir).getOrElse(
-      sys.error(s"no published index under $dir"))
     healLifecycle(dir)
-    val horizon = cur - keep + 1
-    val dead = publishedVersions(dir).filter(k => k < horizon && k < cur)
-    dead.foreach { k =>
-      retireAndDelete(Paths.get(dir, s"v$k"), "gen-retired")
-    }
-    dead
+    VersionedDir.prune(dir, keep, "index")
   }
 }

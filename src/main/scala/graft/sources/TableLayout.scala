@@ -403,7 +403,7 @@ object TableLayout {
           .repartition(col("cell"), pmod(col("vec_id"), lit(filesPerCell)))
           .write.mode("append").partitionBy("cell").parquet(outDir)
       }
-      crashHook("merge-touched-written")
+      VersionedDir.crashHook("merge-touched-written")
       listCellDirNames(baseDir).filterNot(touched).foreach { name =>
         org.apache.commons.io.FileUtils.copyDirectory(
           Paths.get(baseDir).resolve(name).toFile,
@@ -413,21 +413,10 @@ object TableLayout {
   }
 
   /** The `cell=` partition directory names directly under `dir`. */
-  private def listCellDirNames(dir: String): Seq[String] = {
-    val p = Paths.get(dir)
-    if (!Files.isDirectory(p)) return Seq.empty
-    val s = Files.list(p)
-    try {
-      val it = s.iterator()
-      val buf = scala.collection.mutable.ListBuffer.empty[String]
-      while (it.hasNext) {
-        val e = it.next()
-        val name = e.getFileName.toString
-        if (Files.isDirectory(e) && name.startsWith("cell=")) buf += name
-      }
-      buf.toList
-    } finally s.close()
-  }
+  private def listCellDirNames(dir: String): Seq[String] =
+    VersionedDir.entries(Paths.get(dir))
+      .filter(Files.isDirectory(_)).map(_.getFileName.toString)
+      .filter(_.startsWith("cell="))
 
   /**
    * Land a STREAM into the date-partitioned layout: the streaming side
@@ -642,26 +631,15 @@ object TableLayout {
     frame
       .sortWithinPartitions((partCol +: sortCols).map(col): _*)
       .write.partitionBy(partCol).mode("overwrite").parquet(staging.toString)
-    crashHook("staged")
+    VersionedDir.crashHook("staged")
     try {
-      val stagedParts = {
-        val s = Files.list(staging)
-        try {
-          val it = s.iterator()
-          val buf = scala.collection.mutable.ListBuffer.empty[java.nio.file.Path]
-          while (it.hasNext) buf += it.next()
-          buf.toList
-        } finally s.close()
+      val stagedParts = VersionedDir.entries(staging)
+        .filter(_.getFileName.toString.startsWith(s"$partCol="))
+      val stagedNames = stagedParts.map(_.getFileName.toString).toSet
+      stagedParts.foreach { staged =>
+        VersionedDir.swapIn(staged, target.resolve(staged.getFileName.toString))
       }
-      val stagedNames = stagedParts.map(_.getFileName.toString)
-        .filter(_.startsWith(s"$partCol=")).toSet
-      stagedParts
-        .filter(p => stagedNames(p.getFileName.toString))
-        .foreach { staged =>
-          val dst = target.resolve(staged.getFileName.toString)
-          swapIn(staged, dst)
-        }
-      crashHook("swaps-done")
+      VersionedDir.crashHook("swaps-done")
       // a touched partition with no staged counterpart lost ALL its rows
       // (a delete emptied it, or an upsert moved its only keys to other
       // days) — leaving its old directory alive would resurrect the rows
@@ -672,89 +650,30 @@ object TableLayout {
     } finally org.apache.commons.io.FileUtils.deleteDirectory(staging.toFile)
   }
 
-  /** Test-only fault-injection seam for the crash-recovery sweep
-    * (MaintenanceCrashSpec): invoked with a point name at every
-    * maintenance step boundary — "staged" (all partitions staged, no
-    * swap yet), "retired" (a live partition moved aside, its
-    * replacement not yet in), "swapped" (replacement in, old copy not
-    * yet dropped), "swaps-done" (all swaps in, empty survivors not yet
-    * retired), "merge-touched-written" (LSM merge: touched cells
-    * written, untouched not yet copied). Production leaves it a no-op;
-    * a test hook throws to simulate dying at exactly that boundary. */
-  @volatile private[graft] var crashHook: String => Unit = _ => ()
-
-  /** Near-atomic partition swap: retire the live directory under a
-    * UUID-suffixed hidden name, move the staged one in, drop the retired
-    * copy. The UUID suffix means a leftover retired dir from a crashed
-    * prior swap can never collide ([[healRetired]] cleans those up on
-    * the next maintenance entry; ADVICE r10 — the unsuffixed form made
-    * every later rewrite of that partition throw permanently). */
-  private def swapIn(staged: java.nio.file.Path, dst: java.nio.file.Path): Unit = {
-    val retired = dst.resolveSibling(
-      s".${dst.getFileName}.retired-${java.util.UUID.randomUUID()}")
-    if (Files.exists(dst)) { Files.move(dst, retired); crashHook("retired") }
-    Files.move(staged, dst)
-    crashHook("swapped")
-    if (Files.exists(retired))
-      org.apache.commons.io.FileUtils.deleteDirectory(retired.toFile)
-  }
-
-  /** Recover from a crashed [[swapIn]]: a `.<part>.retired*` directory
-    * WITH a live `<part>` sibling is post-swap garbage (the crash hit
-    * between the second move and the delete) — drop it; one WITHOUT a
-    * live sibling means the partition vanished mid-swap (crash between
-    * the two moves) — restore it, so readers see the day again and the
-    * interrupted rewrite can be retried. Also removes ORPHANED STAGING
-    * siblings (`<layout>.staging-<uuid>` next to the layout dir): a
-    * pass that died during or right after its staging write abandons a
-    * full copy of every touched partition there, which nothing else
-    * would ever reclaim (r13 crash sweep — repeated crashed passes
-    * accumulated unbounded copies). Safe by the single-maintainer
-    * discipline every pass here already assumes: staging dirs are
-    * consumed only by the pass that created them, so at maintenance
-    * ENTRY any survivor is dead. Runs at every maintenance entry, so a
-    * crashed swap self-heals instead of wedging. */
+  /** Recover from a crashed partition swap ([[VersionedDir.heal]]'s
+    * restore/drop rule over `<partCol>=` directories), so readers see a
+    * partition that vanished mid-swap again and the interrupted rewrite
+    * can be retried. Also removes ORPHANED STAGING directories: the
+    * `<layout>.staging-<uuid>` siblings a pass that died during or right
+    * after its staging write abandons (a full copy of every touched
+    * partition, which nothing else would ever reclaim — r13 crash
+    * sweep), and the `.graft_stats.staging-<uuid>` manifest rewrites
+    * [[refreshFileStats]] stages inside the layout. Safe by the
+    * single-maintainer discipline every pass here already assumes:
+    * staging dirs are consumed only by the pass that created them, so at
+    * maintenance ENTRY any survivor is dead. Runs at every maintenance
+    * entry, so a crashed swap self-heals instead of wedging. */
   private[graft] def healRetired(target: java.nio.file.Path,
                                  partCol: String = dateCol): Unit = {
-    val parent = target.toAbsolutePath.getParent
-    if (parent != null && Files.isDirectory(parent)) {
-      val stagingPrefix = s"${target.getFileName}.staging-"
-      val s = Files.list(parent)
-      try {
-        val it = s.iterator()
-        while (it.hasNext) {
-          val p = it.next()
-          if (p.getFileName.toString.startsWith(stagingPrefix))
-            org.apache.commons.io.FileUtils.deleteDirectory(p.toFile)
-        }
-      } finally s.close()
-    }
-    if (!Files.isDirectory(target)) return
-    val retiredRe = s"^\\.($partCol=.+)\\.retired(-[0-9a-fA-F-]+)?$$".r
-    val s = Files.list(target)
-    val entries = try {
-      val it = s.iterator()
-      val buf = scala.collection.mutable.ListBuffer.empty[java.nio.file.Path]
-      while (it.hasNext) buf += it.next()
-      buf.toList
-    } finally s.close()
-    entries.foreach { p =>
-      val name = p.getFileName.toString
-      name match {
-        case retiredRe(orig, _) =>
-          val live = target.resolve(orig)
-          if (Files.exists(live))
-            org.apache.commons.io.FileUtils.deleteDirectory(p.toFile)
-          else Files.move(p, live)
-        case _ =>
-          // the OTHER staging scheme in this file: refreshFileStats
-          // stages its manifest rewrite INSIDE the layout as
-          // `.graft_stats.staging-<uuid>` — same crash-debris class as
-          // the sibling staging dirs above (r13 review finding)
-          if (name.startsWith(".graft_stats.staging-"))
-            org.apache.commons.io.FileUtils.deleteDirectory(p.toFile)
-      }
-    }
+    val stagingPrefix = s"${target.getFileName}.staging-"
+    Option(target.toAbsolutePath.getParent).toList
+      .flatMap(VersionedDir.entries)
+      .filter(_.getFileName.toString.startsWith(stagingPrefix))
+      .foreach(VersionedDir.delete)
+    VersionedDir.entries(target)
+      .filter(_.getFileName.toString.startsWith(".graft_stats.staging-"))
+      .foreach(VersionedDir.delete)
+    VersionedDir.heal(target, s"$partCol=.+")
   }
 
   /**

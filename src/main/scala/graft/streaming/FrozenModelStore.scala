@@ -3,12 +3,12 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import graft.sources.VersionedDir
 
 /**
- * Versioned store for FROZEN streaming models — the
- * [[graft.similarity.AnnLifecycle]] manifest discipline applied to the
- * stateless streaming twins (r16 verdict ask #6): the quality
+ * Versioned store for FROZEN streaming models — the versioned-directory
+ * protocol [[graft.similarity.AnnLifecycle]]'s index also uses, applied
+ * to the stateless streaming twins (r16 verdict ask #6): the quality
  * classifier, the BM25 router, the MAD/robust-gate baselines and
  * semantic decontamination all freeze their model tables into the plan
  * as literals/broadcasts, so before this store a model refresh meant a
@@ -16,9 +16,9 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
  * tell which weights scored which document.
  *
  * Layout: `<dir>/v<N>/model/` (immutable parquet, any schema) +
- * `<dir>/MANIFEST` (current version, written tmp + ATOMIC_MOVE — a
- * reader resolves either the old version or the new one, never a torn
- * read).
+ * `<dir>/MANIFEST` (current version) under the
+ * [[graft.sources.VersionedDir]] protocol — a reader resolves either the
+ * old version or the new one, never a torn read.
  *
  * THE RECIPE every stateless twin shares — instantiated three ways
  * (literal-folded weights in
@@ -49,115 +49,49 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
  * At 100 TB nothing here scales with data: a model table is
  * O(model) bytes written once per refresh, the manifest flip is O(1),
  * and the stamp is a literal column. Old `v<k>` trees are tiny;
- * [[pruneVersions]] retires them past a keep horizon (the
- * [[graft.similarity.AnnLifecycle.pruneGenerations]] discipline) if a
- * deployment accumulates thousands.
+ * [[pruneVersions]] retires them past a keep horizon if a deployment
+ * accumulates thousands.
  */
 object FrozenModelStore {
 
-  private def manifestPath(dir: String): Path = Paths.get(dir, "MANIFEST")
-
   /** Current model version, or None before the first publish. */
-  def currentVersion(dir: String): Option[Int] = {
-    val p = manifestPath(dir)
-    if (Files.exists(p)) Some(new String(Files.readAllBytes(p)).trim.toInt)
-    else None
-  }
+  def currentVersion(dir: String): Option[Int] = VersionedDir.currentVersion(dir)
 
   /** Publish `model` as the immutable generation `version`, then flip
-    * the manifest atomically.
+    * the manifest atomically ([[VersionedDir.publish]]).
     *
-    * Refuses when `v<version>` already exists (ADVICE r17): the layout
-    * contract declares a published tree IMMUTABLE — output rows stamped
-    * `model_version = N` must be attributable to exactly one weight
-    * set, and silently rewriting `v<N>/model` would attach one stamp to
-    * two histories. `force = true` is the explicit escape hatch for
-    * re-staging a version that never took effect (e.g. a publish that
-    * crashed between the model write and the manifest flip — the same
-    * overwrite-replace-then-flip retry discipline as
-    * [[graft.similarity.AnnLifecycle]]'s staged trees). */
-  def publish(dir: String, version: Int, model: DataFrame,
-              force: Boolean = false): Unit = {
-    val tree = Paths.get(dir, s"v$version")
-    require(force || !Files.exists(tree),
-      s"model generation v$version already exists under $dir — published " +
-        "trees are immutable (rows stamped with this version would become " +
-        "attributable to two weight sets); publish the next version, or " +
-        "pass force = true only to re-stage a crashed publish that never " +
-        "flipped the manifest")
-    model.coalesce(1).write.mode("overwrite")
-      .parquet(s"$dir/v$version/model")
-    val tmp = Paths.get(dir, s".MANIFEST.tmp.$version")
-    Files.createDirectories(Paths.get(dir))
-    Files.write(tmp, version.toString.getBytes)
-    Files.move(tmp, manifestPath(dir), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
+    * Refuses unless `version` is newer than the current manifest (ADVICE
+    * r17): output rows stamped `model_version = N` must be attributable
+    * to exactly one weight set, so a version that took effect — current
+    * or pruned — is never written again. A newer version staged by a
+    * publish that crashed before its flip is re-staged by simply
+    * publishing it again. */
+  def publish(dir: String, version: Int, model: DataFrame): Unit =
+    VersionedDir.publish(dir, version) {
+      model.coalesce(1).write.mode("overwrite")
+        .parquet(s"$dir/v$version/model")
+    }
 
   /** Generation `version`'s frozen model table. */
   def load(spark: SparkSession, dir: String, version: Int): DataFrame =
     spark.read.parquet(s"$dir/v$version/model")
 
   /** Versions whose `v<k>` tree exists under `dir`, ascending. */
-  def publishedVersions(dir: String): Seq[Int] = {
-    val d = Paths.get(dir)
-    if (!Files.isDirectory(d)) return Seq.empty
-    val s = Files.list(d)
-    try s.toArray.map(_.asInstanceOf[Path].getFileName.toString)
-      .collect { case n if n.matches("v\\d+") => n.drop(1).toInt }
-      .sorted.toSeq
-    finally s.close()
-  }
+  def publishedVersions(dir: String): Seq[Int] =
+    VersionedDir.publishedVersions(dir)
 
   /**
-   * Retire old `v<k>` model trees, keeping the newest `keep` (the
-   * current version is never pruned, nor anything newer than it). A
-   * pruned generation's rows remain attributable — the output topic
-   * carries `model_version` stamps forever; pruning only removes the
-   * WEIGHTS, so size `keep` to the re-score/audit horizon. Model trees
-   * are O(model) bytes: this exists for deployments that refresh on a
-   * tight cadence for years, not as a space emergency. Same
-   * crash-safety shape as the ANN store's generation prune — each tree
-   * is removed via a hidden retire-rename then delete, and a tree that
-   * lost its rename race is simply re-decided next pass (the manifest
-   * is never touched). Returns the pruned versions.
+   * Retire old `v<k>` model trees, keeping the newest `keep`
+   * ([[VersionedDir.prune]]; the current version is never pruned, nor
+   * anything newer than it). A pruned generation's rows remain
+   * attributable — the output topic carries `model_version` stamps
+   * forever; pruning only removes the WEIGHTS, so size `keep` to the
+   * re-score/audit horizon. Model trees are O(model) bytes: this exists
+   * for deployments that refresh on a tight cadence for years, not as a
+   * space emergency. Returns the pruned versions.
    */
-  def pruneVersions(dir: String, keep: Int = 2): Seq[Int] = {
-    require(keep >= 1, s"keep must be >= 1, got $keep")
-    val cur = currentVersion(dir).getOrElse(
-      sys.error(s"no published model under $dir"))
-    // heal: a `.v<k>.retired-*` survivor means a prior pass died between
-    // its rename and its delete — restore it when the original is gone
-    // (the pass re-decides under THIS keep), drop it when the original
-    // exists (the rename raced a re-publish; the live tree wins)
-    val d = Paths.get(dir)
-    val retiredRe = "^\\.(v\\d+)\\.retired(-[0-9a-fA-F-]+)?$".r
-    if (Files.isDirectory(d)) {
-      val s = Files.list(d)
-      val debris = try s.toArray.map(_.asInstanceOf[Path]).toSeq
-      finally s.close()
-      debris.foreach { p =>
-        p.getFileName.toString match {
-          case retiredRe(orig, _) =>
-            val live = d.resolve(orig)
-            if (Files.exists(live))
-              org.apache.commons.io.FileUtils.deleteDirectory(p.toFile)
-            else Files.move(p, live)
-          case _ => ()
-        }
-      }
-    }
-    val horizon = cur - keep + 1
-    val dead = publishedVersions(dir).filter(k => k < horizon && k < cur)
-    dead.foreach { k =>
-      val target = Paths.get(dir, s"v$k")
-      val retired = target.resolveSibling(
-        s".v$k.retired-${java.util.UUID.randomUUID()}")
-      Files.move(target, retired)
-      org.apache.commons.io.FileUtils.deleteDirectory(retired.toFile)
-    }
-    dead
-  }
+  def pruneVersions(dir: String, keep: Int = 2): Seq[Int] =
+    VersionedDir.prune(dir, keep, "model")
 
   /** Convenience pair for µ-int weight-vector models (the LR
     * classifier's Array[Long] indexed by bucket). */
@@ -182,15 +116,14 @@ object FrozenModelStore {
     * An EMPTY model (corpus had no tokens) round-trips as one sentinel
     * row with a NULL term. */
   def publishBm25(spark: SparkSession, dir: String, version: Int,
-                  model: graft.text.Retrieval.Bm25Model,
-                  force: Boolean = false): Unit = {
+                  model: graft.text.Retrieval.Bm25Model): Unit = {
     import spark.implicits._
     val rows =
       if (model.terms.isEmpty)
         Seq((-1L, Option.empty[String], 0.0, model.avgLen))
       else model.terms.map { case (q, t, idf) => (q, Option(t), idf, model.avgLen) }
     publish(dir, version,
-      rows.toDF("query_id", "term", "idf", "avg_len"), force)
+      rows.toDF("query_id", "term", "idf", "avg_len"))
   }
 
   def loadBm25(spark: SparkSession, dir: String,

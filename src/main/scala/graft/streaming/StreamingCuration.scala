@@ -113,11 +113,18 @@ object StreamingCuration {
     graft.ops.Sessionize.userSessions(
       events.withWatermark(tsCol, watermarkDelay), gapSeconds, tsCol)
 
+  /** Word n-gram width of the benchmark decontamination probe — the
+    * width [[StreamingCurationJobs.runIngestJob]] and
+    * [[StreamingCurationJobs.decontaminateExclude]] use, and the default
+    * of [[benchShingleIndex]] and [[decontaminateFlags]]. */
+  val BenchShingleWidth: Int = 5
+
   /** The static benchmark shingle index [[decontaminateFlags]] and
     * [[StreamingCurationJobs.decontaminateExclude]] probe: one `shingle`
     * row per distinct benchmark n-gram. It is collected to the driver
     * once, when the stream is built, so it needs no cache. */
-  def benchShingleIndex(benchDocs: DataFrame, shingleWidth: Int = 5): DataFrame =
+  def benchShingleIndex(benchDocs: DataFrame,
+                        shingleWidth: Int = BenchShingleWidth): DataFrame =
     Dedup.shingleArrays(benchDocs, shingleWidth)
       .select(explode(col("sh")).as("shingle"))
       .distinct()
@@ -157,7 +164,7 @@ object StreamingCuration {
    *                   `shingleWidth`; collected once
    */
   def decontaminateFlags(docStream: DataFrame, benchIndex: DataFrame,
-                         shingleWidth: Int = 5,
+                         shingleWidth: Int = BenchShingleWidth,
                          timeCol: String = "ingest_time"): DataFrame =
     docStream
       .filter(benchShingleHit(benchIndex, shingleWidth).getOrElse(lit(false)))

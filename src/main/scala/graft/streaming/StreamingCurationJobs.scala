@@ -66,7 +66,7 @@ object StreamingCurationJobs {
 
   /**
    * The stateless benchmark-overlap exclusion: drops every row sharing a
-   * word `shingleWidth`-gram with the benchmark set — the complement of
+   * word [[StreamingCuration.BenchShingleWidth]]-gram with the benchmark set — the complement of
    * [[StreamingCuration.decontaminateFlags]] (the flagger REPORTS the
    * matching rows; this drops them), over the same probe.
    *
@@ -82,12 +82,12 @@ object StreamingCurationJobs {
    * broadcast handle and prints only the set size. Exactness and the
    * plan-size bound are pinned in StreamingCurationJobsSpec.
    *
-   * @param benchIndex a [[StreamingCuration.benchShingleIndex]] frame
-   *                   built with the SAME `shingleWidth`; collected once
+   * @param benchIndex a [[StreamingCuration.benchShingleIndex]] frame at
+   *                   the default width; collected once
    */
-  def decontaminateExclude(docStream: DataFrame, benchIndex: DataFrame,
-                           shingleWidth: Int = 5): DataFrame =
-    StreamingCuration.benchShingleHit(benchIndex, shingleWidth)
+  def decontaminateExclude(docStream: DataFrame, benchIndex: DataFrame): DataFrame =
+    StreamingCuration.benchShingleHit(benchIndex,
+        StreamingCuration.BenchShingleWidth)
       .fold(docStream)(hit => docStream.filter(!hit))
 
   /**
@@ -104,7 +104,6 @@ object StreamingCurationJobs {
   def runIngestJob(spark: SparkSession, docsTopic: String,
                    benchDocs: DataFrame, workDir: String,
                    watermarkDelay: String = "10 seconds",
-                   shingleWidth: Int = 5,
                    contractChecks: Seq[graft.contracts.Contracts.Check] =
                      Seq.empty,
                    codec: TopicCodec = JsonStreams): StreamingQuery = {
@@ -120,8 +119,7 @@ object StreamingCurationJobs {
     // exclusion before the stateful dedup: a contaminated row never
     // reaches dedup state
     val cleanRaw = decontaminateExclude(raw,
-      StreamingCuration.benchShingleIndex(benchDocs, shingleWidth),
-      shingleWidth)
+      StreamingCuration.benchShingleIndex(benchDocs))
     val deduped = StreamingCuration.exactDedup(cleanRaw,
       timeCol = "ingest_time", watermarkDelay = watermarkDelay)
     val curated = TextAnalysis.qualityGate(deduped,
@@ -198,20 +196,18 @@ object StreamingCurationJobs {
    * in the cell-partitioned form `similarity_ivf_pruned`-style readers
    * prune. Stateless (one bounded centroid collect at build, map-side
    * assignment per row); wrong-dimension and null vectors drop at the
-   * gate like the codes job.
+   * gate like the codes job. The topic is JSON and the quantizer has
+   * the default 16 cells.
    */
   def runAnnLayoutJob(spark: SparkSession, embTopic: String,
                       corpus: DataFrame, layoutDir: String,
-                      checkpoint: String,
-                      codec: TopicCodec = JsonStreams,
-                      nCells: Int = 16): StreamingQuery = {
+                      checkpoint: String): StreamingQuery = {
     val dim = corpus.select(size(col("embedding"))).head().getInt(0)
-    val raw = codec.readStream(spark, embTopic, embSchema)
+    val raw = JsonStreams.readStream(spark, embTopic, embSchema)
       .filter(col("vec_id").isNotNull && col("embedding").isNotNull &&
         size(col("embedding")) === dim)
     graft.sources.TableLayout.streamToCellPartitioned(
-      graft.similarity.Similarity.ivfCellAssignmentsAgainst(raw, corpus,
-        nCells),
+      graft.similarity.Similarity.ivfCellAssignmentsAgainst(raw, corpus),
       layoutDir, checkpoint)
   }
 

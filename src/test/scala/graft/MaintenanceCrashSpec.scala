@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.TableLayout
+import graft.sources.{TableLayout, VersionedDir}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -9,7 +9,7 @@ import java.nio.file.{Files, Paths}
 /**
  * Crash-injection sweep over ALL maintenance passes (r13): r12 tested
  * swap-crash recovery for one pass; here a fault hook
- * ([[TableLayout.crashHook]]) kills each pass at EVERY step boundary —
+ * ([[VersionedDir.crashHook]]) kills each pass at EVERY step boundary —
  * "staged" (everything staged, nothing swapped), "retired" (a live
  * partition moved aside, replacement not yet in — the partition is
  * transiently ABSENT), "swapped" (replacement in, old hidden copy not
@@ -39,13 +39,13 @@ class MaintenanceCrashSpec extends SparkSpec {
     * partially-advanced multi-partition layout — the worst state. */
   private def crashAt(point: String)(pass: => Unit): Unit = {
     val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
-    TableLayout.crashHook =
+    VersionedDir.crashHook =
       p => if (p == point && fired.compareAndSet(false, true))
         throw new CrashInjected
     try {
       intercept[CrashInjected](pass)
       assert(fired.get(), s"crash point $point never fired")
-    } finally TableLayout.crashHook = _ => ()
+    } finally VersionedDir.crashHook = _ => ()
   }
 
   private def rowsOf(df: DataFrame): Set[(Long, Long, Long)] =
